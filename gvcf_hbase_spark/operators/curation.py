@@ -296,8 +296,9 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     decreases until the fixpoint — that single scalar agg is the
     convergence test (no join-and-compare pass). Converges in O(graph
     diameter) rounds; near-dup components are tiny and star-like, so 2–4
-    rounds in practice. localCheckpoint per round truncates the lineage
-    that would otherwise double each iteration. At ~10^9+ edges swap the
+    rounds in practice. A lazy boundary per round truncates the lineage
+    that would otherwise double each iteration; the round's convergence
+    collect is what materializes it. At ~10^9+ edges swap the
     body for large-star/small-star (O(log n) rounds, same fixpoint). The
     DuckDB oracle is the recursive-CTE transitive closure — brute force,
     viable only at test SF, but an exact independent check."""
@@ -307,7 +308,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .localCheckpoint()  # pairs come from the SSJoin plan — cut it once
+        .transform(one_compute_boundary)  # pairs come from the SSJoin plan — cut it once
     )
     labels = edges.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -327,7 +328,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("label"), F.coalesce(F.col("nb_label"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
+            .transform(one_compute_boundary)
         )
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
@@ -360,7 +361,7 @@ def connected_components_lss(pairs: DataFrame, max_rounds: int = 30) -> DataFram
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
-        .localCheckpoint()
+        .transform(one_compute_boundary)
     )  # stored as (bigger u, smaller v) — already the star orientation
 
     def _sym(edges: DataFrame) -> DataFrame:
@@ -395,7 +396,7 @@ def connected_components_lss(pairs: DataFrame, max_rounds: int = 30) -> DataFram
         part2 = nb2.select("u", F.least(F.col("u"), F.col("nmin")).alias("v")).filter(
             F.col("u") != F.col("v")
         )
-        e = part1.union(part2).distinct().localCheckpoint()
+        e = one_compute_boundary(part1.union(part2).distinct())
         # commutative fingerprint; per-row hash bounded to 2^30 so the sum
         # stays in BIGINT for up to ~2^33 edges (ANSI overflow otherwise)
         fp_row = e.agg(
@@ -821,8 +822,7 @@ def curate_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gram"),
     )
     # Both the frequency pass and the tagging join consume `grams`; one
-    # lazy checkpoint materializes the explode once instead of twice
-    # (same truncation discipline as dedup_near_minhash's persist).
+    # lazy boundary materializes the explode once instead of twice.
     grams = grams.transform(one_compute_boundary)
     dfreq = grams.groupBy("source", "gram").agg(
         F.count_distinct("doc_id").alias("docs_with")
@@ -1979,11 +1979,10 @@ def curate_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     each doc's score is an exact int sum; the tercile orders by the
     exact-int ratio q_sum/n_tokens (one IEEE division both engines)
     with doc_id tiebreak. Plan: ONE token explode feeds the corpus
-    total, the LM aggregate, and the scoring join — tok is
-    localCheckpoint(eager=False)'d (same truncation discipline as
-    graph_pagerank's contrib_src) because the static plan would
-    otherwise re-derive the explode up to three times and only AQE
-    exchange reuse might dedupe it; the tercile is a keyed window per
+    total, the LM aggregate, and the scoring join — tok passes one lazy
+    one_compute_boundary (as graph_pagerank's contrib_src does) because
+    the static plan would otherwise re-derive the explode up to three
+    times and only AQE exchange reuse might dedupe it; the tercile is a keyed window per
     source (giant single sources would upgrade to the bucketed
     two-phase ntile of functions/ranks.py, keyed (source,
     score-bucket))."""

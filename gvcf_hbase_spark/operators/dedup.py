@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from gvcf_hbase_spark.functions.textfns import normalize_text, shingles, stable_hash32, tokens
 from gvcf_hbase_spark.registry import register
 from gvcf_hbase_spark.session import one_compute_boundary
-from gvcf_hbase_spark.sources.tables import load_table, spread
+from gvcf_hbase_spark.sources.tables import dataset_fingerprint, load_table, spread
 
 # ---------------------------------------------------------------------------
 # MinHash constants (fixed seed — SURVEY §5.4 rule 6)
@@ -220,11 +220,12 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     and deterministically not on this corpus (asserted in tests at two SFs).
     """
     d = load_table(spark, sf_dir, "documents")
-    # persist: the shingle sets feed BOTH the signature pipeline and both
-    # sides of the verify join (3 evaluations otherwise — measured 9s→2s
-    # at sf0.1). CacheManager keys on the logical plan, so repeated calls
-    # at the same sf_dir reuse one entry rather than leaking.
-    sets_df = _shingle_sets(d).persist()
+    # One boundary: the shingle sets feed BOTH the signature pipeline and
+    # both sides of the verify join (3 evaluations otherwise — measured
+    # 9s→2s at sf0.1). Not persist: its CacheManager entry outlives the
+    # query for the session's life, and a warm rerun reusing it saved at
+    # most 0.12 s (1.22 s after clearCache vs 1.10–1.22 s warm).
+    sets_df = _shingle_sets(d).transform(one_compute_boundary)
     cands = lsh_candidate_pairs(minhash_signatures(d, sets=sets_df))
     a = sets_df.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sets_df.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -497,7 +498,9 @@ _CONTAINMENT_PREFIX_FACTOR = 12
 # the effective vocabulary width. (A uint8 popcount-lookup kernel was
 # measured first: 272 s at sf1 — memory-bound; the sgemm kernel replaced
 # it, see OPTIMIZATION_r10.md.)
-_CONTAINMENT_BITMAP_MAX_VOCAB = 8_192  # 1 KB/doc bitmap; 32 MB/4k-block dense
+# 1 KB/doc bitmap; a 4k-doc block unpacks to 4096 × 8192 × 4 B = 128 MiB
+# of float32 per side.
+_CONTAINMENT_BITMAP_MAX_VOCAB = 8_192
 # Cost-model constant: one shuffled Σdf² pair row through the partial
 # aggregate costs about as much as this many bitmap BYTE-ops (AND +
 # popcount-lookup + sum). Measured on this host (sf1 replicated fixture:
@@ -543,9 +546,7 @@ def _containment_probe(spark, sf_dir, docs, df_t, ranked) -> tuple[int, int, int
     the vocabulary is bitmap-bounded, and the prefix bound only when the
     bitmap path did not already win — each probe job is paid exactly when
     its dispatch decision needs it."""
-    from gvcf_hbase_spark.operators.graphs import _dataset_fingerprint
-
-    fp = _dataset_fingerprint(sf_dir, "documents")
+    fp = dataset_fingerprint(sf_dir, "documents")
     key = (sf_dir, fp)
     if fp is None or key not in _CONTAINMENT_PROBE_MEMO:
         row = df_t.agg(
@@ -618,9 +619,7 @@ def _containment_bitmap_verified(
     into that tail — only pairs that can never pass are withheld."""
     import pandas as pd
 
-    from gvcf_hbase_spark.operators.graphs import _dataset_fingerprint
-
-    fp = _dataset_fingerprint(sf_dir, "documents")
+    fp = dataset_fingerprint(sf_dir, "documents")
     vkey = (sf_dir, fp)
     if fp is None or vkey not in _CONTAINMENT_VOCAB_MEMO:
         vocab = sorted(
@@ -1252,12 +1251,12 @@ def _register_minhash_recall() -> None:
         `dedup_ngram_jaccard` SSJoin inverted-index shape (postings ship
         (shingle, id, size) ints; never an all-pairs join), so the gauge's
         own plan is 100 TB-shaped on BOTH sides. One shingle-set relation
-        feeds truth and signatures (persist — 2 consumers); counts
+        feeds truth and signatures (one boundary — 2 consumers); counts
         collapse to one row via the 1-row-broadcast-cross pattern; ratios
         integer-quantized (§5.4)."""
         t = _JACCARD_THRESHOLD
         d = load_table(spark, sf_dir, "documents")
-        sets_df = _shingle_sets(d).persist()
+        sets_df = _shingle_sets(d).transform(one_compute_boundary)
         pred = lsh_candidate_pairs_raw(minhash_signatures_portable(sets_df))
         ex = sets_df.select("doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s"))
         a = ex.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"), "s")
@@ -1364,11 +1363,8 @@ def _register_minhash_incremental() -> None:
         (2× cheaper); the screen's dataflow is identical either way."""
         d = load_table(spark, sf_dir, "documents")
         # One shingle materialization serves signatures AND both verify
-        # sides. Lazy localCheckpoint (r09) instead of the r08
-        # persist + eager-result-checkpoint + unpersist dance: the RDD
-        # blocks release with the DataFrame (no session-lifetime pinning,
-        # the ADVICE concern), nothing executes at build time, and the
-        # bench clocks the real screen per run instead of a checkpoint scan.
+        # sides. The boundary is lazy, so nothing executes at build time
+        # and the bench clocks the real screen per run.
         sets_df = _shingle_sets(d).transform(one_compute_boundary)
         sigs = minhash_signatures_portable(sets_df)
         # batch×history restriction: the helper's id_a < id_b self-join
@@ -1502,7 +1498,7 @@ def _register_minhash_band_sweep() -> None:
         S-curve (P(candidate | j) = 1-(1-j^r)^b) and the right setting
         is corpus-dependent. One scored pass serves the grid (the
         `sim_semdedup_eps_sweep` pattern): signatures are computed ONCE
-        from one persisted shingle relation, and each grid point is a
+        from one materialized shingle relation, and each grid point is a
         re-grouping of the signature columns — band boundaries nest for
         powers of two, so pred sets are provably monotone across the
         grid (asserted in tests; the 16×2 row equals
@@ -1514,15 +1510,15 @@ def _register_minhash_band_sweep() -> None:
         (injective ','-concat of the band's row values) — per-(band,key)
         equi-joins, Σ per-bucket |b|² cost like every LSH tier, never
         all-pairs. Truth is the `dedup_ngram_jaccard` SSJoin inverted
-        index with the size-ratio prune, computed once and persisted
+        index with the size-ratio prune, computed once behind a boundary
         (reused by all four confusion reduces). Counts collapse via the
         1-row-broadcast-cross pattern; ratios integer-quantized (§5.4)."""
         from gvcf_hbase_spark.operators.similarity import _confusion_row
 
         t = _JACCARD_THRESHOLD
         d = load_table(spark, sf_dir, "documents")
-        sets_df = _shingle_sets(d).persist()
-        sigs = minhash_signatures_portable(sets_df).persist()
+        sets_df = _shingle_sets(d).transform(one_compute_boundary)
+        sigs = minhash_signatures_portable(sets_df).transform(one_compute_boundary)
         ex = sets_df.select(
             "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s")
         )
@@ -1537,7 +1533,7 @@ def _register_minhash_band_sweep() -> None:
             F.count("*").alias("c")
         )
         jac = F.col("c") / (F.col("sz_a") + F.col("sz_b") - F.col("c"))
-        truth = counts.filter(jac >= t).select("id_a", "id_b").persist()
+        truth = one_compute_boundary(counts.filter(jac >= t).select("id_a", "id_b"))
 
         out = None
         for nb, r in _BAND_SWEEP_GRID:
@@ -1570,14 +1566,6 @@ def _register_minhash_band_sweep() -> None:
                 "precision_1e6",
             )
             out = row if out is None else out.unionByName(row)
-        # The grid is 4 rows; materialize it eagerly (lineage-truncating
-        # localCheckpoint) so the three persisted relations can be released
-        # HERE instead of pinning executor storage for the rest of a long
-        # multi-key mirror session (ADVICE r08).
-        out = out.localCheckpoint(eager=True)
-        truth.unpersist()
-        sigs.unpersist()
-        sets_df.unpersist()
         return out
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from gvcf_hbase_spark.registry import register
 from gvcf_hbase_spark.session import one_compute_boundary
-from gvcf_hbase_spark.sources.tables import load_table
+from gvcf_hbase_spark.sources.tables import dataset_fingerprint, load_table
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -104,31 +104,6 @@ _PR_DANGLING_MEMO: dict[tuple, bool] = {}
 # (modulus, base rank, dangling split), so repeated builds of the same
 # fixture need not re-run the count job; a regenerated dataset re-probes.
 _PR_N_MEMO: dict[tuple, int] = {}
-
-
-def _dataset_fingerprint(sf_dir: str, table: str) -> tuple | None:
-    """Cheap local fingerprint of a fixture table: sorted (name,
-    mtime_ns, size) of its parquet file(s). Returns None when the path
-    is not a local filesystem path (e.g. hdfs:// on a real cluster) —
-    callers must then skip memoization rather than risk staleness."""
-    import os
-
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isfile(root):
-            st = os.stat(root)
-            return ((root, st.st_mtime_ns, st.st_size),)
-        if os.path.isdir(root):
-            out = []
-            for f in sorted(os.listdir(root)):
-                p = os.path.join(root, f)
-                if os.path.isfile(p):
-                    st = os.stat(p)
-                    out.append((f, st.st_mtime_ns, st.st_size))
-            return tuple(out)
-    except OSError:
-        pass
-    return None
 
 _PR_EDGES = """
     ids AS (SELECT c_custkey AS id, count(*) OVER () AS n FROM customer),
@@ -222,7 +197,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-pay the probe jobs inside the timed window (r05 verdict action 7)
     # while a regenerated dataset at the same path still re-probes.
     # Non-local paths (no fingerprint) always re-probe.
-    fp = _dataset_fingerprint(sf_dir, "customer")
+    fp = dataset_fingerprint(sf_dir, "customer")
     memo_key = (sf_dir, fp)
     if fp is None or memo_key not in _PR_N_MEMO:
         n = c.count()
@@ -263,7 +238,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.withColumn(
             "od", F.count(F.lit(1)).over(Window.partitionBy("src"))
         )
-        .localCheckpoint(eager=False)
+        .transform(one_compute_boundary)
     )
     # Static dangling set (out-degree 0). One cheap existence probe
     # specializes the plan: when the graph HAS no dangling nodes (this
@@ -278,7 +253,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     if fp is None or _PR_DANGLING_MEMO.get(memo_key, True):
         dangling = nodes.join(
             contrib_src.select(F.col("src").alias("id")), "id", "left_anti"
-        ).localCheckpoint(eager=False)
+        ).transform(one_compute_boundary)
         if fp is not None and memo_key not in _PR_DANGLING_MEMO:
             _PR_DANGLING_MEMO[memo_key] = not dangling.isEmpty()
     has_dangling = (
@@ -565,7 +540,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (
         e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=False)
+        .transform(one_compute_boundary)
     )
     seeds = c.filter(F.col("id") % 97 == 0)
     visited = seeds.select(F.col("id").alias("seed"), F.col("id").alias("node"))
@@ -576,10 +551,8 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("seed", F.col("dst").alias("node"))
             .distinct()
         )
-        frontier = nxt.join(visited, ["seed", "node"], "left_anti").localCheckpoint(
-            eager=False
-        )
-        visited = visited.unionByName(frontier).localCheckpoint(eager=False)
+        frontier = one_compute_boundary(nxt.join(visited, ["seed", "node"], "left_anti"))
+        visited = one_compute_boundary(visited.unionByName(frontier))
     return visited.groupBy("seed").agg(F.count("*").cast("bigint").alias("n_reached"))
 
 
@@ -649,7 +622,7 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .select("src", "dst", ((F.col("src") + F.col("dst")) % 7 + 1).alias("w"))
-        .localCheckpoint(eager=False)
+        .transform(one_compute_boundary)
     )
     dist = c.filter(F.col("id") == 0).select(
         F.col("id").alias("node"), F.lit(0).cast("bigint").alias("dist")
@@ -663,7 +636,7 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .transform(one_compute_boundary)
         )
     return dist.select(
         F.col("node").cast("bigint").alias("node"), F.col("dist").cast("bigint").alias("dist")
@@ -728,7 +701,7 @@ def hierarchy_flatten_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             (F.col("node") > 0) & (F.floor(F.col("node") / 2) == 0), F.col("node")
         ).cast("bigint").alias("root_child"),
-    ).localCheckpoint(eager=False)
+    ).transform(one_compute_boundary)
     for _ in range(_HIER_DOUBLINGS):
         hop = state.select(
             F.col("node").alias("m_node"),
@@ -744,7 +717,7 @@ def hierarchy_flatten_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("depth") + F.coalesce("m_depth", F.lit(0))).cast("bigint").alias("depth"),
                 F.coalesce("root_child", "m_rc").alias("root_child"),
             )
-            .localCheckpoint(eager=False)
+            .transform(one_compute_boundary)
         )
     # Convergence assertion: k doublings cover depth <= 2^k, so a row still
     # pointing at a REAL node means the forest is deeper than the bound —
@@ -826,16 +799,14 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     e0 = li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")).distinct()
     deg0 = e0.groupBy("p").agg(F.count("*").alias("d"))
-    kept = e0.join(deg0.filter(F.col("d") <= 50).select("p"), "p").localCheckpoint(
-        eager=False
-    )
+    kept = one_compute_boundary(e0.join(deg0.filter(F.col("d") <= 50).select("p"), "p"))
     a, b = kept.alias("a"), kept.alias("b")
     edges = (
         a.join(b, "p")
         .filter(F.col("a.s") < F.col("b.s"))
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)  # edges feed 5 consumers below
+        .transform(one_compute_boundary)  # edges feed 5 consumers below
     )
     ab = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
     bc = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))
@@ -879,7 +850,10 @@ def _kcore_peel_sql() -> str:
     """Unrolled k-core peel: each round keeps nodes whose degree in the
     surviving subgraph is >= k. Same bounded-iteration idiom as
     `hierarchy_flatten_bounded` — the fixture graph's peel reaches its
-    fixpoint well inside the unroll (pinned by a semantic test)."""
+    fixpoint well inside the unroll (pinned by a semantic test). Each
+    round's node set is MATERIALIZED: every round reads the previous one
+    four times, so an inlined CTE grows 4^rounds and spilled >6 GB of
+    DuckDB temp at sf0.001."""
     sql = """
     WITH e0 AS MATERIALIZED (
       SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
@@ -890,7 +864,7 @@ def _kcore_peel_sql() -> str:
       SELECT DISTINCT least(a.s, b.s) AS u, greatest(a.s, b.s) AS v
       FROM kept a JOIN kept b USING (p) WHERE a.s < b.s
     ),
-    n0 AS (SELECT u AS node FROM edges UNION SELECT v FROM edges)
+    n0 AS MATERIALIZED (SELECT u AS node FROM edges UNION SELECT v FROM edges)
     """
     prev = "n0"
     for r in range(1, _KCORE_ROUNDS + 1):
@@ -904,7 +878,7 @@ def _kcore_peel_sql() -> str:
         JOIN {prev} a ON a.node = e.u JOIN {prev} b ON b.node = e.v
       ) GROUP BY node
     ),
-    n{r} AS (SELECT node FROM d{r} WHERE d >= {_KCORE_K})
+    n{r} AS MATERIALIZED (SELECT node FROM d{r} WHERE d >= {_KCORE_K})
     """
         prev = f"n{r}"
     sql += f"""
@@ -940,7 +914,7 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a.s") < F.col("b.s"))
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)  # consumed 2x per round x 6 rounds
+        .transform(one_compute_boundary)  # consumed 2x per round x 6 rounds
     )
     nodes = (
         edges.select(F.col("u").alias("node"))
@@ -958,9 +932,7 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.count("*").alias("d"))
         )
-        nodes = deg.filter(F.col("d") >= _KCORE_K).select("node").localCheckpoint(
-            eager=False
-        )
+        nodes = one_compute_boundary(deg.filter(F.col("d") >= _KCORE_K).select("node"))
     return deg.join(nodes, "node").select(
         "node", F.col("d").cast("bigint").alias("core_degree")
     ).filter(F.col("core_degree") >= _KCORE_K)
@@ -1000,7 +972,7 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     e = li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")).distinct()
     deg = e.groupBy("p").agg(F.count("*").alias("d"))
-    kept = e.join(deg.filter(F.col("d") <= 50), "p").localCheckpoint(eager=False)
+    kept = one_compute_boundary(e.join(deg.filter(F.col("d") <= 50), "p"))
     a = kept.alias("a")
     b = kept.alias("b")
     contrib = F.floor(F.lit(1_000_000.0) / F.col("a.d") + F.lit(0.5)).cast("long")
@@ -1153,7 +1125,7 @@ def _bridged_clique_graph(spark: SparkSession, sf_dir: str):
     adj = (
         e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .union(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=False)  # static side, consumed every round
+        .transform(one_compute_boundary)  # static side, consumed every round
     )
     return e, adj
 
@@ -1200,7 +1172,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-community rollup (#communities rows). m is a 1-row count
     broadcast, the accepted audit-scalar shape."""
     labels, e, adj = _lpa_fixture_labels(spark, sf_dir)
-    lab = labels.localCheckpoint(eager=False)  # consumed by 3 joins below
+    lab = one_compute_boundary(labels)  # consumed by 3 joins below
     m_df = e.agg(F.count(F.lit(1)).alias("m"))
     deg = adj.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     lu = lab.select(F.col("node").alias("u"), F.col("label").alias("label_u"))

@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 # Configs that are safe (and required) to apply to an externally provided
 # session at runtime — all of these are runtime-settable SQLConfs.
@@ -46,53 +45,24 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-# --- one-compute boundaries: fault-tolerance posture (r10) -----------------
-#
-# Several operators materialize a shared subtree exactly once (an Arrow
-# signature pass, an SSJoin truth side, the synthesized dosage grid, the
-# segment explode) because their consumers feed BROADCAST exchanges /
-# scalar aggregates, which AQE's runtime exchange-reuse cannot dedupe
-# (it only reuses identical SHUFFLE exchanges). Locally the cheapest
-# boundary is `localCheckpoint(eager=False)` (guide §5): lineage is
-# truncated and blocks live unreplicated on executors. On a real cluster
-# that is a fault-tolerance trade — a lost executor (or a dynamic-
-# allocation scale-down) makes the job FAIL instead of recomputing,
-# which is why Spark's docs discourage localCheckpoint under dynamic
-# allocation. For the id-pair/signature boundaries the recompute-vs-
-# fragility trade is bounded and local is fine even on a cluster; for
-# the data-proportional boundaries (dosage grid, segment explode) a
-# cluster deployment should pick a recoverable posture instead:
-#
-#   SPARK_GRAFT_BOUNDARY=local     (default) localCheckpoint(eager=False)
-#   SPARK_GRAFT_BOUNDARY=disk      persist(StorageLevel.DISK_ONLY) — lineage
-#                                  kept, blocks recomputable after loss
-#   SPARK_GRAFT_BOUNDARY=reliable  checkpoint(eager=False) to the configured
-#                                  checkpoint dir (sparkContext.setCheckpointDir
-#                                  must be set by the deployer)
-#   SPARK_GRAFT_BOUNDARY=none      pass-through (no materialization) — for
-#                                  structural-pin tests that must see the
-#                                  FULL plan a boundary would otherwise hide
-#                                  behind its RDD scan; never a production
-#                                  posture (the duplicated subtrees return)
-#
-# The knob is declared HERE (not per-operator) so every boundary moves
-# together; the bench/driver default is `local`, which keeps plan-ledger
-# digests and bench methodology identical to r09.
-_BOUNDARY_ENV = "SPARK_GRAFT_BOUNDARY"
-
-
 def one_compute_boundary(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` exactly once for multiple plan consumers, with a
-    deployment-selectable fault-tolerance posture (see module comment).
-    Always lazy: nothing executes until the query's own action, so bench
-    clocks stay honest."""
-    posture = os.environ.get(_BOUNDARY_ENV, "local")
-    if posture == "disk":
-        return df.persist(StorageLevel.DISK_ONLY)
-    if posture == "reliable":
-        return df.checkpoint(eager=False)
-    if posture == "none":
-        return df
+    """The engine's one way to cut lineage: materialize ``df`` exactly once
+    for several plan consumers, as ``localCheckpoint(eager=False)``.
+
+    Operators cut where a shared subtree (an Arrow signature pass, an SSJoin
+    truth side, the synthesized dosage grid, a round of an iterative loop)
+    feeds BROADCAST exchanges or scalar aggregates, which AQE's runtime
+    exchange reuse cannot dedupe (it reuses identical SHUFFLE exchanges
+    only), or where a loop's lineage would otherwise grow every round.
+
+    Lazy: nothing executes until the query's own action, so bench clocks
+    stay honest. Local and unreplicated: the blocks live on the executors
+    and Spark's ContextCleaner drops them once the DataFrame is garbage,
+    so nothing stays in the CacheManager for the session's life, as a
+    ``persist`` would. The trade is fault tolerance: on a cluster a lost
+    executor (or a dynamic-allocation scale-down) fails the job instead of
+    recomputing the cut, which is why Spark's docs discourage
+    localCheckpoint under dynamic allocation."""
     return df.localCheckpoint(eager=False)
 
 

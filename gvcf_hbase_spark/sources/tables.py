@@ -90,10 +90,15 @@ def scan_size_bytes(df: DataFrame) -> int | None:
     blocked vector search). Returns None for non-file sources or remote
     filesystems where local stat fails; callers must treat None as
     "unknown, assume large" so the scale-safe path is the default."""
+    return _listed_bytes(df.inputFiles())
+
+
+def _listed_bytes(files: list[str]) -> int | None:
+    """On-disk bytes of an ``inputFiles()`` listing; None when it is empty
+    or not stat-able locally."""
     import os
     from urllib.parse import urlparse
 
-    files = df.inputFiles()
     if not files:
         return None
     try:
@@ -179,7 +184,7 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     files = df.inputFiles()
     if files:
         est = len(files)
-        total = scan_size_bytes(df)
+        total = _listed_bytes(files)
         if total is not None:
             try:
                 raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
@@ -192,6 +197,33 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     if est >= target:
         return df
     return df.repartition(target)
+
+
+def dataset_fingerprint(sf_dir: str, table: str) -> tuple | None:
+    """Cheap local fingerprint of a fixture table: sorted (name,
+    mtime_ns, size) of its parquet file(s). Content-keyed memos of
+    build-time probes key on it, so a dataset regenerated at the same path
+    in-process re-probes. Returns None when the path is not a local
+    filesystem path (e.g. hdfs:// on a real cluster) — callers must then
+    skip memoization rather than risk staleness."""
+    import os
+
+    root = os.path.join(sf_dir, f"{table}.parquet")
+    try:
+        if os.path.isfile(root):
+            st = os.stat(root)
+            return ((root, st.st_mtime_ns, st.st_size),)
+        if os.path.isdir(root):
+            out = []
+            for f in sorted(os.listdir(root)):
+                p = os.path.join(root, f)
+                if os.path.isfile(p):
+                    st = os.stat(p)
+                    out.append((f, st.st_mtime_ns, st.st_size))
+            return tuple(out)
+    except OSError:
+        pass
+    return None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

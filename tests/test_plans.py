@@ -816,10 +816,12 @@ def test_two_phase_cumsum_shapes(spark, monkeypatch):
     plans is the bounded one-row-per-bucket offsets pass, whose input is
     an aggregate, never the support relation itself. r10: agg_ks_test's
     support relation now sits behind a one-compute boundary whose RDD
-    scan hides the cumsum subtree from explain — the `none` posture
-    disables boundaries so the structural pin still sees the full plan
+    scan hides the cumsum subtree from explain — localCheckpoint is
+    patched to identity so the structural pin still sees the full plan
     (caps are therefore the UNboundaried static counts)."""
-    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "none")
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", lambda self, *a, **kw: self)
     for key, cap in {"agg_ks_test": 34, "analytics_mann_whitney": 12}.items():
         plan = explain_str(SPECS[key].fn(spark, SF_DIR))
         assert "hashpartitioning(__vbkt" in plan, f"{key}: bucketed cumsum missing"

@@ -1,56 +1,26 @@
-"""Round-10 focused tests: the checkpoint-posture knob, the soft-conf
-honor rule, and the segment-dedup NULL-text contract (ADVICE r09)."""
+"""Round-10 focused tests: the one-compute boundary's plan shape, the
+soft-conf honor rule, and the segment-dedup NULL-text contract (ADVICE r09)."""
 
 from __future__ import annotations
 
 import os
 
 import pyspark.sql.functions as F
-import pytest
 
 from gvcf_hbase_spark.registry import load_all
 from gvcf_hbase_spark.session import apply_runtime_confs, one_compute_boundary
 
-SF_SMALL = "/root/testdata/sf0.001"
-
 
 def test_boundary_default_is_local_checkpoint(spark):
-    """Default posture (`local`) must keep the r09 plan shape: the boundary
-    shows up as a scanned ExistingRDD/LogicalRDD, NOT an InMemoryRelation —
-    the plan-ledger digests depend on this."""
+    """The boundary must keep the r09 plan shape: it shows up as a scanned
+    ExistingRDD/LogicalRDD, NOT an InMemoryRelation — the plan-ledger
+    digests depend on this."""
     df = spark.range(10).withColumn("x", F.col("id") * 2)
     out = one_compute_boundary(df)
     logical = out._jdf.queryExecution().logical().toString()
     assert "LogicalRDD" in logical or "ExistingRDD" in logical, logical
     assert "InMemoryRelation" not in logical
     assert out.storageLevel.useMemory is False and out.storageLevel.useDisk is False
-
-
-def test_boundary_disk_posture_persists(spark, monkeypatch):
-    """`disk` posture keeps lineage (recoverable after executor loss) and
-    marks the relation DISK_ONLY; results are identical to local posture."""
-    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "disk")
-    df = spark.range(10).withColumn("x", F.col("id") * 2)
-    out = one_compute_boundary(df)
-    try:
-        assert out.storageLevel.useDisk is True
-        assert out.storageLevel.useMemory is False
-        assert sorted(r.x for r in out.collect()) == [2 * i for i in range(10)]
-    finally:
-        out.unpersist()
-
-
-def test_boundary_disk_posture_operator_end_to_end(spark, monkeypatch):
-    """A boundary-using operator returns identical rows under disk posture
-    (the knob is a fault-tolerance trade, never a semantics change)."""
-    specs = load_all()
-    base = specs["profile_drift_psi"].fn(spark, SF_SMALL).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "disk")
-    alt = specs["profile_drift_psi"].fn(spark, SF_SMALL).toPandas()
-    cols = sorted(base.columns)
-    assert sorted(map(tuple, base[cols].values.tolist())) == sorted(
-        map(tuple, alt[cols].values.tolist())
-    )
 
 
 def test_soft_conf_honors_user_value(spark):
