@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from gvcf_hbase_spark.functions.textfns import normalize_text, shingles, stable_hash32, tokens
 from gvcf_hbase_spark.registry import register
 from gvcf_hbase_spark.session import one_compute_boundary
-from gvcf_hbase_spark.sources.tables import dataset_fingerprint, load_table, spread
+from gvcf_hbase_spark.sources.tables import content_memo, load_table, spread
 
 # ---------------------------------------------------------------------------
 # MinHash constants (fixed seed — SURVEY §5.4 rule 6)
@@ -524,31 +524,25 @@ def _containment_bitmap_wins(fanout: int, n_docs: int, v2: int) -> bool:
     return byte_ops < fanout * _CONTAINMENT_BITMAP_FACTOR
 
 
-# (sf_dir, documents fingerprint) -> (Σdf², prefix bound, n_docs, v2).
+# content_memo of the documents table: (Σdf², prefix bound, n_docs, v2).
 # The probe is a data-dependent dispatch input and must run a real job;
-# memoizing per dataset content (same discipline as graph_pagerank's
-# dangling probe) keeps whole-inventory plan sweeps — which call this
-# op's builder dozens of times per session against the same fixtures —
-# from re-paying it.
+# the memo keeps whole-inventory plan sweeps — which call this op's
+# builder dozens of times per session — from re-paying it.
 _CONTAINMENT_PROBE_MEMO: dict[tuple, tuple[int, int, int, int]] = {}
-
-# (sf_dir, fingerprint) -> sorted df≥2 vocabulary (bitmap bit order).
-# Bounded by _CONTAINMENT_BITMAP_MAX_VOCAB strings; same content-keyed
-# memo discipline as the probe (it is a dispatch-time build input, not a
-# query result — every timed action still computes from the parquet).
+# content_memo of the documents table: sorted df≥2 vocabulary (bitmap bit
+# order), at most _CONTAINMENT_BITMAP_MAX_VOCAB strings. A build input,
+# not a query result: every action still computes from the parquet.
 _CONTAINMENT_VOCAB_MEMO: dict[tuple, list] = {}
 
 
 def _containment_probe(spark, sf_dir, docs, df_t, ranked) -> tuple[int, int, int, int]:
     """Exact (Σdf² fanout, Σ prefix-posting df bound, n_docs, df≥2 vocab
-    size), memoized per dataset content; a non-local path (no fingerprint)
-    always re-probes — correctness over warmth. n_docs is only probed when
-    the vocabulary is bitmap-bounded, and the prefix bound only when the
-    bitmap path did not already win — each probe job is paid exactly when
-    its dispatch decision needs it."""
-    fp = dataset_fingerprint(sf_dir, "documents")
-    key = (sf_dir, fp)
-    if fp is None or key not in _CONTAINMENT_PROBE_MEMO:
+    size), memoized per table version (content_memo). n_docs is only
+    probed when the vocabulary is bitmap-bounded, and the prefix bound only
+    when the bitmap path did not already win — each probe job is paid
+    exactly when its dispatch decision needs it."""
+
+    def probe() -> tuple[int, int, int, int]:
         row = df_t.agg(
             F.sum(F.col("df") * F.col("df")),
             F.sum(F.when(F.col("df") >= 2, 1).otherwise(0)),
@@ -564,10 +558,9 @@ def _containment_probe(spark, sf_dir, docs, df_t, ranked) -> tuple[int, int, int
             # the bound pass (df join + rank window) is only needed when
             # the fast-accept ceiling is exceeded and bitmap didn't win
             bound = ranked.filter("in_prefix").agg(F.sum("df")).collect()[0][0] or 0
-        if fp is None:
-            return fanout, int(bound), n_docs, v2
-        _CONTAINMENT_PROBE_MEMO[key] = (fanout, int(bound), n_docs, v2)
-    return _CONTAINMENT_PROBE_MEMO[key]
+        return fanout, int(bound), n_docs, v2
+
+    return content_memo(_CONTAINMENT_PROBE_MEMO, sf_dir, "documents", probe)
 
 
 # PID of the worker whose OpenBLAS has been pinned to 1 thread (guide
@@ -619,16 +612,10 @@ def _containment_bitmap_verified(
     into that tail — only pairs that can never pass are withheld."""
     import pandas as pd
 
-    fp = dataset_fingerprint(sf_dir, "documents")
-    vkey = (sf_dir, fp)
-    if fp is None or vkey not in _CONTAINMENT_VOCAB_MEMO:
-        vocab = sorted(
-            r[0] for r in df_t.filter(F.col("df") >= 2).select("tok").collect()
-        )
-        if fp is not None:
-            _CONTAINMENT_VOCAB_MEMO[vkey] = vocab
-    else:
-        vocab = _CONTAINMENT_VOCAB_MEMO[vkey]
+    vocab = content_memo(
+        _CONTAINMENT_VOCAB_MEMO, sf_dir, "documents",
+        lambda: sorted(r[0] for r in df_t.filter(F.col("df") >= 2).select("tok").collect()),
+    )
     nb = max((len(vocab) + 7) // 8, 1)
     bc = spark.sparkContext.broadcast({tok: i for i, tok in enumerate(vocab)})
 

@@ -23,6 +23,7 @@ from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class HBaseTarget:
@@ -51,12 +52,21 @@ class HBaseTarget:
     def __init__(self, path: str, writer: Callable[[DataFrame, str], None] | None = None):
         self.path = path
         self.writer = writer
+        self.schemas: dict[str, StructType] = {}
 
     def write(self, df: DataFrame, table: str) -> None:
         if self.writer is not None:
             self.writer(df, table)
         else:
             df.write.mode("overwrite").parquet(f"{self.path}/{table}")
+            self.schemas[table] = df.schema
+
+    def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """Read back a table this target wrote to the offline backend, with
+        the schema it was written with: no schema-inference job. Spark reads
+        every file-source field as nullable, as Parquet stores it, so the
+        result's schema equals an inferred one."""
+        return spark.read.schema(self.schemas[table]).parquet(f"{self.path}/{table}")
 
 
 def _int_key_hex(v) -> F.Column:
@@ -160,7 +170,7 @@ def _register_sink_queries() -> None:
         )
         target = HBaseTarget(tempfile.mkdtemp(prefix="gvcf_bulk_put_"))
         bulk_put(ev, target, "events_by_user_time", ["user_id", "ts_us_long"], num_regions=4)
-        return spark.read.parquet(f"{target.path}/events_by_user_time").select(
+        return target.read(spark, "events_by_user_time").select(
             "__rowkey", "event_id", "user_id", "ts_us_long", "value"
         )
 

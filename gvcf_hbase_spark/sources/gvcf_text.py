@@ -120,11 +120,14 @@ def _fixture_lines(
     per-position combine (A9) relies on.
 
     The bare key column is spread() BEFORE line construction: the orders
-    fixture arrives as one input split, and shuffling 8 bytes/row here is
-    far cheaper than running concat_ws + the downstream regex parse on a
-    single core (measured ~1.5 s -> ~1.0 s warm for gvcf_combine at
-    sf0.1). A real deployment reads many gVCF files/splits and skips
-    this."""
+    fixture arrives as one input split, and shuffling 8 bytes/row here
+    keeps the downstream regex parse off a single core (measured ~1.5 s
+    -> ~1.0 s warm for gvcf_combine at sf0.1). It does NOT keep
+    concat_ws there: Catalyst pushes parse_gvcf_lines' header predicate
+    ``NOT startsWith(line, '#')`` below the round-robin exchange onto the
+    one-task orders scan, so every line is built once on that task for
+    the filter and again after the spread. A real deployment reads many
+    gVCF files/splits and skips this."""
     from gvcf_hbase_spark.sources.tables import load_table, spread
 
     o = spread(load_table(spark, sf_dir, "orders").select("o_orderkey"))

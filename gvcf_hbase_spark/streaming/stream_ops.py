@@ -19,7 +19,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gvcf_hbase_spark.registry import register
-from gvcf_hbase_spark.session import apply_runtime_confs
 from gvcf_hbase_spark.streaming.batch_twins import tumbling_agg
 
 
@@ -93,11 +92,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     limits, so N files become N micro-batches)."""
     import os
 
-    from gvcf_hbase_spark.sources.tables import with_event_time
+    from gvcf_hbase_spark.sources.tables import table_schema, with_event_time
 
-    apply_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(table_schema(spark, sf_dir, "events"))
     maxfiles = os.environ.get("SPARK_GRAFT_STREAM_MAXFILES")
     if maxfiles:
         reader = reader.option("maxFilesPerTrigger", int(maxfiles))
