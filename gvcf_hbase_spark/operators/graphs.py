@@ -236,20 +236,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast-crossJoins back into the update — never a driver collect.
     # Same data-dependent plan specialization as the broadcast-vs-blocked
     # dispatch in similarity.
-    dangling = None
-
-    def dangling_set() -> DataFrame:
-        nonlocal dangling
-        dangling = nodes.join(
-            contrib_src.select(F.col("src").alias("id")), "id", "left_anti"
-        ).transform(one_compute_boundary)
-        return dangling
-
+    anti = nodes.join(contrib_src.select(F.col("src").alias("id")), "id", "left_anti")
     has_dangling = content_memo(
-        _PR_DANGLING_MEMO, sf_dir, "customer", lambda: not dangling_set().isEmpty()
+        _PR_DANGLING_MEMO, sf_dir, "customer", lambda: not anti.isEmpty()
     )
-    if has_dangling and dangling is None:
-        dangling_set()
+    dangling = anti.transform(one_compute_boundary) if has_dangling else None
     # Fixed-point recurrence (r09): ranks are BIGINT multiples of
     # 1/_PR_SCALE of total mass, every step floor-divides (`div`), and the
     # oracle unrolls the SAME integer recurrence — cross-engine equality is

@@ -260,19 +260,16 @@ _SCHEMA_MEMO: dict[tuple, StructType] = {}
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     """The inferred schema of fixture table ``name``, inferred once per
-    table version (see :func:`content_memo`) and schema-conf values.
-    Inference is a Spark job that reads the Parquet footers; the schema is
-    table metadata, so later reads need not repeat it."""
-    path = f"{sf_dir}/{name}.parquet"
-    return _memo_schema(spark, sf_dir, name, lambda: spark.read.parquet(path).schema)
-
-
-def _memo_schema(
-    spark: SparkSession, sf_dir: str, name: str, infer: Callable[[], StructType]
-) -> StructType:
+    table version (see :func:`content_memo`) and schema-conf values, read
+    after the engine's runtime confs are applied. Inference is a Spark job
+    that reads the Parquet footers; the schema is table metadata, so later
+    reads need not repeat it."""
     apply_runtime_confs(spark)
+    path = f"{sf_dir}/{name}.parquet"
     confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
-    return content_memo(_SCHEMA_MEMO, sf_dir, name, infer, *confs)
+    return content_memo(
+        _SCHEMA_MEMO, sf_dir, name, lambda: spark.read.parquet(path).schema, *confs
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -284,16 +281,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The schema is inferred once per table version per process
     (:func:`table_schema`): the first read of a table pays Spark's
     one-task schema-inference job, and every later read of the same files
-    under the same schema confs passes the schema explicitly and launches
-    no job. A non-local path has no fingerprint and infers on every read.
+    under the same schema confs launches no job. Spark reads a given
+    schema with every field nullable, as inference does, so the result's
+    schema equals an inferred read's. A non-local path has no fingerprint
+    and infers on every read.
     """
     path = f"{sf_dir}/{name}.parquet"
-    inferred = []  # on a memo miss: the plain read that inferred the schema
-
-    def infer() -> StructType:
-        inferred.append(spark.read.parquet(path))
-        return inferred[0].schema
-
-    schema = _memo_schema(spark, sf_dir, name, infer)
-    df = inferred[0] if inferred else spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(table_schema(spark, sf_dir, name)).parquet(path)
     return with_event_time(df) if name == "events" else df
