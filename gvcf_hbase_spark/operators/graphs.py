@@ -653,8 +653,9 @@ _HIER_ORACLE = """
 
 @register("hierarchy_flatten_bounded", oracle=_HIER_ORACLE, tags=("graph", "iterative"))
 def hierarchy_flatten_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchy flattening — the WITH RECURSIVE surface Spark SQL
-    lacks, expressed as bounded iterative dataflow: every node of a
+    """Hierarchy flattening — the WITH RECURSIVE walk (which Spark 4.1
+    SQL runs one level per round, see `sql_recursive_cte`) expressed as
+    bounded path-doubling dataflow: every node of a
     parent-table forest (parent = key÷2, root 0) walks to the root,
     reporting its depth and its top-level subtree (the child of the
     root it descends from — the 'division' column an org-chart or BOM

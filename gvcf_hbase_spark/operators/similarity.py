@@ -951,6 +951,43 @@ def _q6(a):
     never quantize a 5e-7 tie differently (r07 ADVICE)."""
     return np.floor(a * 1e6 + 0.5) / 1e6
 
+
+def _semdedup_assign(e: DataFrame) -> DataFrame:
+    """SemDeDup's centroid assignment, shared by the dedup op and its
+    threshold sweep: each vector joins the cell of its nearest of the
+    ``_SEMDEDUP_K`` lowest-id vectors (collected once), by `_q6` cosine."""
+    cent = sorted(
+        e.filter(F.col("vec_id") < _SEMDEDUP_K).select("vec_id", "emb").collect(),
+        key=lambda r: r.vec_id,
+    )
+    cids = np.array([r.vec_id for r in cent], dtype="int64")
+    cm = np.stack([np.asarray(r.emb, dtype="float64") for r in cent])
+    cmn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
+
+    def assign(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            q = np.stack([np.asarray(v, dtype="float64") for v in pdf["emb"]])
+            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
+            cs = _q6(qn @ cmn.T)
+            # argmax returns the FIRST max; columns are cid-ascending, so
+            # ties break to the lowest centroid id — same as the oracle's
+            # ORDER BY cs DESC, cid.
+            best = cs.argmax(axis=1)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy(dtype="int64"),
+                    "cluster": cids[best],
+                    "emb": pdf["emb"],
+                }
+            )
+
+    return spread(e).mapInPandas(
+        assign, "vec_id bigint, cluster bigint, emb array<double>"
+    )
+
+
 _SEMDEDUP_ORACLE = f"""
     WITH cent AS (
       SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
@@ -1009,37 +1046,7 @@ def dedup_semantic_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (padding rows) would NaN the normalize on both engines — the family
     fixture contract excludes them (same posture as `cosine_pairs`);
     a padded corpus pre-filters `dot(v,v) > 0` before this op."""
-    e = _emb(spark, sf_dir)
-    cent = sorted(
-        e.filter(F.col("vec_id") < _SEMDEDUP_K).select("vec_id", "emb").collect(),
-        key=lambda r: r.vec_id,
-    )
-    cids = np.array([r.vec_id for r in cent], dtype="int64")
-    cm = np.stack([np.asarray(r.emb, dtype="float64") for r in cent])
-    cmn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-
-    def assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.stack([np.asarray(v, dtype="float64") for v in pdf["emb"]])
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            cs = _q6(qn @ cmn.T)
-            # argmax returns the FIRST max; columns are cid-ascending, so
-            # ties break to the lowest centroid id — same as the oracle's
-            # ORDER BY cs DESC, cid.
-            best = cs.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype="int64"),
-                    "cluster": cids[best],
-                    "emb": pdf["emb"],
-                }
-            )
-
-    assigned = spread(e).mapInPandas(
-        assign, "vec_id bigint, cluster bigint, emb array<double>"
-    )
+    assigned = _semdedup_assign(_emb(spark, sf_dir))
 
     def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
@@ -1115,33 +1122,7 @@ def sim_semdedup_eps_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     a #cells × #ε aggregate, input-size independent. Scores half-up 6dp-quantized (`_q6`)
     before every compare (the family convention), so both engines make
     identical boundary choices; all outputs exact integers."""
-    e = _emb(spark, sf_dir)
-    cent = sorted(
-        e.filter(F.col("vec_id") < _SEMDEDUP_K).select("vec_id", "emb").collect(),
-        key=lambda r: r.vec_id,
-    )
-    cids = np.array([r.vec_id for r in cent], dtype="int64")
-    cm = np.stack([np.asarray(r.emb, dtype="float64") for r in cent])
-    cmn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-
-    def assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.stack([np.asarray(v, dtype="float64") for v in pdf["emb"]])
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            cs = _q6(qn @ cmn.T)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype="int64"),
-                    "cluster": cids[cs.argmax(axis=1)],
-                    "emb": pdf["emb"],
-                }
-            )
-
-    assigned = spread(e).mapInPandas(
-        assign, "vec_id bigint, cluster bigint, emb array<double>"
-    )
+    assigned = _semdedup_assign(_emb(spark, sf_dir))
 
     def sweep_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")

@@ -32,7 +32,7 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # events/documents/embeddings are small dims at every SF; lineitem at
     # 100 TB shuffles on 32-ish partitions locally, cluster-sized via AQE.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    "spark.sql.shuffle.partitions": "32",
     # Recursive-CTE runaway guard, sized for this engine's data decades
     # rather than Spark's 1e6 default: sql_recursive_cte's ancestor walk
     # emits Σ depth(node) ≈ n·log2(n) rows (~3M at sf1, ~32M at sf10), so

@@ -1435,28 +1435,7 @@ def _register_roh_query() -> None:
         same-genotype stretch — then one aggregate per island. No
         self-join, no lag cascade; at 100 TB the genome axis partitions
         by (sample, contig) and every step stays inside that key."""
-        def _local_dosage(spark_, sf_dir_):
-            # ROH-specific dosage grid (see _ROH_CTE note above)
-            from gvcf_hbase_spark.sources.tables import load_table, spread
-
-            o = spread(load_table(spark_, sf_dir_, "orders").select("o_orderkey"))
-            grid = o.select(
-                F.col("o_orderkey").alias("k"),
-                F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("s"),
-            )
-            m = (F.col("k") * F.col("k") + F.col("k") * (F.col("s") + 3) + F.col("s") * 7) % 7
-            dosage = F.when(
-                m < 5,
-                F.when((F.col("k") + F.col("s")) % 2 == 0, 0).otherwise(2),
-            ).otherwise(1)
-            return grid.select(
-                F.concat(F.lit("s"), F.col("s").cast("string")).alias("sample_id"),
-                F.concat(F.lit("chr"), (F.col("k") % 2 + 1).cast("string")).alias("contig"),
-                F.col("k").cast("bigint").alias("pos"),
-                dosage.cast("bigint").alias("alt_n"),
-            )
-
-        d = _local_dosage(spark, sf_dir)
+        d = _dosage_grid(spark, sf_dir)
         marked = d.select(
             "sample_id",
             "contig",
@@ -1589,10 +1568,10 @@ _IBS_ORACLE = _ROH_CTE + r"""
 
 
 def _dosage_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cohort dosage grid shared by the singleton / IBS ops — same
-    construction as gvcf_roh_runs' inline grid (see _ROH_CTE note): the
-    quadratic hom-rule gives per-sample variety so allele counts differ
-    across sites instead of cycling with a short period."""
+    """The cohort dosage grid shared by the ROH / singleton / IBS ops (see
+    _ROH_CTE note): the quadratic hom-rule gives per-sample variety so
+    allele counts differ across sites instead of cycling with a short
+    period."""
     from gvcf_hbase_spark.sources.tables import load_table, spread
 
     o = spread(load_table(spark, sf_dir, "orders").select("o_orderkey"))

@@ -115,9 +115,16 @@ def scan_raw_bytes(df: DataFrame) -> int | None:
     compute), so work-gated dispatches read the raw size. None when the
     source is not local parquet — callers treat None as "unknown, assume
     large" so the scale-safe path is the default."""
+    return _footer_bytes(df.inputFiles())
+
+
+def _footer_bytes(files: list[str], stop_at: int | None = None) -> int | None:
+    """Uncompressed bytes of an ``inputFiles()`` listing, summed from the
+    parquet footers; None when it is empty or a footer is unreadable.
+    With ``stop_at``, stops reading footers once the running total reaches
+    it, so the result only answers ``total < stop_at``."""
     from urllib.parse import urlparse
 
-    files = df.inputFiles()
     if not files:
         return None
     try:
@@ -128,6 +135,8 @@ def scan_raw_bytes(df: DataFrame) -> int | None:
             md = pq.ParquetFile(urlparse(f).path).metadata
             for rg in range(md.num_row_groups):
                 total += md.row_group(rg).total_byte_size
+            if stop_at is not None and total >= stop_at:
+                break
         return total
     except Exception:
         return None
@@ -149,14 +158,16 @@ def spread_heavy(df: DataFrame) -> DataFrame:
     """spread() gated on RAW scan bytes: fan an under-parallel scan out
     ONLY when the single-split work is big enough to beat the extra
     exchange (see _SPREAD_HEAVY_MIN_RAW_BYTES). Unknown size => spread
-    (scale-safe default; at scale spread() is itself a no-op)."""
-    raw = scan_raw_bytes(df)
+    (scale-safe default; at scale spread() is itself a no-op). The scan
+    is listed once, and footers are read only up to the floor."""
+    files = df.inputFiles()
+    raw = _footer_bytes(files, stop_at=_SPREAD_HEAVY_MIN_RAW_BYTES)
     if raw is not None and raw < _SPREAD_HEAVY_MIN_RAW_BYTES:
         return df
-    return spread(df)
+    return _spread_listed(df, files)
 
 
-def spread(df: DataFrame, n: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Fan a table out across the cluster before compute-heavy per-row
     work — but ONLY when it actually arrives under-parallel.
 
@@ -179,9 +190,13 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     listing available) we fall back to it. Contract: call spread() on
     scans (or projections of scans) — it estimates the SCAN's
     parallelism and won't see a repartition a caller already applied."""
+    return _spread_listed(df, df.inputFiles())
+
+
+def _spread_listed(df: DataFrame, files: list[str]) -> DataFrame:
+    """spread() over an ``inputFiles()`` listing the caller already took."""
     spark = df.sparkSession
-    target = n or spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
+    target = spark.sparkContext.defaultParallelism
     if files:
         est = len(files)
         total = _listed_bytes(files)

@@ -12,6 +12,7 @@ partition-local open-block iterator state (SURVEY §2A A9 / §3.2).
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pandas as pd
@@ -30,6 +31,10 @@ _stream_dirs: dict[tuple[str, int], str] = {}
 last_batch_count: int = 0
 
 
+def _stream_split() -> int:
+    return int(os.environ.get("SPARK_GRAFT_STREAM_SPLIT", "1") or "1")
+
+
 def _events_stream_dir(sf_dir: str) -> str:
     """FileStreamSource requires a *directory*; expose the single events
     parquet file through a per-SF temp dir symlink (cached).
@@ -37,14 +42,13 @@ def _events_stream_dir(sf_dir: str) -> str:
     Soak mode (r09, the rate-limited multi-micro-batch path): when
     ``SPARK_GRAFT_STREAM_SPLIT=N`` (N > 1) the events table is rewritten
     as N EVENT-TIME-ORDERED chunk files with increasing mtimes, so that
-    with ``maxFilesPerTrigger=1`` each chunk becomes its own micro-batch
+    with ``maxFilesPerTrigger=1`` (which the split implies, see
+    :func:`read_events_stream`) each chunk becomes its own micro-batch
     arriving in event-time order — the daily-ingest shape, where the
     watermark advances between batches but drops nothing (chunk k+1's
     min ts ≥ chunk k's max ts). Out-of-order/late-file semantics are
     exercised separately (tests/test_streaming.py watermark tests)."""
-    import os
-
-    split = int(os.environ.get("SPARK_GRAFT_STREAM_SPLIT", "1") or "1")
+    split = _stream_split()
     key = (sf_dir, split)
     if key not in _stream_dirs:
         import tempfile
@@ -87,17 +91,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the same dtype-branching helper as the batch loader
     (sources.tables.with_event_time), plus ``ts_evt`` — the µs TIMESTAMP
     (with timezone) form watermarks require (session tz is UTC, so its
-    wall values equal the NTZ twin's). ``SPARK_GRAFT_STREAM_MAXFILES``
-    rate-limits file pickup (soak mode; availableNow honors source rate
-    limits, so N files become N micro-batches)."""
-    import os
-
+    wall values equal the NTZ twin's). Soak mode (a split above 1) picks
+    up one file per trigger (availableNow honors source rate limits, so N
+    chunk files become N micro-batches); without a split a many-file
+    events directory is not cut into one micro-batch per file."""
     from gvcf_hbase_spark.sources.tables import table_schema, with_event_time
 
     reader = spark.readStream.schema(table_schema(spark, sf_dir, "events"))
-    maxfiles = os.environ.get("SPARK_GRAFT_STREAM_MAXFILES")
-    if maxfiles:
-        reader = reader.option("maxFilesPerTrigger", int(maxfiles))
+    if _stream_split() > 1:
+        reader = reader.option("maxFilesPerTrigger", 1)
     raw = reader.parquet(_events_stream_dir(sf_dir))
     return with_event_time(raw).withColumn(
         "ts_evt", F.timestamp_micros(F.col("ts_us_long"))

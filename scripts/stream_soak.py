@@ -46,7 +46,6 @@ def main() -> int:
     chunks = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     env = dict(os.environ)
     env["SPARK_GRAFT_STREAM_SPLIT"] = str(chunks)
-    env["SPARK_GRAFT_STREAM_MAXFILES"] = "1"
     results: dict[str, str] = {}
     for key in ORACLED_STREAM_KEYS + ROWS_ONLY_STREAM_KEYS:
         t0 = time.perf_counter()

@@ -551,9 +551,7 @@ def test_soak_multi_micro_batch_equals_single_drain(monkeypatch):
     for key in ("stream_stateful", "stream_watermark_late"):
         single = canon_rows(SPECS[key].fn(spark, sf).toPandas())
         monkeypatch.setenv("SPARK_GRAFT_STREAM_SPLIT", "4")
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_MAXFILES", "1")
         multi = canon_rows(SPECS[key].fn(spark, sf).toPandas())
         assert so.last_batch_count > 1, f"{key}: soak ran a single micro-batch"
         monkeypatch.delenv("SPARK_GRAFT_STREAM_SPLIT")
-        monkeypatch.delenv("SPARK_GRAFT_STREAM_MAXFILES")
         assert single == multi, f"{key}: multi-micro-batch output differs"

@@ -1,6 +1,7 @@
 """Fixture-table reads resolve each table's schema once per table version:
 a warm ``load_table`` launches no Spark job, a rewritten table is
-re-inferred, and the bulk-put read-back uses the schema it wrote."""
+re-inferred, and the bulk-put read-back uses the schema it wrote. The
+``spread_heavy`` size probe lists its scan once."""
 
 from __future__ import annotations
 
@@ -96,3 +97,40 @@ def test_bulk_put_read_back_infers_nothing(spark, monkeypatch):
         (f.name, f.dataType) for f in plain
     ]
     df.write.format("noop").mode("overwrite").save()
+
+
+def _count_calls(monkeypatch, owner, name: str) -> list[int]:
+    """Wrap ``owner.name`` so each call bumps the returned one-item counter."""
+    real = getattr(owner, name)
+    n = [0]
+
+    def counted(*args, **kwargs):
+        n[0] += 1
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, counted)
+    return n
+
+
+def test_spread_heavy_lists_scan_once(spark, tmp_path, monkeypatch):
+    """spread_heavy lists its scan once and stops reading footers at the
+    raw-byte floor; the real floor keeps a small table unspread."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    assert tables.spread_heavy(docs) is docs
+
+    monkeypatch.setattr(tables, "_SPREAD_HEAVY_MIN_RAW_BYTES", 1)
+    listings = _count_calls(monkeypatch, ClassicDataFrame, "inputFiles")
+    spread = tables.spread_heavy(docs)
+    assert listings[0] == 1
+    assert "RoundRobinPartitioning" in spread._jdf.queryExecution().executedPlan().toString()
+
+    d = tmp_path / "three_files"
+    d.mkdir()
+    for i in range(3):
+        pq.write_table(pa.table({"k": list(range(i * 10, i * 10 + 10))}), d / f"part-{i}.parquet")
+    three = spark.read.parquet(str(d))
+    footers = _count_calls(monkeypatch, pq, "ParquetFile")
+    tables.spread_heavy(three)
+    assert footers[0] == 1
