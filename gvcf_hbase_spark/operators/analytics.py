@@ -67,34 +67,56 @@ def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user event sort or an (event × event) self-join. At fixture scale
     AQE broadcasts the shrunken step dims on its own.
     """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.col("ts_us_long").alias("t")
-    )
-    users = ev.select("user_id").distinct()
-    # One-compute boundaries (r10, guide §2.4): v and c each feed the next
-    # step's filter join AND the final left-join cascade; the executed sf1
-    # plan ran 11 separate parquet scans with only 2 ReusedExchange, so
-    # each step aggregate materializes once (user-sized, ever-shrinking
-    # relations). Measured: 0.53 -> 0.35 s at sf1.
+    return _funnel_detail(spark, sf_dir)
+
+
+def _funnel_stages(ev: DataFrame, gap_us: int | None = None):
+    """The greedy view → click → purchase cascade over ``ev`` (user_id,
+    event_type, t): ``(v, c, p)``, each user's first view, first click
+    after it and first purchase after that (``view_us``, ``click_us``,
+    ``purchase_us``). With ``gap_us`` each step must also follow the
+    previous match within that many µs.
+
+    One-compute boundaries (r10, guide §2.4): v and c each feed the next
+    step's filter join AND every caller's final left-join cascade or
+    count branch; the executed sf1 plan ran 11 separate parquet scans with
+    only 2 ReusedExchange, so each step aggregate materializes once
+    (user-sized, ever-shrinking relations). Measured: 0.53 -> 0.35 s at
+    sf1 (`funnel_steps`)."""
+
+    def step(kind: str, prev: DataFrame, prev_us: str, out_us: str) -> DataFrame:
+        after = F.col("t") > F.col(prev_us)
+        if gap_us is not None:
+            after = after & (F.col("t") <= F.col(prev_us) + gap_us)
+        return (
+            ev.filter(F.col("event_type") == kind)
+            .join(prev, "user_id")
+            .filter(after)
+            .groupBy("user_id")
+            .agg(F.min("t").alias(out_us))
+        )
+
     v = one_compute_boundary(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("t").alias("view_us"))
     )
-    c = one_compute_boundary(
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("t") > F.col("view_us"))
-        .groupBy("user_id")
-        .agg(F.min("t").alias("click_us"))
+    c = one_compute_boundary(step("click", v, "view_us", "click_us"))
+    p = step("purchase", c, "click_us", "purchase_us")
+    return v, c, p
+
+
+def _funnel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.col("ts_us_long").alias("t")
     )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("t") > F.col("click_us"))
-        .groupBy("user_id")
-        .agg(F.min("t").alias("purchase_us"))
-    )
+
+
+def _funnel_detail(spark: SparkSession, sf_dir: str, gap_us: int | None = None) -> DataFrame:
+    """Per-user funnel detail: every user with the first timestamp of
+    each reached step and the stage count (0-3)."""
+    ev = _funnel_events(spark, sf_dir)
+    v, c, p = _funnel_stages(ev, gap_us)
     stage = (
         F.when(F.col("purchase_us").isNotNull(), 3)
         .when(F.col("click_us").isNotNull(), 2)
@@ -102,7 +124,8 @@ def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
     )
     return (
-        users.join(v, "user_id", "left")
+        ev.select("user_id").distinct()
+        .join(v, "user_id", "left")
         .join(c, "user_id", "left")
         .join(p, "user_id", "left")
         .select(
@@ -1335,55 +1358,7 @@ def funnel_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict attribution-window reading both engines replay identically).
     At 100 TB the bound also prunes: each step's join probe filters to
     a 7-day band instead of all later history."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.col("ts_us_long").alias("t")
-    )
-    users = ev.select("user_id").distinct()
-    # One-compute boundaries (r10, guide §2.4): same shape as funnel_steps
-    # — v and c each feed the next step AND the final left-join cascade.
-    v = one_compute_boundary(
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("t").alias("view_us"))
-    )
-    c = one_compute_boundary(
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(
-            (F.col("t") > F.col("view_us"))
-            & (F.col("t") <= F.col("view_us") + _FUNNEL_GAP_US)
-        )
-        .groupBy("user_id")
-        .agg(F.min("t").alias("click_us"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(
-            (F.col("t") > F.col("click_us"))
-            & (F.col("t") <= F.col("click_us") + _FUNNEL_GAP_US)
-        )
-        .groupBy("user_id")
-        .agg(F.min("t").alias("purchase_us"))
-    )
-    stage = (
-        F.when(F.col("purchase_us").isNotNull(), 3)
-        .when(F.col("click_us").isNotNull(), 2)
-        .when(F.col("view_us").isNotNull(), 1)
-        .otherwise(0)
-    )
-    return (
-        users.join(v, "user_id", "left")
-        .join(c, "user_id", "left")
-        .join(p, "user_id", "left")
-        .select(
-            "user_id",
-            "view_us",
-            "click_us",
-            "purchase_us",
-            stage.cast("int").alias("funnel_stage"),
-        )
-    )
+    return _funnel_detail(spark, sf_dir, _FUNNEL_GAP_US)
 
 
 _COHORT_LTV_ORACLE = """
@@ -2005,36 +1980,8 @@ def analytics_funnel_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcasts, zero wide shuffles beyond the cascade itself.
     Ratios are single float expressions over exact int counts with the
     zero-denominator guard identical on both sides."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.col("ts_us_long").alias("t")
-    )
-    # One-compute boundaries (r10, guide §2.4): v and c each feed the next
-    # step AND a count branch (same shape as funnel_steps).
-    v = one_compute_boundary(
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("t").alias("view_us"))
-    )
-    c = one_compute_boundary(
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(
-            (F.col("t") > F.col("view_us"))
-            & (F.col("t") <= F.col("view_us") + _FUNNEL_GAP_US)
-        )
-        .groupBy("user_id")
-        .agg(F.min("t").alias("click_us"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(
-            (F.col("t") > F.col("click_us"))
-            & (F.col("t") <= F.col("click_us") + _FUNNEL_GAP_US)
-        )
-        .groupBy("user_id")
-        .agg(F.min("t").alias("purchase_us"))
-    )
+    ev = _funnel_events(spark, sf_dir)
+    v, c, p = _funnel_stages(ev, _FUNNEL_GAP_US)
     counts = (
         ev.select("user_id").distinct().agg(F.count("*").alias("n_total"))
         .crossJoin(F.broadcast(v.agg(F.count("*").alias("n_view"))))
@@ -2347,6 +2294,26 @@ def analytics_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MEDIAN_BKT_W = 100_000  # cents per value bucket (~$1000)
 
+
+def _price_histogram(spark: SparkSession, sf_dir: str):
+    """Phase 1 of the two-phase selection over lineitem extendedprice
+    cents: ``(base, cum, nrow)`` — every row's (cents, bucket), the
+    value-bucket histogram with each bucket's cumulative count ``cum``
+    and the count before it ``cum_prev``, and the 1-row total ``n``."""
+    li = load_table(spark, sf_dir, "lineitem")
+    base = li.select(
+        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long").alias("cents")
+    ).withColumn("bucket", F.expr(f"cents div {_MEDIAN_BKT_W}"))
+    hist = base.groupBy("bucket").agg(F.count("*").alias("cnt"))
+    cw = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    cum = hist.select(
+        "bucket",
+        "cnt",
+        F.sum("cnt").over(cw).alias("cum"),
+    ).withColumn("cum_prev", F.col("cum") - F.col("cnt"))
+    return base, cum, base.agg(F.count("*").alias("n"))
+
+
 _MEDIAN_ORACLE = """
     SELECT CAST(count(*) AS BIGINT) AS n,
            CAST(floor(2 * median(CAST(floor(l_extendedprice * 100 + 0.5)
@@ -2372,18 +2339,7 @@ def agg_median_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (lower+upper rank values are fetched separately and
     weight-summed). The rank dim is ≤2 rows; its containment probe
     against the ~100-row histogram is a deliberately tiny BNLJ."""
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.select(
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long").alias("cents")
-    ).withColumn("bucket", F.expr(f"cents div {_MEDIAN_BKT_W}"))
-    hist = base.groupBy("bucket").agg(F.count("*").alias("cnt"))
-    cw = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.select(
-        "bucket",
-        "cnt",
-        F.sum("cnt").over(cw).alias("cum"),
-    ).withColumn("cum_prev", F.col("cum") - F.col("cnt"))
-    nrow = base.agg(F.count("*").alias("n"))
+    base, cum, nrow = _price_histogram(spark, sf_dir)
     ranks = (
         nrow.select(
             "n",
@@ -2445,17 +2401,7 @@ def agg_quantiles_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram is domain-bounded, the phase-2 sort is bucket-bounded,
     and adding quantiles adds broadcast rows, not passes. The oracle
     recomputes every rank independently via a full row_number."""
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.select(
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long").alias("cents")
-    ).withColumn("bucket", F.expr(f"cents div {_MEDIAN_BKT_W}"))
-    hist = base.groupBy("bucket").agg(F.count("*").alias("cnt"))
-    cw = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    cum = (
-        hist.select("bucket", "cnt", F.sum("cnt").over(cw).alias("cum"))
-        .withColumn("cum_prev", F.col("cum") - F.col("cnt"))
-    )
-    nrow = base.agg(F.count("*").alias("n"))
+    base, cum, nrow = _price_histogram(spark, sf_dir)
     ranks = nrow.select(
         "n",
         F.explode(F.array(*[F.lit(p) for p in _QUANTILES_PCTS])).alias("pct"),

@@ -98,6 +98,28 @@ def _shingle_sets(d: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard_truth(sets_df: DataFrame) -> DataFrame:
+    """Exact truth for the MinHash gauges: the (id_a < id_b) pairs of
+    ``sets_df`` (doc_id, shingle set ``sh``) with shingle Jaccard ≥
+    ``_JACCARD_THRESHOLD``, through the `dedup_ngram_jaccard` SSJoin
+    inverted-index shape: postings ship (shingle, id, size) ints, the
+    size-ratio bound prunes before the count, never an all-pairs join."""
+    t = _JACCARD_THRESHOLD
+    ex = sets_df.select("doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s"))
+    a = ex.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"), "s")
+    b = ex.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"), "s")
+    shared = a.join(b, "s").filter(
+        (F.col("id_a") < F.col("id_b"))
+        & (F.col("sz_a") >= t * F.col("sz_b"))
+        & (F.col("sz_b") >= t * F.col("sz_a"))
+    )
+    counts = shared.groupBy("id_a", "id_b", "sz_a", "sz_b").agg(
+        F.count("*").alias("c")
+    )
+    jac = F.col("c") / (F.col("sz_a") + F.col("sz_b") - F.col("c"))
+    return counts.filter(jac >= t).select("id_a", "id_b")
+
+
 def minhash_signatures(d: DataFrame, sets: DataFrame | None = None) -> DataFrame:
     """32 minhash values per doc: explode shingles once, hash once, then
     32 min-aggregates in a single shuffle. Pass a (cached) ``sets``
@@ -1241,23 +1263,10 @@ def _register_minhash_recall() -> None:
         feeds truth and signatures (one boundary — 2 consumers); counts
         collapse to one row via the 1-row-broadcast-cross pattern; ratios
         integer-quantized (§5.4)."""
-        t = _JACCARD_THRESHOLD
         d = load_table(spark, sf_dir, "documents")
         sets_df = _shingle_sets(d).transform(one_compute_boundary)
         pred = lsh_candidate_pairs_raw(minhash_signatures_portable(sets_df))
-        ex = sets_df.select("doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s"))
-        a = ex.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"), "s")
-        b = ex.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"), "s")
-        shared = a.join(b, "s").filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("sz_a") >= t * F.col("sz_b"))
-            & (F.col("sz_b") >= t * F.col("sz_a"))
-        )
-        counts = shared.groupBy("id_a", "id_b", "sz_a", "sz_b").agg(
-            F.count("*").alias("c")
-        )
-        jac = F.col("c") / (F.col("sz_a") + F.col("sz_b") - F.col("c"))
-        truth = counts.filter(jac >= t).select("id_a", "id_b")
+        truth = _jaccard_truth(sets_df)
         # shared 1-row confusion reduce — one implementation for every
         # calibration gauge (was a hand-kept copy of this block)
         from gvcf_hbase_spark.operators.similarity import _confusion_row
@@ -1502,25 +1511,10 @@ def _register_minhash_band_sweep() -> None:
         1-row-broadcast-cross pattern; ratios integer-quantized (§5.4)."""
         from gvcf_hbase_spark.operators.similarity import _confusion_row
 
-        t = _JACCARD_THRESHOLD
         d = load_table(spark, sf_dir, "documents")
         sets_df = _shingle_sets(d).transform(one_compute_boundary)
         sigs = minhash_signatures_portable(sets_df).transform(one_compute_boundary)
-        ex = sets_df.select(
-            "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s")
-        )
-        a = ex.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"), "s")
-        b = ex.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"), "s")
-        shared = a.join(b, "s").filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("sz_a") >= t * F.col("sz_b"))
-            & (F.col("sz_b") >= t * F.col("sz_a"))
-        )
-        counts = shared.groupBy("id_a", "id_b", "sz_a", "sz_b").agg(
-            F.count("*").alias("c")
-        )
-        jac = F.col("c") / (F.col("sz_a") + F.col("sz_b") - F.col("c"))
-        truth = one_compute_boundary(counts.filter(jac >= t).select("id_a", "id_b"))
+        truth = one_compute_boundary(_jaccard_truth(sets_df))
 
         out = None
         for nb, r in _BAND_SWEEP_GRID:

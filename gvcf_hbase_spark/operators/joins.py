@@ -324,6 +324,27 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber", "o_orderdate", "l_shipdate")
 
 
+def _purchase_signup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each purchase with the latest prior (or same-instant) signup of the
+    same user: (purchase_id, user_id, purchase_ts_us, signup_ts_us)."""
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts_us_long"
+    )
+    signups = ev.filter(F.col("event_type") == "signup").select(
+        "user_id", F.col("ts_us_long").alias("signup_ts_us")
+    )
+    out = asof_join(
+        purchases, signups, on="user_id", left_ts="ts_us_long", right_ts="signup_ts_us"
+    )
+    return out.select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.col("ts_us_long").alias("purchase_ts_us"),
+        "signup_ts_us",
+    )
+
+
 @register(
     "join_asof",
     oracle="""
@@ -341,22 +362,7 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     'which block is open at this position' lookup, per sample. Built on
     the generic :func:`asof_join` operator (union-tag + carry-forward
     window: one shuffle on user_id, no pair explosion on hot users)."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts_us_long"
-    )
-    signups = ev.filter(F.col("event_type") == "signup").select(
-        "user_id", F.col("ts_us_long").alias("signup_ts_us")
-    )
-    out = asof_join(
-        purchases, signups, on="user_id", left_ts="ts_us_long", right_ts="signup_ts_us"
-    )
-    return out.select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts_us_long").alias("purchase_ts_us"),
-        "signup_ts_us",
-    )
+    return _purchase_signup_asof(spark, sf_dir)
 
 
 @register(
@@ -585,22 +591,9 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     reading: a reference block match is only valid within its declared
     span — tolerance is how an open-ended carry-forward gets an
     expiry."""
-    ev = load_table(spark, sf_dir, "events")
     tol_us = 86_400_000_000  # 24 h
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts_us_long"
-    )
-    signups = ev.filter(F.col("event_type") == "signup").select(
-        "user_id", F.col("ts_us_long").alias("signup_ts_us")
-    )
-    out = asof_join(
-        purchases, signups, on="user_id", left_ts="ts_us_long", right_ts="signup_ts_us"
-    )
-    return out.filter(F.col("ts_us_long") - F.col("signup_ts_us") <= tol_us).select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts_us_long").alias("purchase_ts_us"),
-        "signup_ts_us",
+    return _purchase_signup_asof(spark, sf_dir).filter(
+        F.col("purchase_ts_us") - F.col("signup_ts_us") <= tol_us
     )
 
 

@@ -34,6 +34,24 @@ _FUZZY_ORACLE = """
 """
 
 
+def _name_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked candidates customer↔supplier: the equi-join on the
+    ``nationkey`` blocking key, each side carrying its name identifier
+    (the 9-digit suffix after the fixed ``Customer#``/``Supplier#``
+    prefix) as ``c_id`` / ``s_id``."""
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey",
+        F.col("c_nationkey").alias("nk"),
+        F.substring("c_name", 10, 100).alias("c_id"),
+    )
+    s = load_table(spark, sf_dir, "supplier").select(
+        "s_suppkey",
+        F.col("s_nationkey").alias("nk"),
+        F.substring("s_name", 10, 100).alias("s_id"),
+    )
+    return c.join(s, "nk")
+
+
 @register("join_fuzzy_levenshtein", oracle=_FUZZY_ORACLE, tags=("linkage", "join"))
 def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy join customer↔supplier: block on ``nationkey``
@@ -47,19 +65,9 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     same metric with DuckDB's independent ``levenshtein`` — definition
     cross-checked, not mirrored.
     """
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("nk"),
-        F.substring("c_name", 10, 100).alias("c_id"),
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        F.col("s_nationkey").alias("nk"),
-        F.substring("s_name", 10, 100).alias("s_id"),
-    )
     dist = F.levenshtein("c_id", "s_id")
     return (
-        c.join(s, "nk")
+        _name_blocks(spark, sf_dir)
         .filter(dist <= 1)
         .select("c_custkey", "s_suppkey", dist.cast("int").alias("name_dist"))
     )
@@ -95,17 +103,7 @@ def linkage_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER the argmin (reject-then-rank would change semantics: a
     customer whose best match is rejected must emit nothing, not its
     second-best)."""
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("nk"),
-        F.substring("c_name", 10, 100).alias("c_id"),
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        F.col("s_nationkey").alias("nk"),
-        F.substring("s_name", 10, 100).alias("s_id"),
-    )
-    cand = c.join(s, "nk").select(
+    cand = _name_blocks(spark, sf_dir).select(
         "c_custkey", "s_suppkey", F.levenshtein("c_id", "s_id").alias("d")
     )
     w = Window.partitionBy("c_custkey").orderBy("d", "s_suppkey")

@@ -718,6 +718,23 @@ _CHUNK_DEDUP_ORACLE = f"""
 """
 
 
+def _chunk_dup_ratio(chunks: DataFrame) -> DataFrame:
+    """Per-source chunk dedup report over (source, chunk_hash) rows: the
+    per-hash count (map-side combined), then the per-source rollup of
+    chunks, distinct chunks, duplicates and the quantized dup ratio."""
+    per_hash = chunks.groupBy("source", "chunk_hash").agg(F.count("*").alias("k"))
+    return per_hash.groupBy("source").agg(
+        F.sum("k").cast("bigint").alias("n_chunks"),
+        F.count("*").cast("bigint").alias("n_distinct"),
+        (F.sum("k") - F.count("*")).cast("bigint").alias("n_dup"),
+        F.floor(
+            (F.sum("k") - F.count("*")) * 1_000_000.0 / F.sum("k") + F.lit(0.5)
+        )
+        .cast("bigint")
+        .alias("dup_ratio_1e6"),
+    )
+
+
 @register("multimodal_chunk_dedup", oracle=_CHUNK_DEDUP_ORACLE, tags=("multimodal", "dedup"))
 def multimodal_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-level storage deduplication over opaque binary payloads:
@@ -753,17 +770,7 @@ def multimodal_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"substring(payload, (i - 1) * {_CHUNK_LEN} + 1, {_CHUNK_LEN})")
         ).alias("chunk_hash"),
     )
-    per_hash = chunks.groupBy("source", "chunk_hash").agg(F.count("*").alias("k"))
-    return per_hash.groupBy("source").agg(
-        F.sum("k").cast("bigint").alias("n_chunks"),
-        F.count("*").cast("bigint").alias("n_distinct"),
-        (F.sum("k") - F.count("*")).cast("bigint").alias("n_dup"),
-        F.floor(
-            (F.sum("k") - F.count("*")) * 1_000_000.0 / F.sum("k") + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("dup_ratio_1e6"),
-    )
+    return _chunk_dup_ratio(chunks)
 
 
 _CDC_MASK_BITS = 6  # 6 test bits => boundary prob 1/64 => mean chunk ~64 B
@@ -885,21 +892,7 @@ def multimodal_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield pd.DataFrame({"source": srcs, "chunk_hash": hashes})
 
     chunks = wp.mapInPandas(gen, "source string, chunk_hash string")
-    per_hash = chunks.groupBy("source", "chunk_hash").agg(F.count("*").alias("k"))
-    return (
-        per_hash.groupBy("source")
-        .agg(
-            F.sum("k").cast("bigint").alias("n_chunks"),
-            F.count("*").cast("bigint").alias("n_distinct"),
-            (F.sum("k") - F.count("*")).cast("bigint").alias("n_dup"),
-            F.floor(
-                (F.sum("k") - F.count("*")) * 1_000_000.0 / F.sum("k") + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("dup_ratio_1e6"),
-        )
-        .orderBy("source")
-    )
+    return _chunk_dup_ratio(chunks).orderBy("source")
 
 
 _SHARD_BUDGET = 8_192  # bytes per training shard (soft cap)

@@ -374,7 +374,6 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     depth = _lsh_planes_for(e.count())  # 1-row scalar probe (dispatch posture)
     planes = _planes_all[:, :depth, :]
-    threshold = _COS_PAIR_THRESHOLD
 
     def bucketize(batches):
         flat = planes.reshape(-1, planes.shape[2])
@@ -403,6 +402,23 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = spread(e).mapInPandas(
         bucketize, "vec_id bigint, t int, bucket int, emb array<double>"
     )
+    return (
+        banded.groupBy("t", "bucket")
+        .applyInPandas(
+            _pair_scorer(_COS_PAIR_THRESHOLD), "id_a bigint, id_b bigint, cos_sim double"
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _pair_scorer(threshold: float):
+    """applyInPandas scorer for one LSH bucket or IVF cell of
+    (vec_id, emb) rows: every id-ordered pair (id_a < id_b) whose 6dp
+    cosine is ≥ ``threshold``, as (id_a, id_b, cos_sim). Members sort by
+    id and ≤1024-row chunks score against the id-later remainder, so task
+    memory stays bounded however large the group. A factory, not a
+    module-level function, so cloudpickle ships the scorer by value and
+    the Python workers import no package module."""
     empty = pd.DataFrame(
         {
             "id_a": pd.Series(dtype="int64"),
@@ -411,12 +427,12 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
 
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return empty
         ids = pdf["vec_id"].to_numpy(dtype="int64")
         m = np.stack([np.asarray(v, dtype="float64") for v in pdf["emb"]])
-        order = np.argsort(ids)
+        order = np.argsort(ids)  # id-ascending: row i pairs only with j > i
         ids, m = ids[order], m[order]
         mn = m / np.linalg.norm(m, axis=1, keepdims=True)
         out_a, out_b, out_s = [], [], []
@@ -424,6 +440,8 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         for st in range(0, len(ids) - 1, chunk):
             en = min(st + chunk, len(ids))
             s = np.round(mn[st:en] @ mn[st + 1 :].T, 6)
+            # upper triangle: row i (global st+i) pairs with cols st+1+j
+            # where j >= i  <=>  col index >= row's own position
             ii, jj = np.nonzero(s >= threshold)
             keep = jj >= ii
             ii, jj = ii[keep], jj[keep]
@@ -440,11 +458,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return (
-        banded.groupBy("t", "bucket")
-        .applyInPandas(bucket_pairs, "id_a bigint, id_b bigint, cos_sim double")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return pairs
 
 
 def _pair_cos_np(va: pd.Series, vb: pd.Series) -> pd.Series:
@@ -541,49 +555,11 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = spread(e).mapInPandas(
         _cell_assigner(cent, _IVF_PROBE), "vec_id bigint, cell int, emb array<double>"
     )
-    empty = pd.DataFrame(
-        {
-            "id_a": pd.Series(dtype="int64"),
-            "id_b": pd.Series(dtype="int64"),
-            "cos_sim": pd.Series(dtype="float64"),
-        }
-    )
-    threshold = _COS_PAIR_THRESHOLD
-
-    def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return empty
-        ids = pdf["vec_id"].to_numpy(dtype="int64")
-        m = np.stack([np.asarray(v, dtype="float64") for v in pdf["emb"]])
-        order = np.argsort(ids)  # id-ascending: row i pairs only with j > i
-        ids, m = ids[order], m[order]
-        mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-        out_a, out_b, out_s = [], [], []
-        chunk = max(1, min(1024, 8_000_000 // len(ids)))
-        for st in range(0, len(ids) - 1, chunk):
-            en = min(st + chunk, len(ids))
-            s = np.round(mn[st:en] @ mn[st + 1 :].T, 6)
-            # upper triangle: row i (global st+i) pairs with cols st+1+j
-            # where j >= i  <=>  col index >= row's own position
-            ii, jj = np.nonzero(s >= threshold)
-            keep = jj >= ii
-            ii, jj = ii[keep], jj[keep]
-            out_a.append(ids[st + ii])
-            out_b.append(ids[st + 1 + jj])
-            out_s.append(s[ii, jj])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos_sim": np.concatenate(out_s),
-            }
-        )
-
     return (
         assigned.groupBy("cell")
-        .applyInPandas(cell_pairs, "id_a bigint, id_b bigint, cos_sim double")
+        .applyInPandas(
+            _pair_scorer(_COS_PAIR_THRESHOLD), "id_a bigint, id_b bigint, cos_sim double"
+        )
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -1826,6 +1802,42 @@ def _hnsw_level(vec_id: int) -> int:
     return int(-math.log(u) / math.log(_HNSW_M))
 
 
+def _hnsw_beam(
+    q: np.ndarray, start: int, ef: int, lev: int, adj, xn, ids
+) -> list[tuple[float, int]]:
+    """Best-first search at one level of a shard graph (``adj`` as built
+    by :func:`_hnsw_build`); returns [(sim, row)] sorted (sim desc, id
+    asc), at most ef entries."""
+    import heapq
+
+    visited = {start}
+    s0 = float(q @ xn[start])
+    # candidates: max-heap by sim (store negative); results: the ef best
+    cand = [(-s0, int(ids[start]), start)]
+    res = [(s0, int(ids[start]), start)]
+    worst = s0
+    while cand:
+        negs, _, c = heapq.heappop(cand)
+        if -negs < worst and len(res) >= ef:
+            break
+        nbrs = adj.get(lev, {}).get(c, ())
+        fresh = [b for b in nbrs if b not in visited]
+        if not fresh:
+            continue
+        visited.update(fresh)
+        sims = xn[fresh] @ q
+        for b, s in zip(fresh, sims):
+            s = float(s)
+            if len(res) < ef or s > worst:
+                heapq.heappush(cand, (-s, int(ids[b]), int(b)))
+                res.append((s, int(ids[b]), int(b)))
+                # keep res as the ef best (sim desc, id asc)
+                res.sort(key=lambda t: (-t[0], t[1]))
+                del res[ef:]
+                worst = res[-1][0] if len(res) >= ef else -2.0
+    return [(s, b) for s, _, b in res]
+
+
 def _hnsw_build(ids: np.ndarray, xn: np.ndarray):
     """Sequential HNSW construction over one shard (ids ASCENDING for
     determinism; xn L2-normalized). Returns (levels, adj, entry) where
@@ -1838,38 +1850,6 @@ def _hnsw_build(ids: np.ndarray, xn: np.ndarray):
     for lev in range(entry_lev + 1):
         adj.setdefault(lev, {})[0] = empty
 
-    def beam(q: np.ndarray, start: int, ef: int, lev: int) -> list[tuple[float, int]]:
-        """Best-first search at one level; returns [(sim, row)] sorted
-        (sim desc, id asc), at most ef entries."""
-        import heapq
-
-        visited = {start}
-        s0 = float(q @ xn[start])
-        # candidates: max-heap by sim (store negative); results: the ef best
-        cand = [(-s0, int(ids[start]), start)]
-        res = [(s0, int(ids[start]), start)]
-        worst = s0
-        while cand:
-            negs, _, c = heapq.heappop(cand)
-            if -negs < worst and len(res) >= ef:
-                break
-            nbrs = adj.get(lev, {}).get(c, empty)
-            fresh = [b for b in nbrs if b not in visited]
-            if not fresh:
-                continue
-            visited.update(fresh)
-            sims = xn[fresh] @ q
-            for b, s in zip(fresh, sims):
-                s = float(s)
-                if len(res) < ef or s > worst:
-                    heapq.heappush(cand, (-s, int(ids[b]), int(b)))
-                    res.append((s, int(ids[b]), int(b)))
-                    # keep res as the ef best (sim desc, id asc)
-                    res.sort(key=lambda t: (-t[0], t[1]))
-                    del res[ef:]
-                    worst = res[-1][0] if len(res) >= ef else -2.0
-        return [(s, b) for s, _, b in res]
-
     for i in range(1, n):
         q = xn[i]
         li = int(levels[i])
@@ -1878,9 +1858,9 @@ def _hnsw_build(ids: np.ndarray, xn: np.ndarray):
         cur = entry
         for lev in range(entry_lev, li, -1):  # greedy descent above li
             if lev in adj:
-                cur = beam(q, cur, 1, lev)[0][1]
+                cur = _hnsw_beam(q, cur, 1, lev, adj, xn, ids)[0][1]
         for lev in range(min(li, entry_lev), -1, -1):
-            found = beam(q, cur, _HNSW_EFC, lev)
+            found = _hnsw_beam(q, cur, _HNSW_EFC, lev, adj, xn, ids)
             mmax = _HNSW_M * 2 if lev == 0 else _HNSW_M
             chosen = [b for _, b in found[:_HNSW_M]]
             adj[lev][i] = np.array(chosen, dtype="int64")
@@ -1902,8 +1882,6 @@ def _hnsw_search(
     q: np.ndarray, ids, xn, adj, entry: int, entry_lev: int, k: int
 ) -> list[tuple[float, int]]:
     """Greedy descent + layer-0 beam; returns [(sim, row)] top-k."""
-    import heapq
-
     empty = np.empty(0, dtype="int64")
 
     def greedy(cur: int, lev: int) -> int:
@@ -1921,31 +1899,7 @@ def _hnsw_search(
     cur = entry
     for lev in range(entry_lev, 0, -1):
         cur = greedy(cur, lev)
-    visited = {cur}
-    s0 = float(q @ xn[cur])
-    cand = [(-s0, int(ids[cur]), cur)]
-    res = [(s0, int(ids[cur]), cur)]
-    worst = s0
-    ef = max(_HNSW_EFS, k)
-    while cand:
-        negs, _, c = heapq.heappop(cand)
-        if -negs < worst and len(res) >= ef:
-            break
-        nbrs = adj.get(0, {}).get(c, empty)
-        fresh = [b for b in nbrs if b not in visited]
-        if not fresh:
-            continue
-        visited.update(fresh)
-        sims = xn[fresh] @ q
-        for b, s in zip(fresh, sims):
-            s = float(s)
-            if len(res) < ef or s > worst:
-                heapq.heappush(cand, (-s, int(ids[b]), int(b)))
-                res.append((s, int(ids[b]), int(b)))
-                res.sort(key=lambda t: (-t[0], t[1]))
-                del res[ef:]
-                worst = res[-1][0] if len(res) >= ef else -2.0
-    return [(s, b) for s, _, b in res[:k]]
+    return _hnsw_beam(q, cur, max(_HNSW_EFS, k), 0, adj, xn, ids)[:k]
 
 
 @register("sim_ann_hnsw", oracle=None, tags=("similarity", "ann"))

@@ -130,6 +130,35 @@ _LANG_SCORE_SQL = ",\n".join(
     for lang, ws in STOPWORDS.items()
 )
 
+
+def _lang_vote():
+    """The stopword-lexicon language vote over ``text``: ``(scores,
+    pred)``, the per-language hit counts ``s_<lang>`` to select and the
+    prediction over those selected columns — argmax with a fixed
+    precedence order (en > de > es > fr) so ties are deterministic on
+    both engines, 'unknown' with no hit. Pure expressions — no UDF."""
+    toks = tokens(F.lower(F.col("text")))
+
+    def _in_list(ws):
+        # closure factory: F.filter inspects lambda arity, so the word
+        # list must not appear as a second parameter
+        return lambda t: t.isin(ws)
+
+    scores = [
+        F.size(F.filter(toks, _in_list(ws))).alias(f"s_{lang}")
+        for lang, ws in STOPWORDS.items()
+    ]
+    best = F.greatest(*[F.col(f"s_{lang}") for lang in STOPWORDS])
+    pred = (
+        F.when(best == 0, "unknown")
+        .when(F.col("s_en") >= F.greatest("s_de", "s_es", "s_fr"), "en")
+        .when(F.col("s_de") >= F.greatest("s_es", "s_fr"), "de")
+        .when(F.col("s_es") >= F.col("s_fr"), "es")
+        .otherwise("fr")
+    )
+    return scores, pred
+
+
 @register(
     "text_lang_id",
     oracle=f"""
@@ -152,23 +181,8 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexicon language-ID heuristic: count stopword hits per language,
     argmax with a fixed precedence order (en > de > es > fr) so ties are
     deterministic on both engines. Pure expressions — no UDF."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.lower(F.col("text")))
-    def _in_list(ws):
-        # closure factory: F.filter inspects lambda arity, so the word
-        # list must not appear as a second parameter
-        return lambda t: t.isin(ws)
-
-    scores = {lang: F.size(F.filter(toks, _in_list(ws))) for lang, ws in STOPWORDS.items()}
-    s = d.select("doc_id", *[scores[lang].alias(f"s_{lang}") for lang in STOPWORDS])
-    best = F.greatest(*[F.col(f"s_{lang}") for lang in STOPWORDS])
-    pred = (
-        F.when(best == 0, "unknown")
-        .when(F.col("s_en") >= F.greatest("s_de", "s_es", "s_fr"), "en")
-        .when(F.col("s_de") >= F.greatest("s_es", "s_fr"), "de")
-        .when(F.col("s_es") >= F.col("s_fr"), "es")
-        .otherwise("fr")
-    )
+    scores, pred = _lang_vote()
+    s = load_table(spark, sf_dir, "documents").select("doc_id", *scores)
     return s.withColumn("lang_pred", pred)
 
 
@@ -1091,24 +1105,9 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     #langs²-key aggregate; the per-language totals re-aggregate the
     CELLS (≤ #langs² rows), never the corpus, and join back broadcast.
     Integer-quantized shares (§5.4)."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.lower(F.col("text")))
-
-    def _in_list(ws):
-        return lambda t: t.isin(ws)
-
-    scores = {lang: F.size(F.filter(toks, _in_list(ws))) for lang, ws in STOPWORDS.items()}
-    s = d.select(
-        F.col("lang").alias("true_lang"),
-        *[scores[lang].alias(f"s_{lang}") for lang in STOPWORDS],
-    )
-    best = F.greatest(*[F.col(f"s_{lang}") for lang in STOPWORDS])
-    pred = (
-        F.when(best == 0, "unknown")
-        .when(F.col("s_en") >= F.greatest("s_de", "s_es", "s_fr"), "en")
-        .when(F.col("s_de") >= F.greatest("s_es", "s_fr"), "de")
-        .when(F.col("s_es") >= F.col("s_fr"), "es")
-        .otherwise("fr")
+    scores, pred = _lang_vote()
+    s = load_table(spark, sf_dir, "documents").select(
+        F.col("lang").alias("true_lang"), *scores
     )
     cells = (
         s.select("true_lang", pred.alias("pred_lang"))
@@ -1174,29 +1173,12 @@ def curate_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     One pass over text, collapsing straight to #languages rows with
     map-side partials; sums are exact int64 and only the two reported
     ratios quantize (shared §5.4 floor convention)."""
-    d = load_table(spark, sf_dir, "documents")
-    toks_lower = tokens(F.lower(F.col("text")))
-
-    def _in_list(ws):
-        return lambda t: t.isin(ws)
-
-    scores = {
-        lang: F.size(F.filter(toks_lower, _in_list(ws)))
-        for lang, ws in STOPWORDS.items()
-    }
-    s = d.select(
+    scores, pred = _lang_vote()
+    s = load_table(spark, sf_dir, "documents").select(
         F.size(tokens(F.col("text"))).cast("bigint").alias("ws"),
         F.regexp_count("text", F.lit("[a-z]+|[0-9]+")).cast("bigint").alias("re"),
         F.length("text").cast("bigint").alias("ch"),
-        *[scores[lang].alias(f"s_{lang}") for lang in STOPWORDS],
-    )
-    best = F.greatest(*[F.col(f"s_{lang}") for lang in STOPWORDS])
-    pred = (
-        F.when(best == 0, "unknown")
-        .when(F.col("s_en") >= F.greatest("s_de", "s_es", "s_fr"), "en")
-        .when(F.col("s_de") >= F.greatest("s_es", "s_fr"), "de")
-        .when(F.col("s_es") >= F.col("s_fr"), "es")
-        .otherwise("fr")
+        *scores,
     )
     return (
         s.select(pred.alias("lang_pred"), "ws", "re", "ch")

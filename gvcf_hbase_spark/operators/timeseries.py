@@ -1530,6 +1530,22 @@ def ts_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_US_DAY = 86_400_000_000
+
+
+def _lttb_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The LTTB input: every event as a point of its ``event_type``
+    series — ``day`` bucket, time ``t_us``, tie-break ``event_id`` and the
+    value ``v`` in integer cents."""
+    return load_table(spark, sf_dir, "events").select(
+        "event_type",
+        F.expr(f"ts_us_long div {_US_DAY}").alias("day"),
+        F.col("ts_us_long").alias("t_us"),
+        "event_id",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+    )
+
+
 _LTTB_ORACLE = f"""
     WITH pts AS (
       SELECT event_type,
@@ -1600,22 +1616,14 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     their own grouping key, one bounded per-bucket argmax window.
     Cross-products run in doubles (exactly-rounded mults — int64 would
     overflow at µs×cents magnitudes; SURVEY §5.4 IEEE discipline)."""
-    ev = load_table(spark, sf_dir, "events")
-    us_day = 86_400_000_000
-    pts = ev.select(
-        "event_type",
-        F.expr(f"ts_us_long div {us_day}").alias("day"),
-        F.col("ts_us_long").alias("t_us"),
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-    )
+    pts = _lttb_points(spark, sf_dir)
     # Bucket-average time as day_start + mean(in-day offset), NOT
     # mean(absolute epoch): summing absolute epoch-µs (~1.7e15 each)
     # int64-overflows once a bucket holds ~5400+ rows — hit at the sf1
     # gate (r08). Offsets are < 8.64e10, so the sum stays exact past 1e8
     # rows/bucket; the oracle applies the IDENTICAL reassociated formula
     # so the double `at` stays bit-equal cross-engine.
-    off = F.col("t_us") - F.col("day") * F.lit(us_day)
+    off = F.col("t_us") - F.col("day") * F.lit(_US_DAY)
     b = (
         pts.groupBy("event_type", "day")
         .agg(
@@ -1625,7 +1633,7 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "day",
-            ((F.col("day") * F.lit(us_day)).cast("double") + F.col("at_off")).alias("at"),
+            ((F.col("day") * F.lit(_US_DAY)).cast("double") + F.col("at_off")).alias("at"),
             "av",
         )
     )
@@ -1776,15 +1784,7 @@ def ts_downsample_lttb_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as in the paper (and the parallel twin)."""
     import pandas as pd
 
-    ev = load_table(spark, sf_dir, "events")
-    us_day = 86_400_000_000
-    pts = ev.select(
-        "event_type",
-        F.expr(f"ts_us_long div {us_day}").alias("day"),
-        F.col("ts_us_long").alias("t_us"),
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-    )
+    pts = _lttb_points(spark, sf_dir)
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -1792,7 +1792,7 @@ def ts_downsample_lttb_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf = pdf.sort_values(["t_us", "event_id"], kind="mergesort")
         days = np.sort(pdf["day"].unique())
         first_day = int(days[0])
-        tt = (pdf["t_us"] - first_day * us_day).to_numpy(dtype="int64")
+        tt = (pdf["t_us"] - first_day * _US_DAY).to_numpy(dtype="int64")
         day = pdf["day"].to_numpy()
         t_us = pdf["t_us"].to_numpy(dtype="int64")
         v = pdf["v"].to_numpy(dtype="int64")
@@ -1835,6 +1835,22 @@ def ts_downsample_lttb_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pts.groupBy("event_type").applyInPandas(
         walk,
         "event_type string, day long, sel_t_us long, sel_v_cents long, kind string",
+    )
+
+
+def _day_means(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(event_type, day) mean value ``y`` in cents: exact int cent
+    sums over counts, the same IEEE double on both engines — the series a
+    day-grid recurrence walks."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .select(
+            "event_type",
+            F.expr(f"ts_us_long div {_US_DAY}").alias("day"),
+            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+        )
+        .groupBy("event_type", "day")
+        .agg((F.sum("v").cast("double") / F.count("*")).alias("y"))
     )
 
 
@@ -1900,17 +1916,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recurrence as a recursive CTE and outputs round to 4dp."""
     import pandas as pd
 
-    ev = load_table(spark, sf_dir, "events")
-    us_day = 86_400_000_000
-    d = (
-        ev.select(
-            "event_type",
-            F.expr(f"ts_us_long div {us_day}").alias("day"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-        )
-        .groupBy("event_type", "day")
-        .agg((F.sum("v").cast("double") / F.count("*")).alias("y"))
-    )
+    d = _day_means(spark, sf_dir)
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("day")
@@ -2000,17 +2006,7 @@ def ts_kalman_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`gvcf_coverage_depth`)."""
     import pandas as pd
 
-    ev = load_table(spark, sf_dir, "events")
-    us_day = 86_400_000_000
-    d = (
-        ev.select(
-            "event_type",
-            F.expr(f"ts_us_long div {us_day}").alias("day"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
-        )
-        .groupBy("event_type", "day")
-        .agg((F.sum("v").cast("double") / F.count("*")).alias("y"))
-    )
+    d = _day_means(spark, sf_dir)
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("day")

@@ -55,8 +55,14 @@ def one_compute_boundary(df: DataFrame) -> DataFrame:
     exchange reuse cannot dedupe (it reuses identical SHUFFLE exchanges
     only), or where a loop's lineage would otherwise grow every round.
 
-    Lazy: nothing executes until the query's own action, so bench clocks
-    stay honest. Local and unreplicated: the blocks live on the executors
+    Not fully lazy: ``eager=False`` defers only the checkpoint write. The
+    call itself runs ``physicalPlan.execute()``, which under AQE (the
+    engine turns it on) materializes every upstream query stage at call
+    time: a one-shuffle aggregate cut launches 1 job at the call with AQE
+    on and 0 with it off. Broadcast exchanges start their jobs at
+    ``execute()`` even without AQE. So a builder that cuts runs those
+    stages before it returns, and a clock that times only the query's
+    action misses them. Local and unreplicated: the blocks live on the executors
     and Spark's ContextCleaner drops them once the DataFrame is garbage,
     so nothing stays in the CacheManager for the session's life, as a
     ``persist`` would. The trade is fault tolerance: on a cluster a lost

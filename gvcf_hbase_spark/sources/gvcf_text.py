@@ -538,6 +538,24 @@ _GVCF_AF_ORACLE = r"""
 """
 
 
+def _allele_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fixture cohort's records expanded to one row per covered
+    position, each with its genotype's ``ploidy`` (GT arity, so haploid
+    and triploid rows need no special case) and ``alt_alleles`` (its '1'
+    entries), both parsed from GT by JVM split/filter — the input of
+    every site allele-count aggregate."""
+    from gvcf_hbase_spark.operators.gvcf import expand_blocks
+
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
+    gt_parts = F.split(F.col("gt"), "/")
+    return expand_blocks(
+        recs.withColumn("ploidy", F.size(gt_parts).cast("long")).withColumn(
+            "alt_alleles",
+            F.size(F.filter(gt_parts, lambda x: x == "1")).cast("long"),
+        )
+    )
+
+
 def _register_af_query() -> None:
     from gvcf_hbase_spark.registry import register
 
@@ -560,16 +578,7 @@ def _register_af_query() -> None:
         AN exact integers; only the final AF ratio is floated, floor-
         quantized under the shared §5.4 convention.
         """
-        from gvcf_hbase_spark.operators.gvcf import expand_blocks
-
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        gt_parts = F.split(F.col("gt"), "/")
-        pos = expand_blocks(
-            recs.withColumn("ploidy", F.size(gt_parts).cast("long")).withColumn(
-                "alt_alleles",
-                F.size(F.filter(gt_parts, lambda x: x == "1")).cast("long"),
-            )
-        )
+        pos = _allele_positions(spark, sf_dir)
         return (
             pos.groupBy("contig", "pos")
             .agg(
@@ -627,16 +636,7 @@ def _register_sfs_query() -> None:
         join here (both engine sides are exact integers; only the share
         ratio floats, floor-quantized under the shared §5.4 convention).
         """
-        from gvcf_hbase_spark.operators.gvcf import expand_blocks
-
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        gt_parts = F.split(F.col("gt"), "/")
-        pos = expand_blocks(
-            recs.withColumn("ploidy", F.size(gt_parts).cast("long")).withColumn(
-                "alt_alleles",
-                F.size(F.filter(gt_parts, lambda x: x == "1")).cast("long"),
-            )
-        )
+        pos = _allele_positions(spark, sf_dir)
         sites = (
             pos.groupBy("contig", "pos")
             .agg(
@@ -807,16 +807,7 @@ def _register_fst_query() -> None:
         are quantized to 1e-9 ints BEFORE the per-contig sum, so float
         summation order can't flip the hash; the final Fst quantizes the
         int-sum ratio."""
-        from gvcf_hbase_spark.operators.gvcf import expand_blocks
-
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        gt_parts = F.split(F.col("gt"), "/")
-        pos = expand_blocks(
-            recs.withColumn("ploidy", F.size(gt_parts).cast("long")).withColumn(
-                "alt_alleles",
-                F.size(F.filter(gt_parts, lambda x: x == "1")).cast("long"),
-            )
-        )
+        pos = _allele_positions(spark, sf_dir)
         g1 = F.col("sample_id").isin("s0", "s1")
         site = (
             pos.groupBy("contig", "pos")

@@ -231,6 +231,38 @@ def stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(joined, "append")
 
 
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases within 1 hour after
+    (inclusive band), both sides watermarked 2 hours so the state store
+    evicts a row once the band can no longer match."""
+    base = read_events_stream(spark, sf_dir)
+    clicks = (
+        base.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts_evt").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "2 hours")
+    )
+    purchases = (
+        base.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts_evt").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "2 hours")
+    )
+    return clicks.join(
+        purchases,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    )
+
+
 @register(
     "stream_join_stream",
     oracle="""
@@ -252,31 +284,9 @@ def stream_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate's matches — the watermark governs state eviction, not the
     result set — so under availableNow the output equals the batch
     theta join with the identical (inclusive) band predicate."""
-    base = read_events_stream(spark, sf_dir)
-    clicks = (
-        base.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts_evt").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
+    joined = _click_purchase_join(spark, sf_dir, "inner").select(
+        "click_id", "purchase_id", F.col("c_user").alias("user_id")
     )
-    purchases = (
-        base.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts_evt").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
     return run_available_now(joined, "append")
 
 
@@ -620,32 +630,9 @@ def stream_join_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     click state lives (band + watermark) and is dropped by the same
     eviction that triggers NULL emission — state is bounded by the
     traffic of the horizon, never the stream's history."""
-    base = read_events_stream(spark, sf_dir)
-    clicks = (
-        base.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts_evt").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
+    joined = _click_purchase_join(spark, sf_dir, "left_outer").select(
+        "click_id", F.col("c_user").alias("user_id"), "purchase_id"
     )
-    purchases = (
-        base.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts_evt").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    ).select("click_id", F.col("c_user").alias("user_id"), "purchase_id")
     return run_available_now(joined, "append")
 
 

@@ -3,7 +3,7 @@
 Same comparator discipline as scripts/driver_mirror.py (row count +
 sorted-column schema + order-insensitive value hash) but for a single
 key, so an operator edit can be verified in seconds instead of re-running
-the full 366-key mirror. Usage:
+the full mirror. Usage:
 
     python scripts/check_key.py <key> [sf_dir ...]
 """

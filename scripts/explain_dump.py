@@ -1,8 +1,9 @@
 """Dump `.explain("formatted")` for registered keys to one file per key.
 
 Used by the optimization rounds to snapshot before/after physical plans
-(plans/r{N}/<key>_before.txt / _after.txt). Planning only — nothing is
-executed, so this is safe to run while other jobs hold the machine.
+(plans/r{N}/<key>_before.txt / _after.txt). The returned plans are not
+run, but building a key runs its eager probes and the upstream stages its
+lineage cuts materialize (see session.one_compute_boundary).
 
 Usage: python scripts/explain_dump.py <out_dir> [suffix] [key ...]
   out_dir  directory to write <key><suffix>.txt files into

@@ -3,8 +3,9 @@
 Round-over-round plan regressions (an extra shuffle, a window losing its
 partitioning, a Python stage appearing in a JVM-only op) currently surface
 only if a targeted test in tests/test_plans.py happens to pin that key.
-This script makes the WHOLE inventory diffable: it plans (never executes)
-every non-streaming key at the given SF and writes a JSON map
+This script makes the WHOLE inventory diffable: it builds every
+non-streaming key at the given SF and digests the returned plan without
+running it, writing a JSON map
 
     key -> {xh, xr, x1, bc, sort, wscg, py, bnlj, cart}
 
@@ -18,7 +19,10 @@ every non-streaming key at the given SF and writes a JSON map
                 the allowlisted 1-row-broadcast crosses show up in bnlj)
 
 Counts come from the INITIAL executed plan (pre-AQE — deterministic at plan
-time, no data run), so the digest is cheap (~driver-side only) and stable.
+time), so the digest is stable. Building a key does run jobs: its eager
+probes (count, collect, toPandas) and the upstream stages its lineage cuts
+materialize at call time (see session.one_compute_boundary). Only the
+returned plan is never run.
 Diff the committed PLANS_r{N}.json between rounds: a changed line is either
 an intentional plan improvement (commit message should say so) or a
 regression the targeted tests missed.
