@@ -270,9 +270,7 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 1-row wide result is then unpivoted driver-free via ``stack``.
     The oracle recomputes each pair with DuckDB's independent corr —
     6 scans there, but oracle cost doesn't count."""
-    from gvcf_hbase_spark.sources.tables import load_table as _lt
-
-    li = _lt(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pairs = [(a, b) for i, a in enumerate(_CORR_COLS) for b in _CORR_COLS[i + 1 :]]
     wide = li.agg(
         *[F.corr(a, b).alias(f"c{i}") for i, (a, b) in enumerate(pairs)]
@@ -370,9 +368,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation, no second shuffle. Skew note: the group count here is
     3; a high-cardinality grouping keys the same plan, and a SKEWED
     group is bounded by its in-partition sort exactly like any window."""
-    from gvcf_hbase_spark.sources.tables import load_table as _lt
-
-    li = _lt(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     order = [F.col("l_extendedprice"), F.col("l_orderkey"), F.col("l_linenumber")]
     wsort = Window.partitionBy("l_returnflag").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -2314,6 +2310,29 @@ def _price_histogram(spark: SparkSession, sf_dir: str):
     return base, cum, base.agg(F.count("*").alias("n"))
 
 
+def _rows_at_ranks(
+    base: DataFrame, cum: DataFrame, ranks: DataFrame, rank: str, part: str
+) -> DataFrame:
+    """Phase 2 of the two-phase selection over :func:`_price_histogram`'s
+    ``(base, cum)``: the ``base`` row at each target rank of ``ranks``
+    (rank column ``rank``, one target per ``part`` value), with the
+    ``ranks`` columns. Each rank is located in the one bucket whose
+    cumulative count covers it, and rows are ranked by cents only inside
+    the hit buckets, so every sort is bounded by one bucket's
+    population."""
+    targets = (
+        cum.crossJoin(F.broadcast(ranks))
+        .filter((F.col("cum_prev") < F.col(rank)) & (F.col(rank) <= F.col("cum")))
+        .select("bucket", "cum_prev", *ranks.columns)
+    )
+    lw = Window.partitionBy("bucket", part).orderBy("cents")
+    return (
+        base.join(F.broadcast(targets), "bucket")
+        .withColumn("lr", F.row_number().over(lw))
+        .filter(F.col("lr") == F.col(rank) - F.col("cum_prev"))
+    )
+
+
 _MEDIAN_ORACLE = """
     SELECT CAST(count(*) AS BIGINT) AS n,
            CAST(floor(2 * median(CAST(floor(l_extendedprice * 100 + 0.5)
@@ -2350,16 +2369,7 @@ def agg_median_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n", "r")
         .agg(F.count("*").alias("weight"))
     )
-    targets = (
-        cum.crossJoin(F.broadcast(ranks))
-        .filter((F.col("cum_prev") < F.col("r")) & (F.col("r") <= F.col("cum")))
-        .select("bucket", "r", "cum_prev", "weight", "n")
-    )
-    phase2 = base.join(F.broadcast(targets), "bucket")
-    lw = Window.partitionBy("bucket", "r").orderBy("cents")
-    sel = phase2.withColumn("lr", F.row_number().over(lw)).filter(
-        F.col("lr") == F.col("r") - F.col("cum_prev")
-    )
+    sel = _rows_at_ranks(base, cum, ranks, "r", "r")
     return sel.groupBy("n").agg(
         F.sum(F.col("cents") * F.col("weight")).alias("median_x2")
     ).select(
@@ -2408,16 +2418,7 @@ def agg_quantiles_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "rank_at", F.ceil(F.col("pct") * F.col("n") / F.lit(100.0)).cast("long")
     )
-    targets = (
-        cum.crossJoin(F.broadcast(ranks))
-        .filter((F.col("cum_prev") < F.col("rank_at")) & (F.col("rank_at") <= F.col("cum")))
-        .select("bucket", "pct", "rank_at", "cum_prev")
-    )
-    phase2 = base.join(F.broadcast(targets), "bucket")
-    lw = Window.partitionBy("bucket", "pct").orderBy("cents")
-    sel = phase2.withColumn("lr", F.row_number().over(lw)).filter(
-        F.col("lr") == F.col("rank_at") - F.col("cum_prev")
-    )
+    sel = _rows_at_ranks(base, cum, ranks, "rank_at", "pct")
     return sel.select(
         F.col("pct").cast("int").alias("pct"),
         F.col("rank_at").cast("bigint").alias("rank_at"),

@@ -8,10 +8,8 @@ Scale notes (100 TB):
 - Every op here is a pure DataFrame composition — hash splits and scrubbing
   are embarrassingly parallel map work; caps are a bounded per-key window;
   packing uses the two-phase distributed prefix-sum (below) instead of a
-  single-partition global window; components is the iterative min-label
-  join, the standard Spark formulation (GraphFrames' connectedComponents
-  is the same idea with large-star/small-star optimizations that cut
-  rounds from O(diameter) to O(log n) — swap in beyond ~10^9 edges).
+  single-partition global window; components use large-star/small-star
+  (O(log n) rounds, where min-label propagation needs O(diameter)).
 - Determinism: splits and packs key on md5/doc_id, never on RNG or
   partition ids (SURVEY §5.4 rule 6).
 """
@@ -21,10 +19,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from gvcf_hbase_spark.functions.textfns import normalize_text
+from gvcf_hbase_spark.functions.textfns import normalize_text, shingles, tokens
+from gvcf_hbase_spark.operators.dedup import dedup_ngram_jaccard
 from gvcf_hbase_spark.registry import register
 from gvcf_hbase_spark.session import one_compute_boundary
-from gvcf_hbase_spark.sources.tables import load_table, spread_heavy
+from gvcf_hbase_spark.sources.tables import load_table, spread, spread_heavy
 
 # 12 of 16 first-hex-char buckets => deterministic ~75/25 split.
 _TRAIN_BUCKETS = list("0123456789ab")
@@ -288,60 +287,20 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate *clustering*: connected components over the verified
     ngram-Jaccard pair graph (dedup gives pairs; curation needs whole
     groups so exactly one representative per group survives). cluster_id
-    = min doc_id in the component.
-
-    Spark-first iterative algorithm: min-label propagation. label(u)
-    starts as u; each round label(u) := min(label(u), min over neighbors'
-    labels); labels are monotone non-increasing, so sum(labels) strictly
-    decreases until the fixpoint — that single scalar agg is the
-    convergence test (no join-and-compare pass). Converges in O(graph
-    diameter) rounds; near-dup components are tiny and star-like, so 2–4
-    rounds in practice. A lazy boundary per round truncates the lineage
-    that would otherwise double each iteration; the round's convergence
-    collect is what materializes it. At ~10^9+ edges swap the
-    body for large-star/small-star (O(log n) rounds, same fixpoint). The
-    DuckDB oracle is the recursive-CTE transitive closure — brute force,
-    viable only at test SF, but an exact independent check."""
-    from gvcf_hbase_spark.operators.dedup import dedup_ngram_jaccard
-
+    = min doc_id in the component, computed by
+    :func:`connected_components_lss` (O(log n) rounds; it raises rather
+    than return a partial clustering). The DuckDB oracle is the
+    recursive-CTE transitive closure — brute force, viable only at test
+    SF, but an exact independent check."""
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .transform(one_compute_boundary)  # pairs come from the SSJoin plan — cut it once
-    )
-    labels = edges.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    prev_sum = None
-    for _ in range(20):
-        nb_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("label").alias("nb_label"))
-        )
-        labels = (
-            labels.join(nb_min, labels.node == nb_min.u, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nb_label"), F.col("label"))
-                ).alias("label"),
-            )
-            .transform(one_compute_boundary)
-        )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    return connected_components_lss(pairs)
 
 
 def connected_components_lss(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round algorithm for graphs where min-label propagation's
-    O(diameter) rounds would dominate (chains, 10⁹+-edge near-dup graphs).
+    the O(log n)-round algorithm, where min-label propagation needs
+    O(diameter) rounds (chains, 10⁹+-edge near-dup graphs).
 
     Each round:
     - large-star: per node u with m = min(Γ(u) ∪ {u}), re-point every
@@ -353,8 +312,7 @@ def connected_components_lss(pairs: DataFrame, max_rounds: int = 30) -> DataFram
     set shrinks toward (node → component-min) star edges, detected via a
     commutative xxhash fingerprint (one scalar per round crosses the
     driver). Returns (node, cluster_id = component min) for every node
-    incident to an edge — the same contract as the min-label version,
-    which remains the simple path for small-diameter graphs.
+    incident to an edge.
     """
     e = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -427,22 +385,6 @@ def connected_components_lss(pairs: DataFrame, max_rounds: int = 30) -> DataFram
     return both.groupBy("u").agg(F.min("v").alias("mn")).select(
         F.col("u").alias("doc_id"), F.least("u", "mn").alias("cluster_id")
     )
-
-
-@register(
-    "dedup_cluster_cc_lss",
-    oracle=_CC_ORACLE,
-    tags=("curation", "dedup", "iterative"),
-)
-def dedup_cluster_cc_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering contract as dedup_cluster_cc (same recursive-CTE
-    oracle — both algorithms must reach the identical fixpoint), computed
-    by large-star/small-star: the O(log n)-round scale path for 10⁹+-edge
-    graphs where O(diameter) label propagation stalls on chains."""
-    from gvcf_hbase_spark.operators.dedup import dedup_ngram_jaccard
-
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    return connected_components_lss(pairs)
 
 
 # lang -> how many of the 16 md5 first-hex-char buckets to keep.
@@ -571,8 +513,6 @@ def curate_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     statement. This is the shape a 100 TB curation run actually executes:
     each stage is a pure function of the row and its window, so the plan
     streams."""
-    from gvcf_hbase_spark.functions.textfns import normalize_text
-
     d = load_table(spark, sf_dir, "documents")
     w_fp = Window.partitionBy(F.md5(normalize_text(F.col("text"))))
     surv = (
@@ -637,9 +577,6 @@ def curate_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable. Were it not, the same plan degrades gracefully to a
     shuffle hash join on the gram.)"""
     from pyspark.sql.functions import broadcast
-
-    from gvcf_hbase_spark.functions.textfns import normalize_text, shingles, tokens
-    from gvcf_hbase_spark.sources.tables import spread
 
     d = spread(load_table(spark, sf_dir, "documents"))
     grams = (
@@ -940,7 +877,7 @@ def dedup_canonical_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     own id — and the argmax window runs per cluster, where clusters are
     near-dup-sized (tiny) and singletons are 1-row partitions. The
     expensive stages are exactly `dedup_cluster_cc`'s (SSJoin pairs +
-    label propagation, see its scale notes); this op adds one
+    large-star/small-star rounds); this op adds one
     dimension-small left join against the corpus and a per-cluster
     row_number — nothing new touches the raw text.
     """
@@ -1796,8 +1733,6 @@ def curate_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage touches more than (tokens) rows; the LM table is vocab-sized.
     Float discipline: ln() on identically-constructed doubles, weights
     rounded to 4dp (the `text_unigram_logprob` precedent)."""
-    from gvcf_hbase_spark.sources.tables import spread
-
     d = spread(load_table(spark, sf_dir, "documents"))
     tok = d.select(
         "doc_id",

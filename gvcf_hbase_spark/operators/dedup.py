@@ -80,8 +80,8 @@ def minhash_premix_np(h: np.ndarray) -> np.ndarray:
     return x ^ (x >> np.uint64(16))
 
 
-def _shingle_sets(d: DataFrame) -> DataFrame:
-    """doc_id + distinct 3-token shingle set of the normalized text.
+def _shingle_sets(d: DataFrame, k: int = 3) -> DataFrame:
+    """doc_id + distinct k-token shingle set ``sh`` of the normalized text.
 
     Two deliberate physical choices (both measured ~5× apiece at sf0.1):
     spread first (documents arrives as ONE input split — see
@@ -94,17 +94,16 @@ def _shingle_sets(d: DataFrame) -> DataFrame:
     return (
         spread(d)
         .select("doc_id", tokens(norm).alias("toks"))
-        .select("doc_id", F.array_distinct(shingles(F.col("toks"), k=3)).alias("sh"))
+        .select("doc_id", F.array_distinct(shingles(F.col("toks"), k=k)).alias("sh"))
     )
 
 
-def _jaccard_truth(sets_df: DataFrame) -> DataFrame:
-    """Exact truth for the MinHash gauges: the (id_a < id_b) pairs of
-    ``sets_df`` (doc_id, shingle set ``sh``) with shingle Jaccard ≥
-    ``_JACCARD_THRESHOLD``, through the `dedup_ngram_jaccard` SSJoin
-    inverted-index shape: postings ship (shingle, id, size) ints, the
-    size-ratio bound prunes before the count, never an all-pairs join."""
-    t = _JACCARD_THRESHOLD
+def _jaccard_pairs(sets_df: DataFrame, t: float) -> DataFrame:
+    """The exact (id_a < id_b) pairs of ``sets_df`` (doc_id, shingle set
+    ``sh``) with shingle Jaccard ≥ ``t``, and that ``jaccard``, through
+    the `dedup_ngram_jaccard` SSJoin inverted-index shape: postings ship
+    (shingle, id, size) ints, the size-ratio bound prunes before the
+    count, never an all-pairs join."""
     ex = sets_df.select("doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s"))
     a = ex.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"), "s")
     b = ex.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"), "s")
@@ -117,7 +116,7 @@ def _jaccard_truth(sets_df: DataFrame) -> DataFrame:
         F.count("*").alias("c")
     )
     jac = F.col("c") / (F.col("sz_a") + F.col("sz_b") - F.col("c"))
-    return counts.filter(jac >= t).select("id_a", "id_b")
+    return counts.filter(jac >= t).select("id_a", "id_b", jac.alias("jaccard"))
 
 
 def minhash_signatures(d: DataFrame, sets: DataFrame | None = None) -> DataFrame:
@@ -378,27 +377,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     below threshold. Prefix filtering pays off on Zipfian
     natural-language vocabularies (most grams near-unique), not here.
     """
-    t = 0.6
-    d = load_table(spark, sf_dir, "documents")
-    norm = normalize_text(F.col("text"))
-    ex = (
-        spread(d)
-        .select("doc_id", tokens(norm).alias("toks"))
-        .select("doc_id", F.array_distinct(shingles(F.col("toks"), k=2)).alias("grams"))
-        .select("doc_id", F.size("grams").alias("sz"), F.explode("grams").alias("g"))
-    )
-    a = ex.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"), "g")
-    b = ex.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"), "g")
-    shared = a.join(b, "g").filter(
-        (F.col("id_a") < F.col("id_b"))
-        & (F.col("sz_a") >= t * F.col("sz_b"))
-        & (F.col("sz_b") >= t * F.col("sz_a"))
-    )
-    counts = shared.groupBy("id_a", "id_b", "sz_a", "sz_b").agg(F.count("*").alias("c"))
-    jac = F.col("c") / (F.col("sz_a") + F.col("sz_b") - F.col("c"))
-    return (
-        counts.filter(jac >= t)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    sets_df = _shingle_sets(load_table(spark, sf_dir, "documents"), k=2)
+    return _jaccard_pairs(sets_df, 0.6).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -1032,41 +1013,74 @@ _SIMHASH_RECALL_ORACLE = f"""
 """
 
 
-def _register_simhash_recall() -> None:
-    @register("dedup_simhash_recall", oracle=_SIMHASH_RECALL_ORACLE, tags=("dedup", "eval"))
-    def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Sketch calibration as a first-class op: how well does the
-        32-bit SimHash (hamming ≤ 3, banded) RECALL the exact 3-shingle-Jaccard
-        ≥ 0.8 near-dup pairs, and at what precision? This is the QA
-        query every production dedup pipeline runs before trusting a
-        sketch tier — thresholds are tuned on exactly this confusion
-        table, and a corpus-distribution shift shows up here first.
+def _confusion_row(truth: DataFrame, pred: DataFrame, keys: list[str]) -> DataFrame:
+    """One-row recall/precision report: three scalar aggregates reduced
+    independently and cross-joined as 1-row broadcasts (never a driver
+    collect), ratios integer-quantized so no float reaches the hash.
 
-        Truth side reuses `dedup_near_minhash`'s verified pairs (exact
-        Jaccard, banding-complete on this corpus — the oracle recomputes
-        truth by brute force independently); predicted side is the
-        simhash pair set. Counts reduce to ONE row via three scalar
-        aggregates cross-joined as broadcasts (the 1-row-cross pattern);
-        ratios are integer-quantized so no float reaches the hash. The
-        simhash pairing runs the SCALE path (`simhash_banded_pairs`:
-        4×8-bit pigeonhole bands, exact for hamming ≤ 3), so this op's
-        own plan is the one you would ship — measured 12.9 s → ~2 s at
-        sf0.1 vs the all-pairs join."""
-        d = load_table(spark, sf_dir, "documents")
-        truth = dedup_near_minhash(spark, sf_dir).select("id_a", "id_b")
-        pred = simhash_banded_pairs(
-            simhash_signatures(d), _RECALL_MAX_HAMMING
-        ).select("id_a", "id_b")
-        # shared 1-row confusion reduce (r09): identical arithmetic to the
-        # hand-rolled block this replaces, plus the helper's one-compute
-        # boundary per side — truth here is the FULL near-minhash pipeline,
-        # which the old inline reduce evaluated twice.
-        from gvcf_hbase_spark.operators.similarity import _confusion_row
+    Each side is consumed TWICE (its own count + the hit semi-join), and
+    both sides are typically the expensive halves of a gauge (an SSJoin
+    truth, an exact-KNN pass) — without a boundary here the optimizer
+    plans each subtree twice and broadcast subtrees dodge AQE exchange
+    reuse, so every gauge paid ~2x its real cost (r09 measured:
+    dedup_minhash_recall 2.7 s -> 0.7 s at sf0.1). The pair sets are
+    id-pair rows — tiny relative to what produced them — so one lazy
+    localCheckpoint per side bounds the extra storage while cutting the
+    recompute; a side that is already checkpointed (nprobe sweep) just
+    re-scans its RDD."""
+    truth = truth.transform(one_compute_boundary)
+    pred = pred.transform(one_compute_boundary)
+    nt = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
+    npred = pred.agg(F.count("*").cast("bigint").alias("n_pred"))
+    nh = truth.join(pred, keys, "left_semi").agg(
+        F.count("*").cast("bigint").alias("n_hit")
+    )
+    return (
+        nh.crossJoin(F.broadcast(nt))
+        .crossJoin(F.broadcast(npred))
+        .select(
+            "n_truth",
+            "n_pred",
+            "n_hit",
+            F.floor(F.col("n_hit") * 1_000_000 / F.nullif(F.col("n_truth"), F.lit(0)))
+            .cast("bigint")
+            .alias("recall_1e6"),
+            F.floor(F.col("n_hit") * 1_000_000 / F.nullif(F.col("n_pred"), F.lit(0)))
+            .cast("bigint")
+            .alias("precision_1e6"),
+        )
+    )
 
-        return _confusion_row(truth, pred, ["id_a", "id_b"])
 
+@register("dedup_simhash_recall", oracle=_SIMHASH_RECALL_ORACLE, tags=("dedup", "eval"))
+def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch calibration as a first-class op: how well does the
+    32-bit SimHash (hamming ≤ 3, banded) RECALL the exact 3-shingle-Jaccard
+    ≥ 0.8 near-dup pairs, and at what precision? This is the QA
+    query every production dedup pipeline runs before trusting a
+    sketch tier — thresholds are tuned on exactly this confusion
+    table, and a corpus-distribution shift shows up here first.
 
-_register_simhash_recall()
+    Truth side reuses `dedup_near_minhash`'s verified pairs (exact
+    Jaccard, banding-complete on this corpus — the oracle recomputes
+    truth by brute force independently); predicted side is the
+    simhash pair set. Counts reduce to ONE row via three scalar
+    aggregates cross-joined as broadcasts (the 1-row-cross pattern);
+    ratios are integer-quantized so no float reaches the hash. The
+    simhash pairing runs the SCALE path (`simhash_banded_pairs`:
+    4×8-bit pigeonhole bands, exact for hamming ≤ 3), so this op's
+    own plan is the one you would ship — measured 12.9 s → ~2 s at
+    sf0.1 vs the all-pairs join."""
+    d = load_table(spark, sf_dir, "documents")
+    truth = dedup_near_minhash(spark, sf_dir).select("id_a", "id_b")
+    pred = simhash_banded_pairs(
+        simhash_signatures(d), _RECALL_MAX_HAMMING
+    ).select("id_a", "id_b")
+    # shared 1-row confusion reduce (r09): identical arithmetic to the
+    # hand-rolled block this replaces, plus the helper's one-compute
+    # boundary per side — truth here is the FULL near-minhash pipeline,
+    # which the old inline reduce evaluated twice.
+    return _confusion_row(truth, pred, ["id_a", "id_b"])
 
 
 # ---------------------------------------------------------------------------
@@ -1240,41 +1254,35 @@ def lsh_candidate_pairs_raw(sigs: DataFrame) -> DataFrame:
     )
 
 
-def _register_minhash_recall() -> None:
-    @register("dedup_minhash_recall", oracle=_MINHASH_RECALL_ORACLE, tags=("dedup", "eval"))
-    def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """LSH-layer calibration as a first-class op: of the exact
-        3-shingle-Jaccard ≥ 0.8 near-dup pairs, how many does the 16×2
-        MinHash banding even NOMINATE as candidates, and at what
-        precision? `dedup_simhash_recall` grades a sketch's final verdict;
-        this gauge grades the CANDIDATE layer — the number that moves when
-        you tune bands × rows, and the one that silently decays when the
-        corpus' similarity distribution shifts (the production reason to
-        run it on every ingest batch).
+@register("dedup_minhash_recall", oracle=_MINHASH_RECALL_ORACLE, tags=("dedup", "eval"))
+def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-layer calibration as a first-class op: of the exact
+    3-shingle-Jaccard ≥ 0.8 near-dup pairs, how many does the 16×2
+    MinHash banding even NOMINATE as candidates, and at what
+    precision? `dedup_simhash_recall` grades a sketch's final verdict;
+    this gauge grades the CANDIDATE layer — the number that moves when
+    you tune bands × rows, and the one that silently decays when the
+    corpus' similarity distribution shifts (the production reason to
+    run it on every ingest batch).
 
-        Whole confusion table is oracle-checked: signatures use the
-        engine-portable md5-prefix hash + the same premix/linear family as
-        production (`minhash_signatures_portable`), and banding joins on
-        raw band-row values (`lsh_candidate_pairs_raw`) so the candidate
-        set is bit-reproducible in DuckDB. Truth is exact Jaccard via the
-        `dedup_ngram_jaccard` SSJoin inverted-index shape (postings ship
-        (shingle, id, size) ints; never an all-pairs join), so the gauge's
-        own plan is 100 TB-shaped on BOTH sides. One shingle-set relation
-        feeds truth and signatures (one boundary — 2 consumers); counts
-        collapse to one row via the 1-row-broadcast-cross pattern; ratios
-        integer-quantized (§5.4)."""
-        d = load_table(spark, sf_dir, "documents")
-        sets_df = _shingle_sets(d).transform(one_compute_boundary)
-        pred = lsh_candidate_pairs_raw(minhash_signatures_portable(sets_df))
-        truth = _jaccard_truth(sets_df)
-        # shared 1-row confusion reduce — one implementation for every
-        # calibration gauge (was a hand-kept copy of this block)
-        from gvcf_hbase_spark.operators.similarity import _confusion_row
-
-        return _confusion_row(truth, pred, ["id_a", "id_b"])
-
-
-_register_minhash_recall()
+    Whole confusion table is oracle-checked: signatures use the
+    engine-portable md5-prefix hash + the same premix/linear family as
+    production (`minhash_signatures_portable`), and banding joins on
+    raw band-row values (`lsh_candidate_pairs_raw`) so the candidate
+    set is bit-reproducible in DuckDB. Truth is exact Jaccard via the
+    `dedup_ngram_jaccard` SSJoin inverted-index shape (postings ship
+    (shingle, id, size) ints; never an all-pairs join), so the gauge's
+    own plan is 100 TB-shaped on BOTH sides. One shingle-set relation
+    feeds truth and signatures (one boundary — 2 consumers); counts
+    collapse to one row via the 1-row-broadcast-cross pattern; ratios
+    integer-quantized (§5.4)."""
+    d = load_table(spark, sf_dir, "documents")
+    sets_df = _shingle_sets(d).transform(one_compute_boundary)
+    pred = lsh_candidate_pairs_raw(minhash_signatures_portable(sets_df))
+    truth = _jaccard_pairs(sets_df, _JACCARD_THRESHOLD).select("id_a", "id_b")
+    # shared 1-row confusion reduce — one implementation for every
+    # calibration gauge (was a hand-kept copy of this block)
+    return _confusion_row(truth, pred, ["id_a", "id_b"])
 
 
 def _minhash_incremental_oracle() -> str:
@@ -1327,68 +1335,64 @@ def _minhash_incremental_oracle() -> str:
     """
 
 
-def _register_minhash_incremental() -> None:
-    @register(
-        "dedup_minhash_incremental",
-        oracle=_minhash_incremental_oracle(),
-        tags=("dedup", "lsh", "incremental"),
+@register(
+    "dedup_minhash_incremental",
+    oracle=_minhash_incremental_oracle(),
+    tags=("dedup", "lsh", "incremental"),
+)
+def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental NEAR-dup — the daily-ingest shape `dedup_incremental`
+    covers for exact fingerprints, upgraded to Jaccard ≥ 0.8: today's
+    batch (doc_id ≥ 400 stands in for the new crawl) is screened
+    against the HISTORICAL corpus's LSH band index (doc_id < 400),
+    emitting each (new doc, history near-dup, jaccard) hit. This is the
+    op that makes near-dedup O(batch) per day instead of re-running the
+    O(corpus) self-join: the history side's signatures/bands are a
+    standing index a production pipeline materializes once and appends
+    to (here derived in-plan from the same table — the dataflow from
+    the bands join on is identical), and ONLY matching (band, row
+    values) postings meet in the candidate join, so a batch with no
+    near-dups touches nothing but its own band keys. Exact
+    shingle-Jaccard verify on candidates.
+
+    Deterministic oracle gate (r08 verdict action 4; supersedes the
+    r07 accepted-risk posture): signatures use the engine-portable
+    md5-prefix family (`minhash_signatures_portable`) and candidates
+    join on raw band-row values (`lsh_candidate_pairs_raw`), so the
+    DuckDB oracle reproduces the 16×2 banding bit-for-bit — a
+    borderline pair the bands miss is now missed by BOTH engines, and
+    the hash gate is exact at every SF instead of p≈1-(1-j²)^16
+    lossy. Production keeps the xxhash64 signature path for ingest
+    (2× cheaper); the screen's dataflow is identical either way."""
+    d = load_table(spark, sf_dir, "documents")
+    # One shingle materialization serves signatures AND both verify
+    # sides. The boundary is lazy, so nothing executes at build time
+    # and the bench clocks the real screen per run.
+    sets_df = _shingle_sets(d).transform(one_compute_boundary)
+    sigs = minhash_signatures_portable(sets_df)
+    # batch×history restriction: the helper's id_a < id_b self-join
+    # plus one pushable filter per side (hist ids < 400 < batch ids,
+    # so id_a is always the history doc).
+    cands = (
+        lsh_candidate_pairs_raw(sigs)
+        .filter((F.col("id_a") < 400) & (F.col("id_b") >= 400))
+        .select(
+            F.col("id_b").alias("new_id"), F.col("id_a").alias("hist_id")
+        )
     )
-    def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Incremental NEAR-dup — the daily-ingest shape `dedup_incremental`
-        covers for exact fingerprints, upgraded to Jaccard ≥ 0.8: today's
-        batch (doc_id ≥ 400 stands in for the new crawl) is screened
-        against the HISTORICAL corpus's LSH band index (doc_id < 400),
-        emitting each (new doc, history near-dup, jaccard) hit. This is the
-        op that makes near-dedup O(batch) per day instead of re-running the
-        O(corpus) self-join: the history side's signatures/bands are a
-        standing index a production pipeline materializes once and appends
-        to (here derived in-plan from the same table — the dataflow from
-        the bands join on is identical), and ONLY matching (band, row
-        values) postings meet in the candidate join, so a batch with no
-        near-dups touches nothing but its own band keys. Exact
-        shingle-Jaccard verify on candidates.
-
-        Deterministic oracle gate (r08 verdict action 4; supersedes the
-        r07 accepted-risk posture): signatures use the engine-portable
-        md5-prefix family (`minhash_signatures_portable`) and candidates
-        join on raw band-row values (`lsh_candidate_pairs_raw`), so the
-        DuckDB oracle reproduces the 16×2 banding bit-for-bit — a
-        borderline pair the bands miss is now missed by BOTH engines, and
-        the hash gate is exact at every SF instead of p≈1-(1-j²)^16
-        lossy. Production keeps the xxhash64 signature path for ingest
-        (2× cheaper); the screen's dataflow is identical either way."""
-        d = load_table(spark, sf_dir, "documents")
-        # One shingle materialization serves signatures AND both verify
-        # sides. The boundary is lazy, so nothing executes at build time
-        # and the bench clocks the real screen per run.
-        sets_df = _shingle_sets(d).transform(one_compute_boundary)
-        sigs = minhash_signatures_portable(sets_df)
-        # batch×history restriction: the helper's id_a < id_b self-join
-        # plus one pushable filter per side (hist ids < 400 < batch ids,
-        # so id_a is always the history doc).
-        cands = (
-            lsh_candidate_pairs_raw(sigs)
-            .filter((F.col("id_a") < 400) & (F.col("id_b") >= 400))
-            .select(
-                F.col("id_b").alias("new_id"), F.col("id_a").alias("hist_id")
-            )
-        )
-        n = sets_df.select(F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n"))
-        h = sets_df.select(F.col("doc_id").alias("hist_id"), F.col("sh").alias("sh_h"))
-        inter = F.size(F.array_intersect("sh_n", "sh_h")).cast("double")
-        union = (
-            F.size("sh_n") + F.size("sh_h") - F.size(F.array_intersect("sh_n", "sh_h"))
-        )
-        jac = inter / union
-        return (
-            cands.join(n, "new_id")
-            .join(h, "hist_id")
-            .filter(jac >= _JACCARD_THRESHOLD)
-            .select("new_id", "hist_id", F.round(jac, 6).alias("jaccard"))
-        )
-
-
-_register_minhash_incremental()
+    n = sets_df.select(F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n"))
+    h = sets_df.select(F.col("doc_id").alias("hist_id"), F.col("sh").alias("sh_h"))
+    inter = F.size(F.array_intersect("sh_n", "sh_h")).cast("double")
+    union = (
+        F.size("sh_n") + F.size("sh_h") - F.size(F.array_intersect("sh_n", "sh_h"))
+    )
+    jac = inter / union
+    return (
+        cands.join(n, "new_id")
+        .join(h, "hist_id")
+        .filter(jac >= _JACCARD_THRESHOLD)
+        .select("new_id", "hist_id", F.round(jac, 6).alias("jaccard"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1478,76 +1482,72 @@ def _band_sweep_oracle() -> str:
     return "".join(parts)
 
 
-def _register_minhash_band_sweep() -> None:
-    @register(
-        "dedup_minhash_band_sweep",
-        oracle=_band_sweep_oracle(),
-        tags=("dedup", "eval", "calibration"),
+@register(
+    "dedup_minhash_band_sweep",
+    oracle=_band_sweep_oracle(),
+    tags=("dedup", "eval", "calibration"),
+)
+def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash banding-grid calibration: recall/precision of the LSH
+    CANDIDATE layer against exact 3-shingle-Jaccard ≥ 0.8 truth, at
+    every (bands × rows) configuration of the same 32-hash signature
+    budget — (32×1, 16×2, 8×4, 4×8). `dedup_minhash_recall` grades
+    the single shipped 16×2 point; this sweep is the query a tuner
+    actually runs, because bands × rows IS the knob that moves the
+    S-curve (P(candidate | j) = 1-(1-j^r)^b) and the right setting
+    is corpus-dependent. One scored pass serves the grid (the
+    `sim_semdedup_eps_sweep` pattern): signatures are computed ONCE
+    from one materialized shingle relation, and each grid point is a
+    re-grouping of the signature columns — band boundaries nest for
+    powers of two, so pred sets are provably monotone across the
+    grid (asserted in tests; the 16×2 row equals
+    `dedup_minhash_recall`'s confusion row by construction).
+
+    Scale: signatures are the portable md5-prefix family
+    (`minhash_signatures_portable`) so the WHOLE grid is
+    oracle-checked; banding joins meet on composite band-key strings
+    (injective ','-concat of the band's row values) — per-(band,key)
+    equi-joins, Σ per-bucket |b|² cost like every LSH tier, never
+    all-pairs. Truth is the `dedup_ngram_jaccard` SSJoin inverted
+    index with the size-ratio prune, computed once behind a boundary
+    (reused by all four confusion reduces). Counts collapse via the
+    1-row-broadcast-cross pattern; ratios integer-quantized (§5.4)."""
+    d = load_table(spark, sf_dir, "documents")
+    sets_df = _shingle_sets(d).transform(one_compute_boundary)
+    sigs = minhash_signatures_portable(sets_df).transform(one_compute_boundary)
+    truth = one_compute_boundary(
+        _jaccard_pairs(sets_df, _JACCARD_THRESHOLD).select("id_a", "id_b")
     )
-    def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """MinHash banding-grid calibration: recall/precision of the LSH
-        CANDIDATE layer against exact 3-shingle-Jaccard ≥ 0.8 truth, at
-        every (bands × rows) configuration of the same 32-hash signature
-        budget — (32×1, 16×2, 8×4, 4×8). `dedup_minhash_recall` grades
-        the single shipped 16×2 point; this sweep is the query a tuner
-        actually runs, because bands × rows IS the knob that moves the
-        S-curve (P(candidate | j) = 1-(1-j^r)^b) and the right setting
-        is corpus-dependent. One scored pass serves the grid (the
-        `sim_semdedup_eps_sweep` pattern): signatures are computed ONCE
-        from one materialized shingle relation, and each grid point is a
-        re-grouping of the signature columns — band boundaries nest for
-        powers of two, so pred sets are provably monotone across the
-        grid (asserted in tests; the 16×2 row equals
-        `dedup_minhash_recall`'s confusion row by construction).
 
-        Scale: signatures are the portable md5-prefix family
-        (`minhash_signatures_portable`) so the WHOLE grid is
-        oracle-checked; banding joins meet on composite band-key strings
-        (injective ','-concat of the band's row values) — per-(band,key)
-        equi-joins, Σ per-bucket |b|² cost like every LSH tier, never
-        all-pairs. Truth is the `dedup_ngram_jaccard` SSJoin inverted
-        index with the size-ratio prune, computed once behind a boundary
-        (reused by all four confusion reduces). Counts collapse via the
-        1-row-broadcast-cross pattern; ratios integer-quantized (§5.4)."""
-        from gvcf_hbase_spark.operators.similarity import _confusion_row
-
-        d = load_table(spark, sf_dir, "documents")
-        sets_df = _shingle_sets(d).transform(one_compute_boundary)
-        sigs = minhash_signatures_portable(sets_df).transform(one_compute_boundary)
-        truth = one_compute_boundary(_jaccard_truth(sets_df))
-
-        out = None
-        for nb, r in _BAND_SWEEP_GRID:
-            keys = F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        F.lit(str(bi)),
-                        *[F.col(f"m{bi * r + j}").cast("string") for j in range(r)],
-                    )
-                    for bi in range(nb)
-                ]
-            )
-            banded = sigs.select("doc_id", F.explode(keys).alias("bk"))
-            pa = banded.select(F.col("doc_id").alias("id_a"), "bk")
-            pb = banded.select(F.col("doc_id").alias("id_b"), "bk")
-            pred = (
-                pa.join(pb, "bk")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-                .distinct()
-            )
-            row = _confusion_row(truth, pred, ["id_a", "id_b"]).select(
-                F.lit(nb).cast("int").alias("n_bands"),
-                F.lit(r).cast("int").alias("rows_per_band"),
-                "n_truth",
-                "n_pred",
-                "n_hit",
-                "recall_1e6",
-                "precision_1e6",
-            )
-            out = row if out is None else out.unionByName(row)
-        return out
-
-
-_register_minhash_band_sweep()
+    out = None
+    for nb, r in _BAND_SWEEP_GRID:
+        keys = F.array(
+            *[
+                F.concat_ws(
+                    ",",
+                    F.lit(str(bi)),
+                    *[F.col(f"m{bi * r + j}").cast("string") for j in range(r)],
+                )
+                for bi in range(nb)
+            ]
+        )
+        banded = sigs.select("doc_id", F.explode(keys).alias("bk"))
+        pa = banded.select(F.col("doc_id").alias("id_a"), "bk")
+        pb = banded.select(F.col("doc_id").alias("id_b"), "bk")
+        pred = (
+            pa.join(pb, "bk")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        row = _confusion_row(truth, pred, ["id_a", "id_b"]).select(
+            F.lit(nb).cast("int").alias("n_bands"),
+            F.lit(r).cast("int").alias("rows_per_band"),
+            "n_truth",
+            "n_pred",
+            "n_hit",
+            "recall_1e6",
+            "precision_1e6",
+        )
+        out = row if out is None else out.unionByName(row)
+    return out

@@ -40,6 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from gvcf_hbase_spark.functions.vectors import as_double, corpus_broadcast
+from gvcf_hbase_spark.operators.dedup import _confusion_row
 from gvcf_hbase_spark.registry import register
 from gvcf_hbase_spark.session import one_compute_boundary
 from gvcf_hbase_spark.sources.tables import load_table, scan_size_bytes, spread
@@ -1527,46 +1528,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registered queries (same confusion-row shape as dedup_simhash_recall),
 # not pytest constants, so a user can re-measure on THEIR corpus.
 # ---------------------------------------------------------------------------
-
-
-def _confusion_row(truth: DataFrame, pred: DataFrame, keys: list[str]) -> DataFrame:
-    """One-row recall/precision report: three scalar aggregates reduced
-    independently and cross-joined as 1-row broadcasts (the same
-    1-row-cross pattern as dedup_simhash_recall — never a driver
-    collect), ratios integer-quantized so no float reaches the hash.
-
-    Each side is consumed TWICE (its own count + the hit semi-join), and
-    both sides are typically the expensive halves of a gauge (an SSJoin
-    truth, an exact-KNN pass) — without a boundary here the optimizer
-    plans each subtree twice and broadcast subtrees dodge AQE exchange
-    reuse, so every gauge paid ~2x its real cost (r09 measured:
-    dedup_minhash_recall 2.7 s -> 0.7 s at sf0.1). The pair sets are
-    id-pair rows — tiny relative to what produced them — so one lazy
-    localCheckpoint per side bounds the extra storage while cutting the
-    recompute; a side that is already checkpointed (nprobe sweep) just
-    re-scans its RDD."""
-    truth = truth.transform(one_compute_boundary)
-    pred = pred.transform(one_compute_boundary)
-    nt = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
-    npred = pred.agg(F.count("*").cast("bigint").alias("n_pred"))
-    nh = truth.join(pred, keys, "left_semi").agg(
-        F.count("*").cast("bigint").alias("n_hit")
-    )
-    return (
-        nh.crossJoin(F.broadcast(nt))
-        .crossJoin(F.broadcast(npred))
-        .select(
-            "n_truth",
-            "n_pred",
-            "n_hit",
-            F.floor(F.col("n_hit") * 1_000_000 / F.nullif(F.col("n_truth"), F.lit(0)))
-            .cast("bigint")
-            .alias("recall_1e6"),
-            F.floor(F.col("n_hit") * 1_000_000 / F.nullif(F.col("n_pred"), F.lit(0)))
-            .cast("bigint")
-            .alias("precision_1e6"),
-        )
-    )
 
 
 @register("sim_ann_ivf_recall", oracle=None, tags=("similarity", "ann", "eval"))

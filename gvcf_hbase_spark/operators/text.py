@@ -12,10 +12,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from gvcf_hbase_spark.functions.textfns import STOPWORDS, stable_hash32, tokens
+from gvcf_hbase_spark.functions.textfns import STOPWORDS, normalize_text, stable_hash32, tokens
 from gvcf_hbase_spark.registry import register
 from gvcf_hbase_spark.session import one_compute_boundary
-from gvcf_hbase_spark.sources.tables import load_table
+from gvcf_hbase_spark.sources.tables import load_table, spread
 
 
 def _sql_list(words: list[str]) -> str:
@@ -270,8 +270,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprints: a position-weighted rolling hash (order-
     sensitive — reorderings change it, unlike bag-of-words md5) plus the
     md5 of the normalized text. Both engine-portable by construction."""
-    from gvcf_hbase_spark.functions.textfns import normalize_text
-
     d = load_table(spark, sf_dir, "documents")
     norm = normalize_text(F.col("text"))
     toks = d.select("doc_id", norm.alias("norm"), tokens(norm).alias("toks"))
@@ -325,9 +323,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a cheap re-aggregation of the first's output; no window, no sort.
     (The inner GROUP BY output is ~distinct grams per doc, so the rollup
     input is already shrunk map-side at 100 TB.)"""
-    from gvcf_hbase_spark.functions.textfns import normalize_text, tokens
-    from gvcf_hbase_spark.sources.tables import spread
-
     d = spread(load_table(spark, sf_dir, "documents"))
     toks = d.select("doc_id", tokens(normalize_text(F.col("text"))).alias("t"))
     grams = toks.select(
@@ -383,8 +378,6 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothing needed when scoring the training corpus (every scored
     token was seen); a frozen-LM deployment adds the usual +1 smoothing
     on the LM side only."""
-    from gvcf_hbase_spark.sources.tables import spread
-
     d = spread(load_table(spark, sf_dir, "documents"))
     tok = d.select(
         "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
@@ -1036,8 +1029,6 @@ def text_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     alphabet, not the plan). Deterministic: counts are integers and the
     (freq DESC, pair) tie-break pins the LIMIT frontier on both engines.
     """
-    from gvcf_hbase_spark.functions.textfns import normalize_text
-
     d = load_table(spark, sf_dir, "documents")
     wc = (
         d.select(F.explode(tokens(normalize_text(F.col("text")))).alias("w"))

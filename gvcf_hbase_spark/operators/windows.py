@@ -578,9 +578,7 @@ def win_frame_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     range frame with two pointers over the sorted run (amortized O(1)
     per row, state = the in-frame aggregate), so a year-long user
     timeline costs its sort, not frame-width × rows."""
-    from gvcf_hbase_spark.sources.tables import load_table as _lt
-
-    ev = _lt(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts_us_long")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from gvcf_hbase_spark.registry import register
+from gvcf_hbase_spark.sources.gvcf_text import _GVCF_ORACLE, _fixture_lines
 
 _SCHEMA = (
     "sample_id string, contig string, start long, end long, ref string, "
@@ -109,8 +110,6 @@ def _ensure_fixture_files(spark: SparkSession, sf_dir: str) -> str:
     Cache validity keys on Spark's _SUCCESS marker with write-to-temp +
     atomic rename (the source_xml_roundtrip discipline): concurrent or
     interrupted writers can never expose a half-written directory."""
-    from gvcf_hbase_spark.sources.gvcf_text import _fixture_lines
-
     out = "/tmp/gvcf_pyds_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     if not os.path.isfile(f"{out}/_SUCCESS"):
         tmp = f"{out}.tmp.{os.getpid()}"
@@ -131,7 +130,7 @@ def _ensure_fixture_files(spark: SparkSession, sf_dir: str) -> str:
     "source_gvcf_datasource",
     # identical oracle to source_gvcf_lines: the pluggable source must
     # parse byte-identically to the JVM-expression path
-    oracle=None,  # set below after import (module load order)
+    oracle=_GVCF_ORACLE,
     tags=("gvcf", "source"),
 )
 def source_gvcf_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,13 +142,3 @@ def source_gvcf_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_fixture_files(spark, sf_dir)
     spark.dataSource.register(GvcfLinesDataSource)
     return spark.read.format("gvcf_lines").load(path)
-
-
-def _late_bind_oracle() -> None:
-    from gvcf_hbase_spark.registry import QUERIES
-    from gvcf_hbase_spark.sources.gvcf_text import _GVCF_ORACLE
-
-    QUERIES["source_gvcf_datasource"].oracle = _GVCF_ORACLE
-
-
-_late_bind_oracle()

@@ -19,9 +19,17 @@ operators.gvcf.combine_positions (A9) and plans.layout (A5):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession, Window
 
+from gvcf_hbase_spark.operators.gvcf import (
+    combine_positions,
+    expand_blocks,
+    sample_name_index,
+    split_multiallelic,
+)
+from gvcf_hbase_spark.registry import register
 from gvcf_hbase_spark.session import one_compute_boundary
-from pyspark.sql import DataFrame, SparkSession
+from gvcf_hbase_spark.sources.tables import load_table, spread
 
 
 def parse_gvcf_lines(
@@ -128,8 +136,6 @@ def _fixture_lines(
     one-task orders scan, so every line is built once on that task for
     the filter and again after the spread. A real deployment reads many
     gVCF files/splits and skips this."""
-    from gvcf_hbase_spark.sources.tables import load_table, spread
-
     o = spread(load_table(spark, sf_dir, "orders").select("o_orderkey"))
     pos = F.col("o_orderkey")
     is_block = (pos % 3) == 0
@@ -247,124 +253,117 @@ _GVCF_MULTIALLELIC_ORACLE = r"""
 """
 
 
-def _register_source_queries() -> None:
-    from gvcf_hbase_spark.operators.gvcf import (
-        combine_positions,
-        sample_name_index,
-        split_multiallelic,
-    )
-    from gvcf_hbase_spark.registry import register
+@register("source_gvcf_lines", oracle=_GVCF_ORACLE, tags=("gvcf", "source"))
+def source_gvcf_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A1 parity, oracle-checked: derive deterministic gVCF text lines
+    (ref blocks with END=/<NON_REF>, variants) from the orders fixture,
+    then run them through the real line parser. The DuckDB oracle
+    constructs and parses the same lines with independent string SQL,
+    so the parser's field/END/allele semantics are cross-checked."""
+    return parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9))
 
-    @register("source_gvcf_lines", oracle=_GVCF_ORACLE, tags=("gvcf", "source"))
-    def source_gvcf_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """A1 parity, oracle-checked: derive deterministic gVCF text lines
-        (ref blocks with END=/<NON_REF>, variants) from the orders fixture,
-        then run them through the real line parser. The DuckDB oracle
-        constructs and parses the same lines with independent string SQL,
-        so the parser's field/END/allele semantics are cross-checked."""
-        return parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9))
 
-    @register("gvcf_encode_roundtrip", oracle=_GVCF_ORACLE, tags=("gvcf", "source"))
-    def gvcf_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """A11 parity, oracle-checked: the reference encodes each variant
-        record into HBase cell BYTES and decodes on scan (its
-        HBaseVariantEncoder round-trip). Spark needs no byte layout — the
-        struct is columnar — but the capability must exist for a cell-
-        value-compatible migration, so this query proves a lossless
-        encode→binary→decode cycle: parsed records → to_json → UTF-8
-        binary cell value → decode → from_json(schema) back to columns.
-        The oracle is the PARSER oracle unchanged: the round trip must be
-        an exact identity, which the hash-match certifies. All JVM
-        expressions (to_json/encode/decode/from_json) — at 100 TB this is
-        a map stage fused into the scan on both directions."""
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9))
-        schema = (
-            "contig string, start bigint, end bigint, ref string, alt string,"
+@register("gvcf_encode_roundtrip", oracle=_GVCF_ORACLE, tags=("gvcf", "source"))
+def gvcf_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A11 parity, oracle-checked: the reference encodes each variant
+    record into HBase cell BYTES and decodes on scan (its
+    HBaseVariantEncoder round-trip). Spark needs no byte layout — the
+    struct is columnar — but the capability must exist for a cell-
+    value-compatible migration, so this query proves a lossless
+    encode→binary→decode cycle: parsed records → to_json → UTF-8
+    binary cell value → decode → from_json(schema) back to columns.
+    The oracle is the PARSER oracle unchanged: the round trip must be
+    an exact identity, which the hash-match certifies. All JVM
+    expressions (to_json/encode/decode/from_json) — at 100 TB this is
+    a map stage fused into the scan on both directions."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9))
+    schema = (
+        "contig string, start bigint, end bigint, ref string, alt string,"
             " gt string, is_variant boolean, value string"
-        )
-        payload = F.struct(
-            "contig", "start", F.col("end"), "ref", "alt", "gt", "is_variant", "value"
-        )
-        cells = recs.select(
-            "sample_id", F.encode(F.to_json(payload), "UTF-8").alias("cell")
-        )
-        decoded = cells.select(
-            "sample_id", F.from_json(F.decode("cell", "UTF-8"), schema).alias("r")
-        )
-        return decoded.select(
-            "sample_id",
-            F.col("r.contig").alias("contig"),
-            F.col("r.start").alias("start"),
-            F.col("r.end").alias("end"),
-            F.col("r.ref").alias("ref"),
-            F.col("r.alt").alias("alt"),
-            F.col("r.gt").alias("gt"),
-            F.col("r.is_variant").alias("is_variant"),
-            F.col("r.value").alias("value"),
-        )
-
-    @register("gvcf_sample_index", oracle=_GVCF_SAMPLE_INDEX_ORACLE, tags=("gvcf",))
-    def gvcf_sample_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """A2 parity, oracle-checked: sample-name → dense index via the
-        `sample_name_index` operator (distinct-aggregate dim + broadcast
-        join back onto the parsed records — the Spark replacement for the
-        reference's fixed-count SampleNameIndex qualifier map). The query
-        proves both halves: the dense indices themselves (0-based rank in
-        name order, hash-matched against DuckDB's row_number dim) and the
-        enrichment join (per-sample record stats computed off the joined
-        fact side)."""
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        _dim, enriched = sample_name_index(recs)
-        return enriched.groupBy("sample_idx", "sample_id").agg(
-            F.count("*").alias("n_records"),
-            F.sum(F.col("is_variant").cast("long")).alias("n_variants"),
-            F.min("start").alias("min_start"),
-            F.max("end").alias("max_end"),
-        )
-
-    @register(
-        "gvcf_split_multiallelic", oracle=_GVCF_MULTIALLELIC_ORACLE, tags=("gvcf",)
     )
-    def gvcf_split_multiallelic(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """VCF allele normalization, oracle-checked: parse fixture lines
-        where every fifth variant is multi-allelic (ALT 'T,G,<NON_REF>'),
-        then split to one row per alternate allele with its 1-based GT
-        index via the `split_multiallelic` operator (posexplode — pure
-        codegen, no shuffle). The oracle replays the split with DuckDB
-        list indexing over unnest(range(...))."""
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9, multiallelic=True))
-        return split_multiallelic(recs).select(
-            "sample_id", "contig", "start", "ref", "gt", "allele_idx", "allele"
-        )
-
-    @register("gvcf_combine", oracle=_GVCF_COMBINE_ORACLE, tags=("gvcf",))
-    def gvcf_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """The reference's flagship query end-to-end (A1 -> A9 + A8): gVCF
-        text lines -> line parser -> per-position combine across samples,
-        variant-sites-only. The sample->value map is flattened to a sorted
-        'sample=value|...' string so the DuckDB oracle (which replays the
-        expansion with unnest(range) + string_agg) can hash-match it.
-
-        Scale shape: parse is codegen'd string ops over text splits; the
-        combine is one shuffle on (contig, pos) with partial aggregation —
-        the same plan at 100 TB, parallelized by range-partitioned input
-        instead of the reference's HBase region-aligned block splits (A4).
-        ``flat=True`` keeps the whole query in native JVM expressions (no
-        map build, no higher-order lambdas).
-        """
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        combined = combine_positions(
-            recs, variant_col="is_variant", only_variant_sites=True, flat=True
-        )
-        return combined.select(
-            "contig",
-            "pos",
-            "samples_flat",
-            F.col("n_samples").cast("long").alias("n_samples"),
-        )
+    payload = F.struct(
+        "contig", "start", F.col("end"), "ref", "alt", "gt", "is_variant", "value"
+    )
+    cells = recs.select(
+        "sample_id", F.encode(F.to_json(payload), "UTF-8").alias("cell")
+    )
+    decoded = cells.select(
+        "sample_id", F.from_json(F.decode("cell", "UTF-8"), schema).alias("r")
+    )
+    return decoded.select(
+        "sample_id",
+        F.col("r.contig").alias("contig"),
+        F.col("r.start").alias("start"),
+        F.col("r.end").alias("end"),
+        F.col("r.ref").alias("ref"),
+        F.col("r.alt").alias("alt"),
+        F.col("r.gt").alias("gt"),
+        F.col("r.is_variant").alias("is_variant"),
+        F.col("r.value").alias("value"),
+    )
 
 
-_register_source_queries()
+@register("gvcf_sample_index", oracle=_GVCF_SAMPLE_INDEX_ORACLE, tags=("gvcf",))
+def gvcf_sample_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A2 parity, oracle-checked: sample-name → dense index via the
+    `sample_name_index` operator (distinct-aggregate dim + broadcast
+    join back onto the parsed records — the Spark replacement for the
+    reference's fixed-count SampleNameIndex qualifier map). The query
+    proves both halves: the dense indices themselves (0-based rank in
+    name order, hash-matched against DuckDB's row_number dim) and the
+    enrichment join (per-sample record stats computed off the joined
+    fact side)."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
+    _dim, enriched = sample_name_index(recs)
+    return enriched.groupBy("sample_idx", "sample_id").agg(
+        F.count("*").alias("n_records"),
+        F.sum(F.col("is_variant").cast("long")).alias("n_variants"),
+        F.min("start").alias("min_start"),
+        F.max("end").alias("max_end"),
+    )
+
+
+@register(
+    "gvcf_split_multiallelic", oracle=_GVCF_MULTIALLELIC_ORACLE, tags=("gvcf",)
+)
+def gvcf_split_multiallelic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VCF allele normalization, oracle-checked: parse fixture lines
+    where every fifth variant is multi-allelic (ALT 'T,G,<NON_REF>'),
+    then split to one row per alternate allele with its 1-based GT
+    index via the `split_multiallelic` operator (posexplode — pure
+    codegen, no shuffle). The oracle replays the split with DuckDB
+    list indexing over unnest(range(...))."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9, multiallelic=True))
+    return split_multiallelic(recs).select(
+        "sample_id", "contig", "start", "ref", "gt", "allele_idx", "allele"
+    )
+
+
+@register("gvcf_combine", oracle=_GVCF_COMBINE_ORACLE, tags=("gvcf",))
+def gvcf_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's flagship query end-to-end (A1 -> A9 + A8): gVCF
+    text lines -> line parser -> per-position combine across samples,
+    variant-sites-only. The sample->value map is flattened to a sorted
+    'sample=value|...' string so the DuckDB oracle (which replays the
+    expansion with unnest(range) + string_agg) can hash-match it.
+
+    Scale shape: parse is codegen'd string ops over text splits; the
+    combine is one shuffle on (contig, pos) with partial aggregation —
+    the same plan at 100 TB, parallelized by range-partitioned input
+    instead of the reference's HBase region-aligned block splits (A4).
+    ``flat=True`` keeps the whole query in native JVM expressions (no
+    map build, no higher-order lambdas).
+    """
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
+    combined = combine_positions(
+        recs, variant_col="is_variant", only_variant_sites=True, flat=True
+    )
+    return combined.select(
+        "contig",
+        "pos",
+        "samples_flat",
+        F.col("n_samples").cast("long").alias("n_samples"),
+    )
 
 
 def read_gvcf(spark: SparkSession, path: str, sample_id: str) -> DataFrame:
@@ -434,25 +433,18 @@ def export_vcf_lines(combined: DataFrame) -> DataFrame:
     )
 
 
-def _register_export_query() -> None:
-    from gvcf_hbase_spark.operators.gvcf import combine_positions
-    from gvcf_hbase_spark.registry import register
-
-    @register("gvcf_export_vcf_lines", oracle=_GVCF_EXPORT_ORACLE, tags=("gvcf", "sink"))
-    def gvcf_export_vcf_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Full reference round trip, oracle-checked end-to-end: gVCF text
-        → parse (A1) → per-position combine (A9) → VCF-line export (A10's
-        user function as a sink format). The oracle rebuilds the same
-        lines through independent SQL, so field order, INFO composition,
-        and the sorted sample payload are all hash-verified."""
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        combined = combine_positions(
-            recs, variant_col="is_variant", only_variant_sites=True, flat=True
-        )
-        return export_vcf_lines(combined)
-
-
-_register_export_query()
+@register("gvcf_export_vcf_lines", oracle=_GVCF_EXPORT_ORACLE, tags=("gvcf", "sink"))
+def gvcf_export_vcf_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full reference round trip, oracle-checked end-to-end: gVCF text
+    → parse (A1) → per-position combine (A9) → VCF-line export (A10's
+    user function as a sink format). The oracle rebuilds the same
+    lines through independent SQL, so field order, INFO composition,
+    and the sorted sample payload are all hash-verified."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
+    combined = combine_positions(
+        recs, variant_col="is_variant", only_variant_sites=True, flat=True
+    )
+    return export_vcf_lines(combined)
 
 
 _GVCF_DEPTH_ORACLE = r"""
@@ -477,37 +469,29 @@ _GVCF_DEPTH_ORACLE = r"""
 """
 
 
-def _register_depth_query() -> None:
-    from gvcf_hbase_spark.registry import register
-
-    @register("gvcf_coverage_depth", oracle=_GVCF_DEPTH_ORACLE, tags=("gvcf",))
-    def gvcf_coverage_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Coverage-depth summary per (contig, 1000-position bucket): how
-        many positions any sample covers and the mean number of samples
-        per covered position — the QC query a cohort pipeline runs before
-        joint calling (uneven depth = capture bias; zero-coverage buckets
-        = assembly gaps). Expansion + one aggregate; at 100 TB bucket the
-        positions BEFORE expanding (sum of clipped interval lengths per
-        bucket) to keep the exploded row count bounded by coverage, not
-        genome size — the expansion form here doubles as the oracle's
-        ground truth."""
-        from gvcf_hbase_spark.operators.gvcf import expand_blocks
-
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9))
-        pos = expand_blocks(recs)
-        return (
-            pos.groupBy(
-                "contig", F.expr("pos div 1000").alias("bucket")
-            )
-            .agg(
-                F.countDistinct("pos").alias("covered_positions"),
-                F.count("*").alias("sample_positions"),
-                F.round(F.count("*") / F.countDistinct("pos"), 6).alias("mean_depth"),
-            )
+@register("gvcf_coverage_depth", oracle=_GVCF_DEPTH_ORACLE, tags=("gvcf",))
+def gvcf_coverage_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Coverage-depth summary per (contig, 1000-position bucket): how
+    many positions any sample covers and the mean number of samples
+    per covered position — the QC query a cohort pipeline runs before
+    joint calling (uneven depth = capture bias; zero-coverage buckets
+    = assembly gaps). Expansion + one aggregate; at 100 TB bucket the
+    positions BEFORE expanding (sum of clipped interval lengths per
+    bucket) to keep the exploded row count bounded by coverage, not
+    genome size — the expansion form here doubles as the oracle's
+    ground truth."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9))
+    pos = expand_blocks(recs)
+    return (
+        pos.groupBy(
+            "contig", F.expr("pos div 1000").alias("bucket")
         )
-
-
-_register_depth_query()
+        .agg(
+            F.countDistinct("pos").alias("covered_positions"),
+            F.count("*").alias("sample_positions"),
+            F.round(F.count("*") / F.countDistinct("pos"), 6).alias("mean_depth"),
+        )
+    )
 
 
 _GVCF_AF_ORACLE = r"""
@@ -544,8 +528,6 @@ def _allele_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     and triploid rows need no special case) and ``alt_alleles`` (its '1'
     entries), both parsed from GT by JVM split/filter — the input of
     every site allele-count aggregate."""
-    from gvcf_hbase_spark.operators.gvcf import expand_blocks
-
     recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
     gt_parts = F.split(F.col("gt"), "/")
     return expand_blocks(
@@ -556,48 +538,42 @@ def _allele_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_af_query() -> None:
-    from gvcf_hbase_spark.registry import register
+@register("gvcf_allele_freq", oracle=_GVCF_AF_ORACLE, tags=("gvcf",))
+def gvcf_allele_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort allele frequency per variant site — THE downstream
+    consumer of the gVCF model: AC (alt allele count, from each
+    covering genotype's '1' entries), AN (total called alleles =
+    Σ ploidy over covering samples), AF = AC/AN. The reason gVCF
+    reference blocks exist at all is to make AN correct — a
+    variants-only representation can't distinguish "0/0 here" from
+    "no data here", and this query is where that distinction pays
+    (an AF with hom-ref samples missing from AN is inflated).
 
-    @register("gvcf_allele_freq", oracle=_GVCF_AF_ORACLE, tags=("gvcf",))
-    def gvcf_allele_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Cohort allele frequency per variant site — THE downstream
-        consumer of the gVCF model: AC (alt allele count, from each
-        covering genotype's '1' entries), AN (total called alleles =
-        Σ ploidy over covering samples), AF = AC/AN. The reason gVCF
-        reference blocks exist at all is to make AN correct — a
-        variants-only representation can't distinguish "0/0 here" from
-        "no data here", and this query is where that distinction pays
-        (an AF with hom-ref samples missing from AN is inflated).
-
-        Same single-shuffle shape as the combine: expand blocks to
-        positions, aggregate on (contig, pos) with integer conditional
-        partials (allele counts parsed from GT by JVM split/filter,
-        ploidy = GT arity so haploid/triploid rows need no special
-        case), keep sites where any covering record is a variant. AC,
-        AN exact integers; only the final AF ratio is floated, floor-
-        quantized under the shared §5.4 convention.
-        """
-        pos = _allele_positions(spark, sf_dir)
-        return (
-            pos.groupBy("contig", "pos")
-            .agg(
-                F.sum("alt_alleles").alias("ac"),
-                F.sum("ploidy").alias("an"),
-                F.floor(
-                    F.sum("alt_alleles").cast("double") / F.sum("ploidy") * 1e6
-                    + F.lit(0.5)
-                )
-                .cast("bigint")
-                .alias("af_1e6"),
-                F.max(F.col("is_variant").cast("int")).alias("__v"),
+    Same single-shuffle shape as the combine: expand blocks to
+    positions, aggregate on (contig, pos) with integer conditional
+    partials (allele counts parsed from GT by JVM split/filter,
+    ploidy = GT arity so haploid/triploid rows need no special
+    case), keep sites where any covering record is a variant. AC,
+    AN exact integers; only the final AF ratio is floated, floor-
+    quantized under the shared §5.4 convention.
+    """
+    pos = _allele_positions(spark, sf_dir)
+    return (
+        pos.groupBy("contig", "pos")
+        .agg(
+            F.sum("alt_alleles").alias("ac"),
+            F.sum("ploidy").alias("an"),
+            F.floor(
+                F.sum("alt_alleles").cast("double") / F.sum("ploidy") * 1e6
+                + F.lit(0.5)
             )
-            .filter(F.col("__v") == 1)
-            .drop("__v")
+            .cast("bigint")
+            .alias("af_1e6"),
+            F.max(F.col("is_variant").cast("int")).alias("__v"),
         )
-
-
-_register_af_query()
+        .filter(F.col("__v") == 1)
+        .drop("__v")
+    )
 
 
 _SFS_ORACLE = f"""
@@ -611,61 +587,55 @@ _SFS_ORACLE = f"""
 """
 
 
-def _register_sfs_query() -> None:
-    from gvcf_hbase_spark.registry import register
+@register("gvcf_af_spectrum", oracle=_SFS_ORACLE, tags=("gvcf", "popgen"))
+def gvcf_af_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Folded site-frequency spectrum over the cohort call set —
+    sites bucketed by MINOR allele count (mac = min(AC, AN−AC))
+    WITHIN each AN stratum — the first plot every population-genetics
+    QC pass draws: an excess of singletons signals sequencing
+    artifacts, a deficit signals over-aggressive filtering, and the
+    overall shape is the neutral-evolution fingerprint. Stratifying
+    by AN is the standard correction when call-rate varies across
+    sites (a mac=1 among 2 called alleles is NOT the same signal as
+    a mac=1 among 200) — pooling them hides exactly the artifact
+    excess the spectrum exists to expose (SURVEY §2A A9's combine
+    feeding §2B popgen consumers).
 
-    @register("gvcf_af_spectrum", oracle=_SFS_ORACLE, tags=("gvcf", "popgen"))
-    def gvcf_af_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Folded site-frequency spectrum over the cohort call set —
-        sites bucketed by MINOR allele count (mac = min(AC, AN−AC))
-        WITHIN each AN stratum — the first plot every population-genetics
-        QC pass draws: an excess of singletons signals sequencing
-        artifacts, a deficit signals over-aggressive filtering, and the
-        overall shape is the neutral-evolution fingerprint. Stratifying
-        by AN is the standard correction when call-rate varies across
-        sites (a mac=1 among 2 called alleles is NOT the same signal as
-        a mac=1 among 200) — pooling them hides exactly the artifact
-        excess the spectrum exists to expose (SURVEY §2A A9's combine
-        feeding §2B popgen consumers).
-
-        Rides `gvcf_allele_freq`'s single-shuffle (contig,pos) aggregate
-        unchanged, then collapses #sites rows to #distinct-mac rows —
-        the spectrum aggregate is input-size independent after the site
-        aggregate, and the share denominator is a 1-row scalar subquery
-        on the oracle side / a window-free count-aggregate broadcast
-        join here (both engine sides are exact integers; only the share
-        ratio floats, floor-quantized under the shared §5.4 convention).
-        """
-        pos = _allele_positions(spark, sf_dir)
-        sites = (
-            pos.groupBy("contig", "pos")
-            .agg(
-                F.sum("alt_alleles").alias("ac"),
-                F.sum("ploidy").alias("an"),
-                F.max(F.col("is_variant").cast("int")).alias("__v"),
-            )
-            .filter(F.col("__v") == 1)
-            .select(
-                "an",
-                F.least(F.col("ac"), F.col("an") - F.col("ac")).alias("mac"),
-            )
+    Rides `gvcf_allele_freq`'s single-shuffle (contig,pos) aggregate
+    unchanged, then collapses #sites rows to #distinct-mac rows —
+    the spectrum aggregate is input-size independent after the site
+    aggregate, and the share denominator is a 1-row scalar subquery
+    on the oracle side / a window-free count-aggregate broadcast
+    join here (both engine sides are exact integers; only the share
+    ratio floats, floor-quantized under the shared §5.4 convention).
+    """
+    pos = _allele_positions(spark, sf_dir)
+    sites = (
+        pos.groupBy("contig", "pos")
+        .agg(
+            F.sum("alt_alleles").alias("ac"),
+            F.sum("ploidy").alias("an"),
+            F.max(F.col("is_variant").cast("int")).alias("__v"),
         )
-        spectrum = sites.groupBy("an", "mac").agg(F.count(F.lit(1)).alias("n_sites"))
-        total = spectrum.agg(F.sum("n_sites").alias("__tot"))
-        return (
-            spectrum.crossJoin(F.broadcast(total))
-            .select(
-                "an",
-                "mac",
-                "n_sites",
-                F.floor(F.col("n_sites") * 1e6 / F.col("__tot") + F.lit(0.5))
-                .cast("bigint")
-                .alias("share_1e6"),
-            )
+        .filter(F.col("__v") == 1)
+        .select(
+            "an",
+            F.least(F.col("ac"), F.col("an") - F.col("ac")).alias("mac"),
         )
-
-
-_register_sfs_query()
+    )
+    spectrum = sites.groupBy("an", "mac").agg(F.count(F.lit(1)).alias("n_sites"))
+    total = spectrum.agg(F.sum("n_sites").alias("__tot"))
+    return (
+        spectrum.crossJoin(F.broadcast(total))
+        .select(
+            "an",
+            "mac",
+            "n_sites",
+            F.floor(F.col("n_sites") * 1e6 / F.col("__tot") + F.lit(0.5))
+            .cast("bigint")
+            .alias("share_1e6"),
+        )
+    )
 
 
 _MISSINGNESS_ORACLE = r"""
@@ -693,48 +663,40 @@ _MISSINGNESS_ORACLE = r"""
 """
 
 
-def _register_missingness_query() -> None:
-    from gvcf_hbase_spark.registry import register
+@register("gvcf_sample_missingness", oracle=_MISSINGNESS_ORACLE, tags=("gvcf", "qc"))
+def gvcf_sample_missingness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-sample call rate against the cohort's site universe — the
+    FIRST cut every joint-genotyping QC makes (a sample whose
+    covered-position share is an outlier is a failed library or a
+    sample swap, and it poisons every downstream cohort statistic:
+    `gvcf_allele_freq`'s AN, `gvcf_relatedness_ibs`'s denominators,
+    `gvcf_hwe_chi2`'s counts). gVCF reference blocks are what make
+    this computable at all — coverage is explicit, absence means
+    missing, the same distinction A9's combine exists to preserve.
 
-    @register("gvcf_sample_missingness", oracle=_MISSINGNESS_ORACLE, tags=("gvcf", "qc"))
-    def gvcf_sample_missingness(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Per-sample call rate against the cohort's site universe — the
-        FIRST cut every joint-genotyping QC makes (a sample whose
-        covered-position share is an outlier is a failed library or a
-        sample swap, and it poisons every downstream cohort statistic:
-        `gvcf_allele_freq`'s AN, `gvcf_relatedness_ibs`'s denominators,
-        `gvcf_hwe_chi2`'s counts). gVCF reference blocks are what make
-        this computable at all — coverage is explicit, absence means
-        missing, the same distinction A9's combine exists to preserve.
-
-        One block expansion (shared shape with the combine/AF family),
-        then a per-sample distinct-position count and a 1-row site-
-        universe scalar broadcast back for the quantized rate. The
-        expansion is the only input-sized stage; both aggregates
-        collapse to #samples and 1 row."""
-        from gvcf_hbase_spark.operators.gvcf import expand_blocks
-
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        pos = expand_blocks(recs).select("sample_id", "contig", "pos").distinct()
-        per_sample = pos.groupBy("sample_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_covered")
-        )
-        universe = (
-            pos.select("contig", "pos")
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_sites"))
-        )
-        return per_sample.crossJoin(F.broadcast(universe)).select(
-            "sample_id",
-            "n_covered",
-            "n_sites",
-            F.floor(F.col("n_covered") * 1e6 / F.col("n_sites") + F.lit(0.5))
-            .cast("bigint")
-            .alias("callrate_1e6"),
-        )
-
-
-_register_missingness_query()
+    One block expansion (shared shape with the combine/AF family),
+    then a per-sample distinct-position count and a 1-row site-
+    universe scalar broadcast back for the quantized rate. The
+    expansion is the only input-sized stage; both aggregates
+    collapse to #samples and 1 row."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
+    pos = expand_blocks(recs).select("sample_id", "contig", "pos").distinct()
+    per_sample = pos.groupBy("sample_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_covered")
+    )
+    universe = (
+        pos.select("contig", "pos")
+        .distinct()
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_sites"))
+    )
+    return per_sample.crossJoin(F.broadcast(universe)).select(
+        "sample_id",
+        "n_covered",
+        "n_sites",
+        F.floor(F.col("n_covered") * 1e6 / F.col("n_sites") + F.lit(0.5))
+        .cast("bigint")
+        .alias("callrate_1e6"),
+    )
 
 
 _FST_ORACLE = r"""
@@ -786,81 +748,75 @@ _FST_ORACLE = r"""
 """
 
 
-def _register_fst_query() -> None:
-    from gvcf_hbase_spark.registry import register
+@register("gvcf_pop_fst", oracle=_FST_ORACLE, tags=("gvcf", "popgen"))
+def gvcf_pop_fst(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hudson Fst between two sample groups ({s0,s1} vs {s2,s3}),
+    per contig, via the RATIO-OF-SUMS estimator — the population-
+    differentiation statistic that decides whether cohorts can be
+    jointly analyzed or need stratification (the question
+    `gvcf_relatedness_ibs` answers pairwise, asked at the population
+    level). Ratio-of-sums, not mean-of-ratios: averaging per-site
+    Fst is the textbook mistake (low-information sites dominate);
+    summing numerator and denominator separately is the recommended
+    (Bhatia/Patterson) form.
 
-    @register("gvcf_pop_fst", oracle=_FST_ORACLE, tags=("gvcf", "popgen"))
-    def gvcf_pop_fst(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Hudson Fst between two sample groups ({s0,s1} vs {s2,s3}),
-        per contig, via the RATIO-OF-SUMS estimator — the population-
-        differentiation statistic that decides whether cohorts can be
-        jointly analyzed or need stratification (the question
-        `gvcf_relatedness_ibs` answers pairwise, asked at the population
-        level). Ratio-of-sums, not mean-of-ratios: averaging per-site
-        Fst is the textbook mistake (low-information sites dominate);
-        summing numerator and denominator separately is the recommended
-        (Bhatia/Patterson) form.
-
-        Same single-shuffle site aggregate as `gvcf_allele_freq`, with
-        group-conditional integer partials; sites need AN ≥ 2 per group
-        (the n−1 sample-size correction divides by it). Per-site num/den
-        are quantized to 1e-9 ints BEFORE the per-contig sum, so float
-        summation order can't flip the hash; the final Fst quantizes the
-        int-sum ratio."""
-        pos = _allele_positions(spark, sf_dir)
-        g1 = F.col("sample_id").isin("s0", "s1")
-        site = (
-            pos.groupBy("contig", "pos")
-            .agg(
-                F.sum(F.when(g1, F.col("alt_alleles"))).alias("ac1"),
-                F.sum(F.when(g1, F.col("ploidy"))).alias("an1"),
-                F.sum(F.when(~g1, F.col("alt_alleles"))).alias("ac2"),
-                F.sum(F.when(~g1, F.col("ploidy"))).alias("an2"),
-                F.max(F.col("is_variant").cast("int")).alias("__v"),
-            )
-            .filter(
-                (F.col("__v") == 1)
-                & (F.coalesce(F.col("an1"), F.lit(0)) >= 2)
-                & (F.coalesce(F.col("an2"), F.lit(0)) >= 2)
-            )
+    Same single-shuffle site aggregate as `gvcf_allele_freq`, with
+    group-conditional integer partials; sites need AN ≥ 2 per group
+    (the n−1 sample-size correction divides by it). Per-site num/den
+    are quantized to 1e-9 ints BEFORE the per-contig sum, so float
+    summation order can't flip the hash; the final Fst quantizes the
+    int-sum ratio."""
+    pos = _allele_positions(spark, sf_dir)
+    g1 = F.col("sample_id").isin("s0", "s1")
+    site = (
+        pos.groupBy("contig", "pos")
+        .agg(
+            F.sum(F.when(g1, F.col("alt_alleles"))).alias("ac1"),
+            F.sum(F.when(g1, F.col("ploidy"))).alias("an1"),
+            F.sum(F.when(~g1, F.col("alt_alleles"))).alias("ac2"),
+            F.sum(F.when(~g1, F.col("ploidy"))).alias("an2"),
+            F.max(F.col("is_variant").cast("int")).alias("__v"),
         )
-        p1 = F.col("ac1").cast("double") / F.col("an1")
-        p2 = F.col("ac2").cast("double") / F.col("an2")
-        num = (
-            (p1 - p2) * (p1 - p2)
-            - p1 * (1 - p1) / (F.col("an1") - 1)
-            - p2 * (1 - p2) / (F.col("an2") - 1)
+        .filter(
+            (F.col("__v") == 1)
+            & (F.coalesce(F.col("an1"), F.lit(0)) >= 2)
+            & (F.coalesce(F.col("an2"), F.lit(0)) >= 2)
         )
-        den = p1 * (1 - p2) + p2 * (1 - p1)
-        terms = site.select(
+    )
+    p1 = F.col("ac1").cast("double") / F.col("an1")
+    p2 = F.col("ac2").cast("double") / F.col("an2")
+    num = (
+        (p1 - p2) * (p1 - p2)
+        - p1 * (1 - p1) / (F.col("an1") - 1)
+        - p2 * (1 - p2) / (F.col("an2") - 1)
+    )
+    den = p1 * (1 - p2) + p2 * (1 - p1)
+    terms = site.select(
+        "contig",
+        F.floor(num * 1e9 + F.lit(0.5)).cast("bigint").alias("num_1e9"),
+        F.floor(den * 1e9 + F.lit(0.5)).cast("bigint").alias("den_1e9"),
+    )
+    return (
+        terms.groupBy("contig")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_sites"),
+            F.sum("num_1e9").cast("bigint").alias("num_sum_1e9"),
+            F.sum("den_1e9").cast("bigint").alias("den_sum_1e9"),
+        )
+        .filter(F.col("den_sum_1e9") > 0)
+        .select(
             "contig",
-            F.floor(num * 1e9 + F.lit(0.5)).cast("bigint").alias("num_1e9"),
-            F.floor(den * 1e9 + F.lit(0.5)).cast("bigint").alias("den_1e9"),
-        )
-        return (
-            terms.groupBy("contig")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_sites"),
-                F.sum("num_1e9").cast("bigint").alias("num_sum_1e9"),
-                F.sum("den_1e9").cast("bigint").alias("den_sum_1e9"),
+            "n_sites",
+            "num_sum_1e9",
+            "den_sum_1e9",
+            F.floor(
+                F.col("num_sum_1e9").cast("double") * 1e6 / F.col("den_sum_1e9")
+                + F.lit(0.5)
             )
-            .filter(F.col("den_sum_1e9") > 0)
-            .select(
-                "contig",
-                "n_sites",
-                "num_sum_1e9",
-                "den_sum_1e9",
-                F.floor(
-                    F.col("num_sum_1e9").cast("double") * 1e6 / F.col("den_sum_1e9")
-                    + F.lit(0.5)
-                )
-                .cast("bigint")
-                .alias("fst_1e6"),
-            )
+            .cast("bigint")
+            .alias("fst_1e6"),
         )
-
-
-_register_fst_query()
+    )
 
 
 _TITV_ORACLE = r"""
@@ -913,102 +869,98 @@ _BLOCK_COMPRESSION_ORACLE = r"""
 """
 
 
-def _register_qc_queries() -> None:
-    from gvcf_hbase_spark.registry import register
+@register("gvcf_titv_ratio", oracle=_TITV_ORACLE, tags=("gvcf", "qc"))
+def gvcf_titv_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Transition/transversion ratio per contig — the canonical VCF
+    call-set QC metric (real WGS call sets sit near Ti/Tv ≈ 2.0;
+    random noise drives it toward 0.5, so a drifting ratio is the
+    first sign of a broken caller or contaminated batch). Runs on
+    the allele-varied fixture mode; transition = both alleles
+    purine or both pyrimidine, evaluated as the branch-free set
+    test (ref∈{A,G}) == (alt∈{A,G}) on both engines.
 
-    @register("gvcf_titv_ratio", oracle=_TITV_ORACLE, tags=("gvcf", "qc"))
-    def gvcf_titv_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Transition/transversion ratio per contig — the canonical VCF
-        call-set QC metric (real WGS call sets sit near Ti/Tv ≈ 2.0;
-        random noise drives it toward 0.5, so a drifting ratio is the
-        first sign of a broken caller or contaminated batch). Runs on
-        the allele-varied fixture mode; transition = both alleles
-        purine or both pyrimidine, evaluated as the branch-free set
-        test (ref∈{A,G}) == (alt∈{A,G}) on both engines.
-
-        Plan: the full parse stays codegen'd string ops; the QC is one
-        collapsing aggregate with integer conditional partials — the
-        shape every per-contig QC rollup shares. NULL ratio (no
-        transversions) guarded identically on both sides."""
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2, varied=True))
-        snps = recs.filter(F.col("alt") != "")
-        purine = lambda c: F.col(c).isin("A", "G")  # noqa: E731
-        is_ti = purine("ref") == purine("alt")
-        agg = snps.groupBy("contig").agg(
-            F.sum(F.when(is_ti, 1).otherwise(0)).cast("bigint").alias("n_ti"),
-            F.sum(F.when(is_ti, 0).otherwise(1)).cast("bigint").alias("n_tv"),
-        )
-        return agg.select(
-            "contig",
-            "n_ti",
-            "n_tv",
-            F.floor(
-                F.col("n_ti") * 1_000_000.0 / F.nullif(F.col("n_tv"), F.lit(0))
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("titv_1e6"),
-        )
-
-    @register("gvcf_dp_stats", oracle=_DP_STATS_ORACLE, tags=("gvcf", "qc"))
-    def gvcf_dp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Per-sample, per-contig depth-of-coverage statistics from the
-        FORMAT DP field — the coverage-QC rollup (a sample whose mean
-        depth sags is a failed library; a contig whose depth doubles is
-        a CNV or a reference mixup). Extends the parse surface past the
-        fixed record schema: DP is pulled from the calls column by the
-        same split arithmetic the GT parse uses (at 100 TB this is a
-        map-side projection fused into the scan — FORMAT fields never
-        cost a second pass). One collapsing aggregate; mean quantized,
-        min/max/sum exact integers."""
-        lines = _fixture_lines(spark, sf_dir, span=2, varied=True)
-        f = F.split(F.col("line"), "\t")
-        dp = F.split(F.element_at(f, -1), ":").getItem(1).cast("long")
-        recs = lines.filter(~F.col("line").startswith("#")).select(
-            "sample_id", f.getItem(0).alias("contig"), dp.alias("dp")
-        )
-        return recs.groupBy("sample_id", "contig").agg(
-            F.count("*").alias("n_records"),
-            F.sum("dp").cast("bigint").alias("sum_dp"),
-            F.min("dp").cast("bigint").alias("min_dp"),
-            F.max("dp").cast("bigint").alias("max_dp"),
-            F.floor(F.sum("dp") * 10_000.0 / F.count("*") + F.lit(0.5))
-            .cast("bigint")
-            .alias("mean_dp_1e4"),
-        )
-
-    @register(
-        "gvcf_block_compression", oracle=_BLOCK_COMPRESSION_ORACLE, tags=("gvcf", "qc")
+    Plan: the full parse stays codegen'd string ops; the QC is one
+    collapsing aggregate with integer conditional partials — the
+    shape every per-contig QC rollup shares. NULL ratio (no
+    transversions) guarded identically on both sides."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2, varied=True))
+    snps = recs.filter(F.col("alt") != "")
+    purine = lambda c: F.col(c).isin("A", "G")  # noqa: E731
+    is_ti = purine("ref") == purine("alt")
+    agg = snps.groupBy("contig").agg(
+        F.sum(F.when(is_ti, 1).otherwise(0)).cast("bigint").alias("n_ti"),
+        F.sum(F.when(is_ti, 0).otherwise(1)).cast("bigint").alias("n_tv"),
     )
-    def gvcf_block_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """How hard the gVCF reference-block encoding is working: per
-        sample, records vs genomic positions covered (blocks span,
-        variants don't), and positions-per-record — the compression
-        factor that justifies the block representation (real WGS gVCFs
-        sit at 10-100×; a ratio near 1 means the block merger upstream
-        is broken and storage is about to blow up). Pure arithmetic on
-        the parsed interval schema — n_positions = Σ (end − start + 1)
-        — one collapsing aggregate."""
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        agg = recs.groupBy("sample_id").agg(
-            F.count("*").alias("n_records"),
-            F.sum(F.when(F.col("alt") == "", 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_blocks"),
-            F.sum(F.col("end") - F.col("start") + 1).cast("bigint").alias("n_positions"),
+    return agg.select(
+        "contig",
+        "n_ti",
+        "n_tv",
+        F.floor(
+            F.col("n_ti") * 1_000_000.0 / F.nullif(F.col("n_tv"), F.lit(0))
+            + F.lit(0.5)
         )
-        return agg.select(
-            "sample_id",
-            "n_records",
-            "n_blocks",
-            "n_positions",
-            F.floor(F.col("n_positions") * 1_000_000.0 / F.col("n_records") + F.lit(0.5))
-            .cast("bigint")
-            .alias("positions_per_record_1e6"),
-        )
+        .cast("bigint")
+        .alias("titv_1e6"),
+    )
 
 
-_register_qc_queries()
+@register("gvcf_dp_stats", oracle=_DP_STATS_ORACLE, tags=("gvcf", "qc"))
+def gvcf_dp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-sample, per-contig depth-of-coverage statistics from the
+    FORMAT DP field — the coverage-QC rollup (a sample whose mean
+    depth sags is a failed library; a contig whose depth doubles is
+    a CNV or a reference mixup). Extends the parse surface past the
+    fixed record schema: DP is pulled from the calls column by the
+    same split arithmetic the GT parse uses (at 100 TB this is a
+    map-side projection fused into the scan — FORMAT fields never
+    cost a second pass). One collapsing aggregate; mean quantized,
+    min/max/sum exact integers."""
+    lines = _fixture_lines(spark, sf_dir, span=2, varied=True)
+    f = F.split(F.col("line"), "\t")
+    dp = F.split(F.element_at(f, -1), ":").getItem(1).cast("long")
+    recs = lines.filter(~F.col("line").startswith("#")).select(
+        "sample_id", f.getItem(0).alias("contig"), dp.alias("dp")
+    )
+    return recs.groupBy("sample_id", "contig").agg(
+        F.count("*").alias("n_records"),
+        F.sum("dp").cast("bigint").alias("sum_dp"),
+        F.min("dp").cast("bigint").alias("min_dp"),
+        F.max("dp").cast("bigint").alias("max_dp"),
+        F.floor(F.sum("dp") * 10_000.0 / F.count("*") + F.lit(0.5))
+        .cast("bigint")
+        .alias("mean_dp_1e4"),
+    )
+
+
+@register(
+    "gvcf_block_compression", oracle=_BLOCK_COMPRESSION_ORACLE, tags=("gvcf", "qc")
+)
+def gvcf_block_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """How hard the gVCF reference-block encoding is working: per
+    sample, records vs genomic positions covered (blocks span,
+    variants don't), and positions-per-record — the compression
+    factor that justifies the block representation (real WGS gVCFs
+    sit at 10-100×; a ratio near 1 means the block merger upstream
+    is broken and storage is about to blow up). Pure arithmetic on
+    the parsed interval schema — n_positions = Σ (end − start + 1)
+    — one collapsing aggregate."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
+    agg = recs.groupBy("sample_id").agg(
+        F.count("*").alias("n_records"),
+        F.sum(F.when(F.col("alt") == "", 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_blocks"),
+        F.sum(F.col("end") - F.col("start") + 1).cast("bigint").alias("n_positions"),
+    )
+    return agg.select(
+        "sample_id",
+        "n_records",
+        "n_blocks",
+        "n_positions",
+        F.floor(F.col("n_positions") * 1_000_000.0 / F.col("n_records") + F.lit(0.5))
+        .cast("bigint")
+        .alias("positions_per_record_1e6"),
+    )
 
 
 # Shared CTE for the popgen ops: a COHORT dosage grid — every sample
@@ -1139,223 +1091,218 @@ def transmission_phase(fd: "F.Column", md: "F.Column") -> "F.Column":
     )
 
 
-def _register_popgen_queries() -> None:
-    from gvcf_hbase_spark.registry import register
-    from gvcf_hbase_spark.operators.gvcf import expand_blocks
-
-    def _dosage_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Per-(sample, contig, pos) diploid alt-allele dosage over the
-        COHORT fixture: one gVCF record per (site, sample) — hom-ref as
-        an END= block, het/hom-alt as variants — parsed through the real
-        line parser, then block-expanded. Every sample covers every
-        site, the joint-calling invariant HWE / concordance / trio math
-        needs (see _DOSAGE_CTE)."""
-        from gvcf_hbase_spark.sources.tables import load_table, spread
-
-        o = spread(load_table(spark, sf_dir, "orders").select("o_orderkey"))
-        grid = o.select(
-            F.col("o_orderkey").alias("k"),
-            F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("s"),
-        )
-        m = (F.col("k") * (F.col("s") + 3) + F.col("s") * 7) % 6
-        dosage = F.when(m < 3, 0).when(m < 5, 1).otherwise(2)
-        gt_call = (
-            F.when(dosage == 0, F.lit("0/0:9"))
-            .when(dosage == 1, F.lit("0/1:11"))
-            .otherwise(F.lit("1/1:13"))
-        )
-        line = F.concat_ws(
-            "\t",
-            F.concat(F.lit("chr"), (F.col("k") % 2 + 1).cast("string")),
-            F.col("k").cast("string"),
-            F.lit("."),
-            F.lit("A"),
-            F.when(dosage == 0, F.lit("<NON_REF>")).otherwise(F.lit("T,<NON_REF>")),
-            F.lit("50"),
-            F.lit("PASS"),
-            F.when(dosage == 0, F.concat(F.lit("END="), F.col("k").cast("string")))
-            .otherwise(F.lit("DP=10")),
-            F.lit("GT:DP"),
-            gt_call,
-        )
-        lines = grid.select(
-            F.concat(F.lit("s"), F.col("s").cast("string")).alias("sample_id"),
-            line.alias("line"),
-        )
-        recs = parse_gvcf_lines(lines)
-        gt_parts = F.split(F.col("gt"), "/")
-        return expand_blocks(
-            recs.withColumn(
-                "alt_n", F.size(F.filter(gt_parts, lambda x: x == "1")).cast("long")
-            ).withColumn("is_var", F.col("is_variant").cast("int"))
-        ).select("sample_id", "contig", "pos", "alt_n", "is_var")
-
-    @register("gvcf_hwe_chi2", oracle=_HWE_ORACLE, tags=("gvcf", "stats"))
-    def gvcf_hwe_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Hardy–Weinberg equilibrium χ² per polymorphic site: observed
-        hom-ref/het/hom-alt counts vs the p²,2pq,q² expectation from the
-        site's allele frequency — THE variant-QC filter (strong HWE
-        departure flags genotyping artifacts / batch effects before any
-        association test trusts the site). gVCF blocks are what make the
-        hom-ref count n_rr honest, same argument as `gvcf_allele_freq`.
-
-        One (contig, pos) hash aggregate over the expanded dosage matrix
-        — identical shuffle shape to the combine — with int conditional
-        partials; p and the three-term χ² are per-row float expressions
-        written token-identically in the oracle, 1e-6-quantized. The
-        polymorphic filter (0 < AC < AN) keeps every expected count
-        strictly positive on both engines."""
-        d = _dosage_positions(spark, sf_dir)
-        g = (
-            d.groupBy("contig", "pos")
-            .agg(
-                F.sum(F.when(F.col("alt_n") == 0, 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_rr"),
-                F.sum(F.when(F.col("alt_n") == 1, 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_ra"),
-                F.sum(F.when(F.col("alt_n") == 2, 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_aa"),
-                F.max("is_var").alias("__v"),
-            )
-            .filter(F.col("__v") == 1)
-            .drop("__v")
-        )
-        h = g.filter(
-            ((2 * F.col("n_rr") + F.col("n_ra")) > 0)
-            & ((F.col("n_ra") + 2 * F.col("n_aa")) > 0)
-        ).select(
-            "*",
-            (F.col("n_rr") + F.col("n_ra") + F.col("n_aa")).alias("n"),
-            (
-                (2 * F.col("n_rr") + F.col("n_ra")).cast("double")
-                / (2 * (F.col("n_rr") + F.col("n_ra") + F.col("n_aa")))
-            ).alias("p"),
-        )
-        n, p = F.col("n"), F.col("p")
-        chi2 = (
-            (F.col("n_rr") - n * p * p) * (F.col("n_rr") - n * p * p) / (n * p * p)
-            + (F.col("n_ra") - 2 * n * p * (1 - p))
-            * (F.col("n_ra") - 2 * n * p * (1 - p))
-            / (2 * n * p * (1 - p))
-            + (F.col("n_aa") - n * (1 - p) * (1 - p))
-            * (F.col("n_aa") - n * (1 - p) * (1 - p))
-            / (n * (1 - p) * (1 - p))
-        )
-        return h.select(
-            "contig",
-            "pos",
-            "n_rr",
-            "n_ra",
-            "n_aa",
-            F.floor(chi2 * 1e6 + F.lit(0.5)).cast("bigint").alias("hwe_chi2_1e6"),
-        )
-
-    @register(
-        "gvcf_genotype_concordance", oracle=_CONCORDANCE_ORACLE, tags=("gvcf", "qc")
+def _dosage_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(sample, contig, pos) diploid alt-allele dosage over the
+    COHORT fixture: one gVCF record per (site, sample) — hom-ref as
+    an END= block, het/hom-alt as variants — parsed through the real
+    line parser, then block-expanded. Every sample covers every
+    site, the joint-calling invariant HWE / concordance / trio math
+    needs (see _DOSAGE_CTE)."""
+    o = spread(load_table(spark, sf_dir, "orders").select("o_orderkey"))
+    grid = o.select(
+        F.col("o_orderkey").alias("k"),
+        F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("s"),
     )
-    def gvcf_genotype_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Pairwise genotype concordance matrix: for every sample pair,
-        the fraction of co-covered positions with identical allele
-        dosage — the replicate/duplicate-detection and sample-swap QC
-        (a supposed duplicate pair below ~99% is a swap; an unexpected
-        pair above ~90% is a relative or a contamination).
+    m = (F.col("k") * (F.col("s") + 3) + F.col("s") * 7) % 6
+    dosage = F.when(m < 3, 0).when(m < 5, 1).otherwise(2)
+    gt_call = (
+        F.when(dosage == 0, F.lit("0/0:9"))
+        .when(dosage == 1, F.lit("0/1:11"))
+        .otherwise(F.lit("1/1:13"))
+    )
+    line = F.concat_ws(
+        "\t",
+        F.concat(F.lit("chr"), (F.col("k") % 2 + 1).cast("string")),
+        F.col("k").cast("string"),
+        F.lit("."),
+        F.lit("A"),
+        F.when(dosage == 0, F.lit("<NON_REF>")).otherwise(F.lit("T,<NON_REF>")),
+        F.lit("50"),
+        F.lit("PASS"),
+        F.when(dosage == 0, F.concat(F.lit("END="), F.col("k").cast("string")))
+        .otherwise(F.lit("DP=10")),
+        F.lit("GT:DP"),
+        gt_call,
+    )
+    lines = grid.select(
+        F.concat(F.lit("s"), F.col("s").cast("string")).alias("sample_id"),
+        line.alias("line"),
+    )
+    recs = parse_gvcf_lines(lines)
+    gt_parts = F.split(F.col("gt"), "/")
+    return expand_blocks(
+        recs.withColumn(
+            "alt_n", F.size(F.filter(gt_parts, lambda x: x == "1")).cast("long")
+        ).withColumn("is_var", F.col("is_variant").cast("int"))
+    ).select("sample_id", "contig", "pos", "alt_n", "is_var")
 
-        ONE self-equi-join on (contig, pos) — co-partitioned, the same
-        key the dosage matrix was just aggregated on — then a collapsing
-        aggregate to #pairs rows, all-int partials. Per-position fan-out
-        is C(cohort, 2), the documented pressure point at biobank scale
-        (the standard fix: subsample positions, which drops in as a
-        pre-filter on pos without touching the shape)."""
-        # Materialize the dosage matrix once (lazy checkpoint): both join
-        # sides otherwise re-run the full synth+parse+block-expand grid —
-        # the broadcast build side cannot share the stream side's work, so
-        # the grid was computed twice per run (r09 measured 1.7 s -> 0.9 s
-        # at sf0.1). At cluster scale this materialization IS the dosage
-        # store a joint-calling pipeline keeps on disk anyway.
-        d = _dosage_positions(spark, sf_dir).transform(one_compute_boundary)
-        a = d.select("contig", "pos", F.col("sample_id").alias("sample_a"), F.col("alt_n").alias("da"))
-        b = d.select("contig", "pos", F.col("sample_id").alias("sample_b"), F.col("alt_n").alias("db"))
-        pairs = a.join(b, ["contig", "pos"]).filter(F.col("sample_a") < F.col("sample_b"))
-        match = F.when(F.col("da") == F.col("db"), 1).otherwise(0)
-        return pairs.groupBy("sample_a", "sample_b").agg(
-            F.count("*").alias("n_sites"),
-            F.sum(match).cast("bigint").alias("n_match"),
-            F.floor(F.sum(match) * 1_000_000.0 / F.count("*") + F.lit(0.5))
+
+@register("gvcf_hwe_chi2", oracle=_HWE_ORACLE, tags=("gvcf", "stats"))
+def gvcf_hwe_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hardy–Weinberg equilibrium χ² per polymorphic site: observed
+    hom-ref/het/hom-alt counts vs the p²,2pq,q² expectation from the
+    site's allele frequency — THE variant-QC filter (strong HWE
+    departure flags genotyping artifacts / batch effects before any
+    association test trusts the site). gVCF blocks are what make the
+    hom-ref count n_rr honest, same argument as `gvcf_allele_freq`.
+
+    One (contig, pos) hash aggregate over the expanded dosage matrix
+    — identical shuffle shape to the combine — with int conditional
+    partials; p and the three-term χ² are per-row float expressions
+    written token-identically in the oracle, 1e-6-quantized. The
+    polymorphic filter (0 < AC < AN) keeps every expected count
+    strictly positive on both engines."""
+    d = _dosage_positions(spark, sf_dir)
+    g = (
+        d.groupBy("contig", "pos")
+        .agg(
+            F.sum(F.when(F.col("alt_n") == 0, 1).otherwise(0))
             .cast("bigint")
-            .alias("concordance_1e6"),
-        )
-
-    @register("gvcf_mendelian_violations", oracle=_MENDEL_ORACLE, tags=("gvcf", "qc"))
-    def gvcf_mendelian_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Mendelian-violation rate for the (s0, s1, s2) trio: at each
-        position covered in all three, the child's dosage must be the
-        sum of one allele from each parent — dosage d admits alleles
-        {1} if d=2, {0,1} if d=1, {0} if d=0, so the feasible child
-        range is [1_{f=2}+1_{m=2}, 1_{f≥1}+1_{m≥1}] and anything outside
-        is a violation. The de-novo / pedigree-error QC every family
-        cohort runs; gVCF blocks again make "covered and hom-ref"
-        explicit, so absence of data never counts as a violation.
-
-        Two co-partitioned equi-joins on (contig, pos) (both reuse one
-        exchange of the dosage matrix filtered per role) and one
-        per-contig collapsing aggregate — integer partials, one
-        quantized ratio. Branch-free bounds check, identical in the
-        oracle."""
-        # one grid materialization serves all three role slices (r09; the
-        # three filtered sides otherwise each re-ran the synth+parse grid)
-        d = _dosage_positions(spark, sf_dir).transform(one_compute_boundary)
-        fa = d.filter(F.col("sample_id") == "s0").select("contig", "pos", F.col("alt_n").alias("fd"))
-        mo = d.filter(F.col("sample_id") == "s1").select("contig", "pos", F.col("alt_n").alias("md"))
-        ch = d.filter(F.col("sample_id") == "s2").select("contig", "pos", F.col("alt_n").alias("cd"))
-        trio = fa.join(mo, ["contig", "pos"]).join(ch, ["contig", "pos"])
-        cmin = F.when(F.col("fd") == 2, 1).otherwise(0) + F.when(F.col("md") == 2, 1).otherwise(0)
-        cmax = F.when(F.col("fd") >= 1, 1).otherwise(0) + F.when(F.col("md") >= 1, 1).otherwise(0)
-        viol = F.when((F.col("cd") < cmin) | (F.col("cd") > cmax), 1).otherwise(0)
-        return trio.select("contig", viol.alias("viol")).groupBy("contig").agg(
-            F.count("*").alias("n_trio_sites"),
-            F.sum("viol").cast("bigint").alias("n_violations"),
-            F.floor(F.sum("viol") * 1_000_000.0 / F.count("*") + F.lit(0.5))
+            .alias("n_rr"),
+            F.sum(F.when(F.col("alt_n") == 1, 1).otherwise(0))
             .cast("bigint")
-            .alias("violation_rate_1e6"),
+            .alias("n_ra"),
+            F.sum(F.when(F.col("alt_n") == 2, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_aa"),
+            F.max("is_var").alias("__v"),
         )
+        .filter(F.col("__v") == 1)
+        .drop("__v")
+    )
+    h = g.filter(
+        ((2 * F.col("n_rr") + F.col("n_ra")) > 0)
+        & ((F.col("n_ra") + 2 * F.col("n_aa")) > 0)
+    ).select(
+        "*",
+        (F.col("n_rr") + F.col("n_ra") + F.col("n_aa")).alias("n"),
+        (
+            (2 * F.col("n_rr") + F.col("n_ra")).cast("double")
+            / (2 * (F.col("n_rr") + F.col("n_ra") + F.col("n_aa")))
+        ).alias("p"),
+    )
+    n, p = F.col("n"), F.col("p")
+    chi2 = (
+        (F.col("n_rr") - n * p * p) * (F.col("n_rr") - n * p * p) / (n * p * p)
+        + (F.col("n_ra") - 2 * n * p * (1 - p))
+        * (F.col("n_ra") - 2 * n * p * (1 - p))
+        / (2 * n * p * (1 - p))
+        + (F.col("n_aa") - n * (1 - p) * (1 - p))
+        * (F.col("n_aa") - n * (1 - p) * (1 - p))
+        / (n * (1 - p) * (1 - p))
+    )
+    return h.select(
+        "contig",
+        "pos",
+        "n_rr",
+        "n_ra",
+        "n_aa",
+        F.floor(chi2 * 1e6 + F.lit(0.5)).cast("bigint").alias("hwe_chi2_1e6"),
+    )
 
-    @register("gvcf_phase_by_transmission", oracle=_PHASE_ORACLE, tags=("gvcf", "popgen"))
-    def gvcf_phase_by_transmission(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Phase-by-transmission for the (s0, s1, s2) trio: at every
-        site where the CHILD is heterozygous, pedigree logic pins which
-        parent transmitted the alt allele whenever at least one parent
-        is homozygous — father hom-alt or mother hom-ref forces the alt
-        through the paternal haplotype (``F1M0``), the mirror cases
-        force maternal (``F0M1``); double-het trios stay ``ambiguous``
-        (population phasing's job) and Mendelian-infeasible combinations
-        are tagged ``violation``. This is the deterministic first pass
-        of every trio phasing pipeline (the read-backed/statistical
-        phasers only touch what transmission logic leaves ambiguous),
-        and the haplotype input to phased-panel construction.
 
-        Same physical shape as `gvcf_mendelian_violations`: two
-        co-partitioned (contig, pos) equi-joins off one exchange of the
-        role-filtered dosage matrix, then branch-free integer CASE logic
-        per site — per-site rows out, no aggregate (downstream consumers
-        are position-keyed writers). Scales as the dosage matrix scan;
-        the trio fan-out is 1:1, never pairwise."""
-        # same one-materialization-for-three-slices boundary as
-        # gvcf_mendelian_violations (r09)
-        d = _dosage_positions(spark, sf_dir).transform(one_compute_boundary)
-        fa = d.filter(F.col("sample_id") == "s0").select("contig", "pos", F.col("alt_n").alias("fd"))
-        mo = d.filter(F.col("sample_id") == "s1").select("contig", "pos", F.col("alt_n").alias("md"))
-        ch = d.filter(F.col("sample_id") == "s2").select("contig", "pos", F.col("alt_n").alias("cd"))
-        trio = fa.join(mo, ["contig", "pos"]).join(ch, ["contig", "pos"]).filter(
-            F.col("cd") == 1
-        )
-        phase = transmission_phase(F.col("fd"), F.col("md"))
-        return trio.select("contig", "pos", "fd", "md", phase.alias("phase"))
+@register(
+    "gvcf_genotype_concordance", oracle=_CONCORDANCE_ORACLE, tags=("gvcf", "qc")
+)
+def gvcf_genotype_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise genotype concordance matrix: for every sample pair,
+    the fraction of co-covered positions with identical allele
+    dosage — the replicate/duplicate-detection and sample-swap QC
+    (a supposed duplicate pair below ~99% is a swap; an unexpected
+    pair above ~90% is a relative or a contamination).
+
+    ONE self-equi-join on (contig, pos) — co-partitioned, the same
+    key the dosage matrix was just aggregated on — then a collapsing
+    aggregate to #pairs rows, all-int partials. Per-position fan-out
+    is C(cohort, 2), the documented pressure point at biobank scale
+    (the standard fix: subsample positions, which drops in as a
+    pre-filter on pos without touching the shape)."""
+    # Materialize the dosage matrix once (lazy checkpoint): both join
+    # sides otherwise re-run the full synth+parse+block-expand grid —
+    # the broadcast build side cannot share the stream side's work, so
+    # the grid was computed twice per run (r09 measured 1.7 s -> 0.9 s
+    # at sf0.1). At cluster scale this materialization IS the dosage
+    # store a joint-calling pipeline keeps on disk anyway.
+    d = _dosage_positions(spark, sf_dir).transform(one_compute_boundary)
+    a = d.select("contig", "pos", F.col("sample_id").alias("sample_a"), F.col("alt_n").alias("da"))
+    b = d.select("contig", "pos", F.col("sample_id").alias("sample_b"), F.col("alt_n").alias("db"))
+    pairs = a.join(b, ["contig", "pos"]).filter(F.col("sample_a") < F.col("sample_b"))
+    match = F.when(F.col("da") == F.col("db"), 1).otherwise(0)
+    return pairs.groupBy("sample_a", "sample_b").agg(
+        F.count("*").alias("n_sites"),
+        F.sum(match).cast("bigint").alias("n_match"),
+        F.floor(F.sum(match) * 1_000_000.0 / F.count("*") + F.lit(0.5))
+        .cast("bigint")
+        .alias("concordance_1e6"),
+    )
 
 
-_register_popgen_queries()
+@register("gvcf_mendelian_violations", oracle=_MENDEL_ORACLE, tags=("gvcf", "qc"))
+def gvcf_mendelian_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mendelian-violation rate for the (s0, s1, s2) trio: at each
+    position covered in all three, the child's dosage must be the
+    sum of one allele from each parent — dosage d admits alleles
+    {1} if d=2, {0,1} if d=1, {0} if d=0, so the feasible child
+    range is [1_{f=2}+1_{m=2}, 1_{f≥1}+1_{m≥1}] and anything outside
+    is a violation. The de-novo / pedigree-error QC every family
+    cohort runs; gVCF blocks again make "covered and hom-ref"
+    explicit, so absence of data never counts as a violation.
+
+    Two co-partitioned equi-joins on (contig, pos) (both reuse one
+    exchange of the dosage matrix filtered per role) and one
+    per-contig collapsing aggregate — integer partials, one
+    quantized ratio. Branch-free bounds check, identical in the
+    oracle."""
+    # one grid materialization serves all three role slices (r09; the
+    # three filtered sides otherwise each re-ran the synth+parse grid)
+    d = _dosage_positions(spark, sf_dir).transform(one_compute_boundary)
+    fa = d.filter(F.col("sample_id") == "s0").select("contig", "pos", F.col("alt_n").alias("fd"))
+    mo = d.filter(F.col("sample_id") == "s1").select("contig", "pos", F.col("alt_n").alias("md"))
+    ch = d.filter(F.col("sample_id") == "s2").select("contig", "pos", F.col("alt_n").alias("cd"))
+    trio = fa.join(mo, ["contig", "pos"]).join(ch, ["contig", "pos"])
+    cmin = F.when(F.col("fd") == 2, 1).otherwise(0) + F.when(F.col("md") == 2, 1).otherwise(0)
+    cmax = F.when(F.col("fd") >= 1, 1).otherwise(0) + F.when(F.col("md") >= 1, 1).otherwise(0)
+    viol = F.when((F.col("cd") < cmin) | (F.col("cd") > cmax), 1).otherwise(0)
+    return trio.select("contig", viol.alias("viol")).groupBy("contig").agg(
+        F.count("*").alias("n_trio_sites"),
+        F.sum("viol").cast("bigint").alias("n_violations"),
+        F.floor(F.sum("viol") * 1_000_000.0 / F.count("*") + F.lit(0.5))
+        .cast("bigint")
+        .alias("violation_rate_1e6"),
+    )
+
+
+@register("gvcf_phase_by_transmission", oracle=_PHASE_ORACLE, tags=("gvcf", "popgen"))
+def gvcf_phase_by_transmission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Phase-by-transmission for the (s0, s1, s2) trio: at every
+    site where the CHILD is heterozygous, pedigree logic pins which
+    parent transmitted the alt allele whenever at least one parent
+    is homozygous — father hom-alt or mother hom-ref forces the alt
+    through the paternal haplotype (``F1M0``), the mirror cases
+    force maternal (``F0M1``); double-het trios stay ``ambiguous``
+    (population phasing's job) and Mendelian-infeasible combinations
+    are tagged ``violation``. This is the deterministic first pass
+    of every trio phasing pipeline (the read-backed/statistical
+    phasers only touch what transmission logic leaves ambiguous),
+    and the haplotype input to phased-panel construction.
+
+    Same physical shape as `gvcf_mendelian_violations`: two
+    co-partitioned (contig, pos) equi-joins off one exchange of the
+    role-filtered dosage matrix, then branch-free integer CASE logic
+    per site — per-site rows out, no aggregate (downstream consumers
+    are position-keyed writers). Scales as the dosage matrix scan;
+    the trio fan-out is 1:1, never pairwise."""
+    # same one-materialization-for-three-slices boundary as
+    # gvcf_mendelian_violations (r09)
+    d = _dosage_positions(spark, sf_dir).transform(one_compute_boundary)
+    fa = d.filter(F.col("sample_id") == "s0").select("contig", "pos", F.col("alt_n").alias("fd"))
+    mo = d.filter(F.col("sample_id") == "s1").select("contig", "pos", F.col("alt_n").alias("md"))
+    ch = d.filter(F.col("sample_id") == "s2").select("contig", "pos", F.col("alt_n").alias("cd"))
+    trio = fa.join(mo, ["contig", "pos"]).join(ch, ["contig", "pos"]).filter(
+        F.col("cd") == 1
+    )
+    phase = transmission_phase(F.col("fd"), F.col("md"))
+    return trio.select("contig", "pos", "fd", "md", phase.alias("phase"))
 
 
 _ROH_MIN_RUN = 5
@@ -1405,55 +1352,48 @@ _ROH_ORACLE = _ROH_CTE + r""",
 """.replace("{MIN_RUN}", str(_ROH_MIN_RUN))
 
 
-def _register_roh_query() -> None:
-    from gvcf_hbase_spark.registry import register
-    from pyspark.sql import Window
+@register("gvcf_roh_runs", oracle=_ROH_ORACLE, tags=("gvcf", "window"))
+def gvcf_roh_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Runs of homozygosity: per sample and contig, maximal stretches
+    of consecutive sites whose genotype is homozygous (dosage 0 or
+    2), reported when ≥ 5 sites long — the autozygosity /
+    consanguinity signal (long ROH = recent common ancestry) and a
+    genotyping-QC canary (an ROH spanning a whole chromosome is a
+    deletion or a reference artifact). Runs over the cohort dosage
+    grid, which is exactly the joint-called matrix a real ROH caller
+    consumes.
 
-    @register("gvcf_roh_runs", oracle=_ROH_ORACLE, tags=("gvcf", "window"))
-    def gvcf_roh_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Runs of homozygosity: per sample and contig, maximal stretches
-        of consecutive sites whose genotype is homozygous (dosage 0 or
-        2), reported when ≥ 5 sites long — the autozygosity /
-        consanguinity signal (long ROH = recent common ancestry) and a
-        genotyping-QC canary (an ROH spanning a whole chromosome is a
-        deletion or a reference artifact). Runs over the cohort dosage
-        grid, which is exactly the joint-called matrix a real ROH caller
-        consumes.
-
-        The classic gaps-and-islands construction (`win_gaps_islands`):
-        TWO row_number windows sharing one (sample, contig) exchange —
-        their difference is constant exactly within a maximal
-        same-genotype stretch — then one aggregate per island. No
-        self-join, no lag cascade; at 100 TB the genome axis partitions
-        by (sample, contig) and every step stays inside that key."""
-        d = _dosage_grid(spark, sf_dir)
-        marked = d.select(
-            "sample_id",
-            "contig",
-            "pos",
-            F.when(F.col("alt_n").isin(0, 2), 1).otherwise(0).alias("is_hom"),
+    The classic gaps-and-islands construction (`win_gaps_islands`):
+    TWO row_number windows sharing one (sample, contig) exchange —
+    their difference is constant exactly within a maximal
+    same-genotype stretch — then one aggregate per island. No
+    self-join, no lag cascade; at 100 TB the genome axis partitions
+    by (sample, contig) and every step stays inside that key."""
+    d = _dosage_grid(spark, sf_dir)
+    marked = d.select(
+        "sample_id",
+        "contig",
+        "pos",
+        F.when(F.col("alt_n").isin(0, 2), 1).otherwise(0).alias("is_hom"),
+    )
+    w_all = Window.partitionBy("sample_id", "contig").orderBy("pos")
+    w_hom = Window.partitionBy("sample_id", "contig", "is_hom").orderBy("pos")
+    grouped = marked.select(
+        "*",
+        (F.row_number().over(w_all) - F.row_number().over(w_hom)).alias("grp"),
+    )
+    runs = (
+        grouped.filter(F.col("is_hom") == 1)
+        .groupBy("sample_id", "contig", "grp")
+        .agg(
+            F.count("*").alias("n_sites"),
+            F.min("pos").cast("bigint").alias("start_pos"),
+            F.max("pos").cast("bigint").alias("end_pos"),
         )
-        w_all = Window.partitionBy("sample_id", "contig").orderBy("pos")
-        w_hom = Window.partitionBy("sample_id", "contig", "is_hom").orderBy("pos")
-        grouped = marked.select(
-            "*",
-            (F.row_number().over(w_all) - F.row_number().over(w_hom)).alias("grp"),
-        )
-        runs = (
-            grouped.filter(F.col("is_hom") == 1)
-            .groupBy("sample_id", "contig", "grp")
-            .agg(
-                F.count("*").alias("n_sites"),
-                F.min("pos").cast("bigint").alias("start_pos"),
-                F.max("pos").cast("bigint").alias("end_pos"),
-            )
-        )
-        return runs.filter(F.col("n_sites") >= _ROH_MIN_RUN).select(
-            "sample_id", "contig", "start_pos", "end_pos", F.col("n_sites").cast("bigint").alias("n_sites")
-        )
-
-
-_register_roh_query()
+    )
+    return runs.filter(F.col("n_sites") >= _ROH_MIN_RUN).select(
+        "sample_id", "contig", "start_pos", "end_pos", F.col("n_sites").cast("bigint").alias("n_sites")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1563,8 +1503,6 @@ def _dosage_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ROH_CTE note): the quadratic hom-rule gives per-sample variety so
     allele counts differ across sites instead of cycling with a short
     period."""
-    from gvcf_hbase_spark.sources.tables import load_table, spread
-
     o = spread(load_table(spark, sf_dir, "orders").select("o_orderkey"))
     grid = o.select(
         F.col("o_orderkey").alias("k"),
@@ -1583,172 +1521,168 @@ def _dosage_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_cohort_queries() -> None:
-    from gvcf_hbase_spark.registry import register
-    from pyspark.sql import Window
+@register("gvcf_variant_density", oracle=_DENSITY_ORACLE, tags=("gvcf", "agg"))
+def gvcf_variant_density(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Variant density per fixed-width genomic window — the track a
+    genome browser draws and the first place a caller artifact shows
+    up (a window at 10x the chromosome median is a mapping pileup,
+    a dead window inside a gene is a capture dropout). One
+    collapsing aggregate keyed (contig, pos // window): partial
+    aggregation collapses each scan split to <=1 row per window
+    before the exchange, so at 100 TB the shuffle is proportional
+    to windows (3M for a 1 kb human tiling), not variants."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
+    variants = recs.filter(F.col("is_variant"))
+    return variants.groupBy(
+        "contig",
+        F.floor(F.col("start") / _DENSITY_WIN).cast("bigint").alias("win_id"),
+    ).agg(
+        F.count("*").cast("bigint").alias("n_variants"),
+        F.countDistinct("sample_id").cast("bigint").alias("n_carriers"),
+        F.floor(F.count("*") * 1_000_000.0 / _DENSITY_WIN + F.lit(0.5))
+        .cast("bigint")
+        .alias("density_1e6"),
+    )
 
-    @register("gvcf_variant_density", oracle=_DENSITY_ORACLE, tags=("gvcf", "agg"))
-    def gvcf_variant_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Variant density per fixed-width genomic window — the track a
-        genome browser draws and the first place a caller artifact shows
-        up (a window at 10x the chromosome median is a mapping pileup,
-        a dead window inside a gene is a capture dropout). One
-        collapsing aggregate keyed (contig, pos // window): partial
-        aggregation collapses each scan split to <=1 row per window
-        before the exchange, so at 100 TB the shuffle is proportional
-        to windows (3M for a 1 kb human tiling), not variants."""
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=2))
-        variants = recs.filter(F.col("is_variant"))
-        return variants.groupBy(
-            "contig",
-            F.floor(F.col("start") / _DENSITY_WIN).cast("bigint").alias("win_id"),
-        ).agg(
-            F.count("*").cast("bigint").alias("n_variants"),
-            F.countDistinct("sample_id").cast("bigint").alias("n_carriers"),
-            F.floor(F.count("*") * 1_000_000.0 / _DENSITY_WIN + F.lit(0.5))
-            .cast("bigint")
-            .alias("density_1e6"),
+
+@register("gvcf_callable_regions", oracle=_CALLABLE_ORACLE, tags=("gvcf", "window"))
+def gvcf_callable_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Callable-region BED: maximal runs of positions covered by >=
+    MIN_SAMPLES distinct samples, the interval list downstream
+    joint-genotyping scatters over. Block records expand to their
+    spanned positions (span=9 fixture mode so depth actually
+    varies), per-position depth is one collapsing aggregate, and
+    runs merge with the gaps-and-islands difference trick.
+
+    The islands window partitions by (contig, pos // 100) — a
+    SHARD, not the whole contig. A 250 Mbp chromosome as one sort
+    partition would be the single-task shape the r03 verdict
+    flagged elsewhere; sharding bounds every sort and clips regions
+    at shard boundaries, exactly how GATK-style interval scatter
+    behaves (documented, deterministic, and mirrored in the
+    oracle)."""
+    recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9))
+    expanded = recs.select(
+        "sample_id",
+        "contig",
+        F.explode(F.sequence(F.col("start"), F.col("end"))).alias("pos"),
+    )
+    depth = expanded.groupBy("contig", "pos").agg(
+        F.countDistinct("sample_id").alias("n_samples")
+    )
+    callable_pos = depth.filter(
+        F.col("n_samples") >= _CALLABLE_MIN_SAMPLES
+    ).select("contig", "pos", F.floor(F.col("pos") / 100).alias("shard"))
+    w = Window.partitionBy("contig", "shard").orderBy("pos")
+    grouped = callable_pos.select(
+        "*", (F.col("pos") - F.row_number().over(w)).alias("grp")
+    )
+    return grouped.groupBy("contig", "shard", "grp").agg(
+        F.min("pos").cast("bigint").alias("start_pos"),
+        F.max("pos").cast("bigint").alias("end_pos"),
+        F.count("*").cast("bigint").alias("n_sites"),
+    ).select("contig", "start_pos", "end_pos", "n_sites")
+
+
+@register("gvcf_singleton_share", oracle=_SINGLETON_ORACLE, tags=("gvcf", "qc"))
+def gvcf_singleton_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-sample singleton share: of the variant sites a sample
+    carries, how many are carried by NO other sample (cohort allele
+    count == the sample's own dosage contribution... here AC == 1,
+    a het private to one sample). Elevated singleton share is the
+    classic sample-swap / contamination / batch-effect flag.
+
+    Two-phase: site-level AC is a collapsing aggregate on the site
+    key, then carriers join it ON THE SAME KEY — the exchange from
+    the aggregate is reused for the join (co-partitioned, no second
+    shuffle of the big side), then a per-sample rollup."""
+    # one grid materialization serves the AC aggregate and the carrier
+    # side of the join (r09; same boundary as the other cohort ops)
+    d = _dosage_grid(spark, sf_dir).transform(one_compute_boundary)
+    sites = d.groupBy("contig", "pos").agg(F.sum("alt_n").alias("ac"))
+    carriers = d.filter(F.col("alt_n") >= 1)
+    joined = carriers.join(sites, ["contig", "pos"])
+    return joined.groupBy("sample_id").agg(
+        F.count("*").cast("bigint").alias("n_carried"),
+        F.sum(F.when(F.col("ac") == 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_singletons"),
+        F.floor(
+            F.sum(F.when(F.col("ac") == 1, 1).otherwise(0)) * 1_000_000.0
+            / F.count("*")
+            + F.lit(0.5)
         )
+        .cast("bigint")
+        .alias("singleton_share_1e6"),
+    )
 
-    @register("gvcf_callable_regions", oracle=_CALLABLE_ORACLE, tags=("gvcf", "window"))
-    def gvcf_callable_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Callable-region BED: maximal runs of positions covered by >=
-        MIN_SAMPLES distinct samples, the interval list downstream
-        joint-genotyping scatters over. Block records expand to their
-        spanned positions (span=9 fixture mode so depth actually
-        varies), per-position depth is one collapsing aggregate, and
-        runs merge with the gaps-and-islands difference trick.
 
-        The islands window partitions by (contig, pos // 100) — a
-        SHARD, not the whole contig. A 250 Mbp chromosome as one sort
-        partition would be the single-task shape the r03 verdict
-        flagged elsewhere; sharding bounds every sort and clips regions
-        at shard boundaries, exactly how GATK-style interval scatter
-        behaves (documented, deterministic, and mirrored in the
-        oracle)."""
-        recs = parse_gvcf_lines(_fixture_lines(spark, sf_dir, span=9))
-        expanded = recs.select(
-            "sample_id",
-            "contig",
-            F.explode(F.sequence(F.col("start"), F.col("end"))).alias("pos"),
+@register("gvcf_relatedness_ibs", oracle=_IBS_ORACLE, tags=("gvcf", "join"))
+def gvcf_relatedness_ibs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise identity-by-state between samples over the dosage
+    grid: IBS0/1/2 counts and the normalized IBS score — the
+    duplicate-sample / cryptic-relatedness screen every cohort runs
+    before association testing (score ~1.0 = same individual,
+    ~0.75 = first-degree).
+
+    Self-join co-partitioned on the site key (contig, pos): one
+    exchange per side, pair expansion happens inside partitions.
+    Pairs are O(N^2) in samples, so SITE THINNING runs BEFORE the
+    pair join (KING's approach, built in rather than promised):
+    monomorphic sites drop first — every pair is trivially IBS2
+    there, zero relatedness signal — then a deterministic md5
+    bucket filter keeps 12/16 of the informative sites (the knob a
+    biobank turns down to its ~50k-site budget; hash thinning is
+    re-run-stable and append-stable like `curate_hash_split`). The
+    thin relation is one row per kept site, semi-joined on the same
+    (contig, pos) key the pair join co-partitions on, so the pair
+    fan-out is bounded by budget x N^2/2 counters, not by
+    cohort x genome."""
+    d = _dosage_grid(spark, sf_dir)
+    thinned = (
+        d.groupBy("contig", "pos")
+        .agg(F.min("alt_n").alias("lo"), F.max("alt_n").alias("hi"))
+        .filter(
+            (F.col("lo") != F.col("hi"))
+            & F.substring(
+                F.md5(
+                    F.concat(F.col("contig"), F.lit(":"), F.col("pos").cast("string"))
+                ),
+                1,
+                1,
+            ).isin(list("0123456789ab"))
         )
-        depth = expanded.groupBy("contig", "pos").agg(
-            F.countDistinct("sample_id").alias("n_samples")
+        .select("contig", "pos")
+    )
+    # Materialize the THINNED grid once (lazy checkpoint): both pair
+    # sides otherwise recompute grid+thin — the broadcast build side
+    # cannot reuse the stream side's exchange (r09, same reasoning as
+    # gvcf_genotype_concordance; measured 2.3 s -> 2.0 s quiet and
+    # 6.5 s -> 3.4 s loaded at sf0.1). The materialized relation is the
+    # post-thinning site budget, the smallest relation in the query.
+    d = d.join(thinned, ["contig", "pos"], "leftsemi").transform(one_compute_boundary)
+    a = d.select("contig", "pos", F.col("sample_id").alias("sample_a"), F.col("alt_n").alias("da"))
+    b = d.select("contig", "pos", F.col("sample_id").alias("sample_b"), F.col("alt_n").alias("db"))
+    pairs = a.join(b, ["contig", "pos"]).filter(F.col("sample_a") < F.col("sample_b"))
+    diff = F.abs(F.col("da") - F.col("db"))
+    agg = pairs.groupBy("sample_a", "sample_b").agg(
+        F.count("*").cast("bigint").alias("n_sites"),
+        F.sum(F.when(diff == 2, 1).otherwise(0)).cast("bigint").alias("ibs0"),
+        F.sum(F.when(diff == 1, 1).otherwise(0)).cast("bigint").alias("ibs1"),
+        F.sum(F.when(diff == 0, 1).otherwise(0)).cast("bigint").alias("ibs2"),
+    )
+    return agg.select(
+        "sample_a",
+        "sample_b",
+        "n_sites",
+        "ibs0",
+        "ibs1",
+        "ibs2",
+        F.floor(
+            (2 * F.col("ibs2") + F.col("ibs1")) * 1_000_000.0
+            / (2 * F.col("n_sites"))
+            + F.lit(0.5)
         )
-        callable_pos = depth.filter(
-            F.col("n_samples") >= _CALLABLE_MIN_SAMPLES
-        ).select("contig", "pos", F.floor(F.col("pos") / 100).alias("shard"))
-        w = Window.partitionBy("contig", "shard").orderBy("pos")
-        grouped = callable_pos.select(
-            "*", (F.col("pos") - F.row_number().over(w)).alias("grp")
-        )
-        return grouped.groupBy("contig", "shard", "grp").agg(
-            F.min("pos").cast("bigint").alias("start_pos"),
-            F.max("pos").cast("bigint").alias("end_pos"),
-            F.count("*").cast("bigint").alias("n_sites"),
-        ).select("contig", "start_pos", "end_pos", "n_sites")
-
-    @register("gvcf_singleton_share", oracle=_SINGLETON_ORACLE, tags=("gvcf", "qc"))
-    def gvcf_singleton_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Per-sample singleton share: of the variant sites a sample
-        carries, how many are carried by NO other sample (cohort allele
-        count == the sample's own dosage contribution... here AC == 1,
-        a het private to one sample). Elevated singleton share is the
-        classic sample-swap / contamination / batch-effect flag.
-
-        Two-phase: site-level AC is a collapsing aggregate on the site
-        key, then carriers join it ON THE SAME KEY — the exchange from
-        the aggregate is reused for the join (co-partitioned, no second
-        shuffle of the big side), then a per-sample rollup."""
-        # one grid materialization serves the AC aggregate and the carrier
-        # side of the join (r09; same boundary as the other cohort ops)
-        d = _dosage_grid(spark, sf_dir).transform(one_compute_boundary)
-        sites = d.groupBy("contig", "pos").agg(F.sum("alt_n").alias("ac"))
-        carriers = d.filter(F.col("alt_n") >= 1)
-        joined = carriers.join(sites, ["contig", "pos"])
-        return joined.groupBy("sample_id").agg(
-            F.count("*").cast("bigint").alias("n_carried"),
-            F.sum(F.when(F.col("ac") == 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_singletons"),
-            F.floor(
-                F.sum(F.when(F.col("ac") == 1, 1).otherwise(0)) * 1_000_000.0
-                / F.count("*")
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("singleton_share_1e6"),
-        )
-
-    @register("gvcf_relatedness_ibs", oracle=_IBS_ORACLE, tags=("gvcf", "join"))
-    def gvcf_relatedness_ibs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Pairwise identity-by-state between samples over the dosage
-        grid: IBS0/1/2 counts and the normalized IBS score — the
-        duplicate-sample / cryptic-relatedness screen every cohort runs
-        before association testing (score ~1.0 = same individual,
-        ~0.75 = first-degree).
-
-        Self-join co-partitioned on the site key (contig, pos): one
-        exchange per side, pair expansion happens inside partitions.
-        Pairs are O(N^2) in samples, so SITE THINNING runs BEFORE the
-        pair join (KING's approach, built in rather than promised):
-        monomorphic sites drop first — every pair is trivially IBS2
-        there, zero relatedness signal — then a deterministic md5
-        bucket filter keeps 12/16 of the informative sites (the knob a
-        biobank turns down to its ~50k-site budget; hash thinning is
-        re-run-stable and append-stable like `curate_hash_split`). The
-        thin relation is one row per kept site, semi-joined on the same
-        (contig, pos) key the pair join co-partitions on, so the pair
-        fan-out is bounded by budget x N^2/2 counters, not by
-        cohort x genome."""
-        d = _dosage_grid(spark, sf_dir)
-        thinned = (
-            d.groupBy("contig", "pos")
-            .agg(F.min("alt_n").alias("lo"), F.max("alt_n").alias("hi"))
-            .filter(
-                (F.col("lo") != F.col("hi"))
-                & F.substring(
-                    F.md5(
-                        F.concat(F.col("contig"), F.lit(":"), F.col("pos").cast("string"))
-                    ),
-                    1,
-                    1,
-                ).isin(list("0123456789ab"))
-            )
-            .select("contig", "pos")
-        )
-        # Materialize the THINNED grid once (lazy checkpoint): both pair
-        # sides otherwise recompute grid+thin — the broadcast build side
-        # cannot reuse the stream side's exchange (r09, same reasoning as
-        # gvcf_genotype_concordance; measured 2.3 s -> 2.0 s quiet and
-        # 6.5 s -> 3.4 s loaded at sf0.1). The materialized relation is the
-        # post-thinning site budget, the smallest relation in the query.
-        d = d.join(thinned, ["contig", "pos"], "leftsemi").transform(one_compute_boundary)
-        a = d.select("contig", "pos", F.col("sample_id").alias("sample_a"), F.col("alt_n").alias("da"))
-        b = d.select("contig", "pos", F.col("sample_id").alias("sample_b"), F.col("alt_n").alias("db"))
-        pairs = a.join(b, ["contig", "pos"]).filter(F.col("sample_a") < F.col("sample_b"))
-        diff = F.abs(F.col("da") - F.col("db"))
-        agg = pairs.groupBy("sample_a", "sample_b").agg(
-            F.count("*").cast("bigint").alias("n_sites"),
-            F.sum(F.when(diff == 2, 1).otherwise(0)).cast("bigint").alias("ibs0"),
-            F.sum(F.when(diff == 1, 1).otherwise(0)).cast("bigint").alias("ibs1"),
-            F.sum(F.when(diff == 0, 1).otherwise(0)).cast("bigint").alias("ibs2"),
-        )
-        return agg.select(
-            "sample_a",
-            "sample_b",
-            "n_sites",
-            "ibs0",
-            "ibs1",
-            "ibs2",
-            F.floor(
-                (2 * F.col("ibs2") + F.col("ibs1")) * 1_000_000.0
-                / (2 * F.col("n_sites"))
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("ibs_score_1e6"),
-        )
-
-
-_register_cohort_queries()
+        .cast("bigint")
+        .alias("ibs_score_1e6"),
+    )

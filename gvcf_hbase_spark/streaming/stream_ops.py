@@ -19,7 +19,9 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from gvcf_hbase_spark.operators.analytics import _KLEENE_ORACLE
 from gvcf_hbase_spark.registry import register
+from gvcf_hbase_spark.sources.tables import load_table, table_schema, with_event_time
 from gvcf_hbase_spark.streaming.batch_twins import tumbling_agg
 
 
@@ -95,8 +97,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     up one file per trigger (availableNow honors source rate limits, so N
     chunk files become N micro-batches); without a split a many-file
     events directory is not cut into one micro-batch per file."""
-    from gvcf_hbase_spark.sources.tables import table_schema, with_event_time
-
     reader = spark.readStream.schema(table_schema(spark, sf_dir, "events"))
     if _stream_split() > 1:
         reader = reader.option("maxFilesPerTrigger", 1)
@@ -190,8 +190,6 @@ def _signup_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static dimension: each user's first signup time, computed batch-side.
     At scale this is the offline-maintained dim table a stream enriches
     against; small by construction -> broadcast into every micro-batch."""
-    from gvcf_hbase_spark.sources.tables import load_table
-
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.filter(F.col("event_type") == "signup")
@@ -293,8 +291,6 @@ def stream_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def batch_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of stream_join_stream (same predicate on the batch
     DataFrame) — the equivalence check lives in tests."""
-    from gvcf_hbase_spark.sources.tables import load_table
-
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -510,13 +506,7 @@ def kleene_stateful(ev: DataFrame) -> DataFrame:
     )
 
 
-def _kleene_oracle() -> str:
-    from gvcf_hbase_spark.operators.analytics import _KLEENE_ORACLE
-
-    return _KLEENE_ORACLE
-
-
-@register("stream_pattern_kleene", oracle=_kleene_oracle(), tags=("streaming", "cep"))
+@register("stream_pattern_kleene", oracle=_KLEENE_ORACLE, tags=("streaming", "cep"))
 def stream_pattern_kleene(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `analytics_pattern_kleene` (see
     :func:`kleene_stateful`). Oracle-checked like `stream_stateful`: the

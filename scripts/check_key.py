@@ -45,6 +45,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from gvcf_hbase_spark.registry import load_all
+    from gvcf_hbase_spark.sources.tables import TABLES
 
     spec = load_all()[key]
     rc = 0
@@ -56,8 +57,7 @@ def main() -> int:
             print(f"{key} @ {sf_dir}: rows={len(sdf)} spark={t_spark:.2f}s (rows-only op)")
             continue
         con = duckdb.connect()
-        for t in ("region", "nation", "customer", "supplier", "part", "orders",
-                  "lineitem", "events", "documents", "embeddings"):
+        for t in TABLES:
             p = os.path.join(sf_dir, f"{t}.parquet")
             if os.path.exists(p):
                 con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

@@ -94,12 +94,12 @@ SF1_ORACLE_DEMOTE = SF01_ORACLE_DEMOTE | {
     "gvcf_genotype_concordance",
     "gvcf_relatedness_ibs",
     "curate_decontaminate",
-    # The CC family (dedup_cluster_cc, dedup_cluster_cc_lss,
-    # dedup_canonical_select) left this list in r09: their oracles now
-    # collapse exact-clone groups to representatives before the pairwise
-    # CTE (O(distinct²), not O(docs²)) — see _CC_LABELS_CTES in
-    # operators/curation.py for the equivalence argument — so the sf1
-    # clone-replicated corpus costs what sf0.1 did.
+    # The CC family (dedup_cluster_cc, dedup_canonical_select) left this
+    # list in r09: their oracles now collapse exact-clone groups to
+    # representatives before the pairwise CTE (O(distinct²), not
+    # O(docs²)) — see _CC_LABELS_CTES in operators/curation.py for the
+    # equivalence argument — so the sf1 clone-replicated corpus costs
+    # what sf0.1 did.
     # brute-force n^2 haversine truth over 150k points = 2.25e10 DuckDB
     # pairs — unrunnable; the ENGINE side (grid-bucketed shuffle join, the
     # scale path) still runs and row-counts at full sf1 density

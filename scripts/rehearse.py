@@ -32,14 +32,14 @@ larger factors run SF10_KEYS, the keys whose engine cost class stays
 linear / n log n / banded along the fixture's growth directions. EXCLUDED
 from SF10_KEYS (documented, not silent):
   - ngram-SSJoin-truth engine paths over the replicated corpus
-    (dedup_containment, dedup_ngram_jaccard, dedup_cluster_cc/_lss,
+    (dedup_containment, dedup_ngram_jaccard, dedup_cluster_cc,
     dedup_canonical_select, curate_segment_dedup, dedup_minhash_recall /
     band_sweep truth sides): shared-gram fanout Σdf² is clone-quadratic,
     x10^4 vs sf0.1 by construction of the fixture (measured 290-330 s at
     sf1, so ~8 h at sf10). Production runs EXACT dedup first (the engine's
     own `dedup_exact` is in the list and is linear), which collapses the
     clones these fixtures deliberately inject; the un-collapsed quadratic
-    is exercised at sf1 (MIRROR_sf1_r08).
+    is exercised at sf1 (MIRROR_sf1_r09).
   - join_geo_grid: radius-join output pairs grow with point density², from
     66.3M pairs at sf1 to ~6.6B at sf10; the grid plan is the scale answer
     but materializing the pair count IS the workload. Exercised at sf1.

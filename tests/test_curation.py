@@ -81,10 +81,8 @@ def test_mix_weights_flatten(spark):
     assert max(shares) - min(shares) < 1e-2 * max(shares)
 
 
-def test_cluster_cc_equals_union_find(spark):
-    from gvcf_hbase_spark.operators.dedup import dedup_ngram_jaccard
-
-    pairs = [(r.id_a, r.id_b) for r in dedup_ngram_jaccard(spark, SF_DIR).collect()]
+def _union_find_labels(pairs) -> list[tuple[int, int]]:
+    """Sorted (node, component min) for every node of ``pairs``."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -98,7 +96,14 @@ def test_cluster_cc_equals_union_find(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    expected = sorted((n, find(n)) for n in parent)
+    return sorted((n, find(n)) for n in parent)
+
+
+def test_cluster_cc_equals_union_find(spark):
+    from gvcf_hbase_spark.operators.dedup import dedup_ngram_jaccard
+
+    pairs = [(r.id_a, r.id_b) for r in dedup_ngram_jaccard(spark, SF_DIR).collect()]
+    expected = _union_find_labels(pairs)
     got = sorted(
         (r.doc_id, r.cluster_id)
         for r in SPECS["dedup_cluster_cc"].fn(spark, SF_DIR).collect()
@@ -107,73 +112,30 @@ def test_cluster_cc_equals_union_find(spark):
     assert len(got) > 0
 
 
-def test_cc_lss_equals_label_propagation(spark):
-    """Both CC algorithms must reach the identical fixpoint on the real
-    near-dup graph — and LSS must also collapse a 200-edge chain (the
-    label-propagation worst case, O(n) rounds) and a multi-component
-    forest exactly."""
-    from gvcf_hbase_spark.operators.curation import connected_components_lss
-
-    a = sorted(
-        (r.doc_id, r.cluster_id)
-        for r in SPECS["dedup_cluster_cc"].fn(spark, SF_DIR).collect()
-    )
-    b = sorted(
-        (r.doc_id, r.cluster_id)
-        for r in SPECS["dedup_cluster_cc_lss"].fn(spark, SF_DIR).collect()
-    )
-    assert a == b and len(a) > 0
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 200)], "id_a long, id_b long"
-    )
-    rows = connected_components_lss(chain).collect()
-    assert len(rows) == 201
-    assert all(r.cluster_id == 0 for r in rows)
-
-    forest = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13), (5, 4)],
-        "id_a long, id_b long",
-    )
-    got = {r.doc_id: r.cluster_id for r in connected_components_lss(forest).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 4: 4, 5: 4}
-
-
 def test_cc_lss_random_graphs_match_union_find(spark):
-    """LSS on randomized graphs (sparse, dense, with isolated-pair mix)
-    must match a Python union-find reference exactly."""
+    """LSS on randomized graphs (sparse, dense, with isolated-pair mix), a
+    200-edge chain (O(n) rounds for min-label propagation) and a
+    multi-component forest must match a Python union-find reference
+    exactly."""
     import random
 
     from gvcf_hbase_spark.operators.curation import connected_components_lss
 
+    graphs = {"chain": [(i, i + 1) for i in range(200)]}
+    graphs["forest"] = [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13), (5, 4)]
     for seed, n_nodes, n_edges in [(7, 60, 40), (8, 60, 150), (9, 200, 90)]:
         rng = random.Random(seed)
-        pairs = list(
-            {
-                tuple(sorted((rng.randrange(n_nodes), rng.randrange(n_nodes))))
-                for _ in range(n_edges)
-            }
-        )
-        pairs = [(a, b) for a, b in pairs if a != b]
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        expected = sorted((node, find(node)) for node in parent)
+        pairs = {
+            tuple(sorted((rng.randrange(n_nodes), rng.randrange(n_nodes))))
+            for _ in range(n_edges)
+        }
+        graphs[f"seed={seed}"] = [(a, b) for a, b in pairs if a != b]
+    for name, pairs in graphs.items():
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         got = sorted(
             (r.doc_id, r.cluster_id) for r in connected_components_lss(df).collect()
         )
-        assert got == expected, f"seed={seed}"
+        assert got == _union_find_labels(pairs), name
 
 
 def test_segment_dedup_edges_and_reassembly(spark, tmp_path):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -15,6 +16,7 @@ from gvcf_hbase_spark.registry import load_all
 from gvcf_hbase_spark.sources.tables import load_table
 
 SPECS = load_all()
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def explain_str(df) -> str:
@@ -935,24 +937,38 @@ def test_no_holistic_aggregate_rides_a_growing_frame(spark):
             assert not m, f"{key}: holistic aggregate on a growing frame: {line.strip()[:160]}"
 
 
+def _plan_gate():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_gate", os.path.join(REPO_ROOT, "scripts", "plan_gate.py")
+    )
+    pg = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(pg)
+    return pg
+
+
 def test_committed_plan_ledgers_pass_the_gate():
     """The two newest committed PLANS_r{N}.json must diff clean under
     scripts/plan_gate.py: zero cartesian regressions, zero undeclared
     Python stages, and every other per-key digest change covered by an
     ALLOWED_CHANGES entry with a reason (r08 verdict action 6 — the r08
     cache-artifact line was caught by eye; this makes it mechanical)."""
-    import importlib.util
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "plan_gate", os.path.join(root, "scripts", "plan_gate.py")
-    )
-    pg = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pg)
-    old_path, new_path = pg.newest_ledgers(root)
+    pg = _plan_gate()
+    old_path, new_path = pg.newest_ledgers(REPO_ROOT)
     fails, _ = pg.gate(pg._load(old_path), pg._load(new_path))
     assert not fails, f"{old_path} -> {new_path}:\n" + "\n".join(fails)
+
+
+def test_gate_fails_only_unlisted_removals():
+    """A key missing from the new ledger is a note when ALLOWED_CHANGES
+    gives the reason for its removal, and a failure otherwise."""
+    pg = _plan_gate()
+    digest = {"xh": 1, "py": 0, "cart": 0}
+    old = {"plans": {"dedup_cluster_cc_lss": digest, "unlisted": digest, "kept": digest}}
+    fails, notes = pg.gate(old, {"plans": {"kept": digest}})
+    assert fails == ["unlisted: REMOVED from ledger without an allowlist entry"]
+    assert [n.split(" (")[0] for n in notes] == ["REMOVED dedup_cluster_cc_lss"]
 
 
 # ---------------------------------------------------------------------------
