@@ -112,30 +112,74 @@ def test_cluster_cc_equals_union_find(spark):
     assert len(got) > 0
 
 
+def _label_propagation_labels(pairs) -> list[tuple[int, int]]:
+    """Sorted (node, label) at the fixpoint of min-label propagation: every
+    node repeatedly takes the least label among itself and its neighbours."""
+    label = {n: n for edge in pairs for n in edge}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in pairs:
+            m = min(label[a], label[b])
+            if label[a] != m or label[b] != m:
+                label[a] = label[b] = m
+                changed = True
+    return sorted(label.items())
+
+
+def test_cc_lss_equals_label_propagation(spark):
+    """LSS must reach min-label propagation's fixpoint on the real near-dup
+    graph (through `dedup_cluster_cc`), on a 200-edge chain (the label-
+    propagation worst case, O(n) rounds) and on a multi-component forest."""
+    from gvcf_hbase_spark.operators.curation import connected_components_lss
+    from gvcf_hbase_spark.operators.dedup import dedup_ngram_jaccard
+
+    pairs = [(r.id_a, r.id_b) for r in dedup_ngram_jaccard(spark, SF_DIR).collect()]
+    got = sorted(
+        (r.doc_id, r.cluster_id)
+        for r in SPECS["dedup_cluster_cc"].fn(spark, SF_DIR).collect()
+    )
+    assert got == _label_propagation_labels(pairs) and len(got) > 0
+
+    chain = [(i, i + 1) for i in range(200)]
+    rows = connected_components_lss(
+        spark.createDataFrame(chain, "id_a long, id_b long")
+    ).collect()
+    assert sorted((r.doc_id, r.cluster_id) for r in rows) == (
+        _label_propagation_labels(chain)
+    )
+    assert len(rows) == 201 and all(r.cluster_id == 0 for r in rows)
+
+    forest = [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13), (5, 4)]
+    got = {
+        r.doc_id: r.cluster_id
+        for r in connected_components_lss(
+            spark.createDataFrame(forest, "id_a long, id_b long")
+        ).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 4: 4, 5: 4}
+    assert sorted(got.items()) == _label_propagation_labels(forest)
+
+
 def test_cc_lss_random_graphs_match_union_find(spark):
-    """LSS on randomized graphs (sparse, dense, with isolated-pair mix), a
-    200-edge chain (O(n) rounds for min-label propagation) and a
-    multi-component forest must match a Python union-find reference
-    exactly."""
+    """LSS on randomized graphs (sparse, dense, with isolated-pair mix)
+    must match a Python union-find reference exactly."""
     import random
 
     from gvcf_hbase_spark.operators.curation import connected_components_lss
 
-    graphs = {"chain": [(i, i + 1) for i in range(200)]}
-    graphs["forest"] = [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13), (5, 4)]
     for seed, n_nodes, n_edges in [(7, 60, 40), (8, 60, 150), (9, 200, 90)]:
         rng = random.Random(seed)
         pairs = {
             tuple(sorted((rng.randrange(n_nodes), rng.randrange(n_nodes))))
             for _ in range(n_edges)
         }
-        graphs[f"seed={seed}"] = [(a, b) for a, b in pairs if a != b]
-    for name, pairs in graphs.items():
+        pairs = [(a, b) for a, b in pairs if a != b]
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         got = sorted(
             (r.doc_id, r.cluster_id) for r in connected_components_lss(df).collect()
         )
-        assert got == _union_find_labels(pairs), name
+        assert got == _union_find_labels(pairs), seed
 
 
 def test_segment_dedup_edges_and_reassembly(spark, tmp_path):
