@@ -27,7 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from gvcf_hbase_spark.registry import register
-from gvcf_hbase_spark.sources.tables import load_table
+from gvcf_hbase_spark.sources.tables import load_table, scratch_dir
 
 # ---------------------------------------------------------------------------
 # Reusable operator: as-of join (Spark has no native one)
@@ -728,8 +728,6 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching row. False-positive rate only affects how much the shuffle
     shrinks, never the result.
     """
-    import tempfile
-
     saved = {}
     for k, v in _BLOOM_CONFS.items():
         try:
@@ -738,12 +736,13 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             saved[k] = None
         spark.conf.set(k, v)
     try:
-        out = tempfile.mkdtemp(prefix="gvcf_bloom_") + "/out"
-        bloom_pruned_join(spark, sf_dir).write.mode("overwrite").parquet(out)
+        out = scratch_dir("bloom")
+        joined = bloom_pruned_join(spark, sf_dir)
+        joined.write.mode("overwrite").parquet(out)
     finally:
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    return spark.read.parquet(out)
+    return spark.read.schema(joined.schema).parquet(out)

@@ -26,7 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gvcf_hbase_spark.registry import register
-from gvcf_hbase_spark.sources.tables import load_table
+from gvcf_hbase_spark.sources.tables import fixture_copy, load_table
 
 
 def _ts(s: str):
@@ -665,17 +665,10 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle aggregates the original table directly, so the hash-match
     proves the JSONL write→read cycle is lossless. Line-delimited JSON
     splits by line like any text format — parallel scan for free; the
-    jsonl dir is written once per (session, sf) and reused."""
-    import hashlib
-    import os
-    import tempfile
-
+    JSONL copy is written once per documents version and shared across
+    processes (sources.tables.fixture_copy)."""
     d = load_table(spark, sf_dir, "documents")
-    key = f"gvcf_jsonl_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-    out = f"{tempfile.gettempdir()}/{key}"
-
-    if not os.path.isdir(out):
-        d.write.mode("overwrite").json(out)
+    out = fixture_copy(sf_dir, "documents", "jsonl", d.write.mode("overwrite").json)
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
     back = spark.read.schema(schema).json(out)
     return back.groupBy("lang").agg(
@@ -709,19 +702,18 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     table with CASE masking, so the hash-match proves both batches'
     rows survive the merge with the right null-extension. (mergeSchema
     costs a footer read per file — at scale prefer a table format or an
-    explicit superset schema; this demonstrates the mechanism.)"""
-    import hashlib
-    import os
-    import tempfile
-
+    explicit superset schema; this demonstrates the mechanism.) The two
+    batches are written once per documents version
+    (sources.tables.fixture_copy)."""
     d = load_table(spark, sf_dir, "documents")
-    key = f"gvcf_schevo_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-    out = f"{tempfile.gettempdir()}/{key}"
-    if not os.path.isdir(out):
-        d.filter("doc_id % 2 = 0").select("doc_id", "lang").write.parquet(f"{out}/b0")
+
+    def write(tmp: str) -> None:
+        d.filter("doc_id % 2 = 0").select("doc_id", "lang").write.parquet(f"{tmp}/b0")
         d.filter("doc_id % 2 = 1").select("doc_id", "lang", "n_chars").write.parquet(
-            f"{out}/b1"
+            f"{tmp}/b1"
         )
+
+    out = fixture_copy(sf_dir, "documents", "schevo", write)
     merged = spark.read.option("mergeSchema", "true").parquet(f"{out}/b0", f"{out}/b1")
     return merged.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -779,18 +771,13 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (columnar scan, predicate pushdown, column pruning) is
     format-portable and the ORC write→read cycle is lossless. ORC's
     row-group stats serve the same skipping role as parquet's; a
-    deployment standardizes on one format, the engine doesn't care."""
-    import hashlib
-    import os
-    import tempfile
-
+    deployment standardizes on one format, the engine doesn't care. The
+    ORC copy is written once per lineitem version
+    (sources.tables.fixture_copy)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity", "l_shipdate"
     )
-    key = f"gvcf_orc_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-    out = f"{tempfile.gettempdir()}/{key}"
-    if not os.path.isdir(out):
-        li.write.mode("overwrite").orc(out)
+    out = fixture_copy(sf_dir, "lineitem", "orc", li.write.mode("overwrite").orc)
     back = spark.read.orc(out).filter(F.col("l_shipdate") >= _ts("1996-01-01"))
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n_rows"),
@@ -944,34 +931,16 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     `source_gvcf_lines`). The doubles round-trip losslessly because the
     xml writer emits full-precision decimal strings and the explicit
     schema parses them straight back to double.
-    """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
+    The export is written once per supplier version and published by one
+    atomic rename (sources.tables.fixture_copy), so a crashed or
+    concurrent writer never exposes a half-written export.
+    """
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
-    key = f"gvcf_xml_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-    out = f"{tempfile.gettempdir()}/{key}"
-    # Cache validity keys on Spark's _SUCCESS marker, not bare isdir: a
-    # crashed prior write leaves a partial dir that isdir would silently
-    # trust. The export lands in a unique temp dir and renames into place
-    # atomically, so concurrent runs never read a half-written export —
-    # the loser of the rename race just discards its copy.
-    if not os.path.isfile(f"{out}/_SUCCESS"):
-        tmp = f"{out}.{uuid.uuid4().hex[:8]}.tmp"
-        sup.write.format("xml").option("rowTag", "supplier").mode("overwrite").save(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:  # lost the race or stale partial dir at `out`
-            if os.path.isfile(f"{out}/_SUCCESS"):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                shutil.rmtree(out, ignore_errors=True)
-                os.rename(tmp, out)
+    xml = sup.write.format("xml").option("rowTag", "supplier").mode("overwrite")
+    out = fixture_copy(sf_dir, "supplier", "xml", xml.save)
     back = (
         spark.read.format("xml")
         .option("rowTag", "supplier")
@@ -1147,27 +1116,13 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: `_metadata` is constant-per-split metadata, not I/O — zero
     extra column read; the aggregate is one map-side-combining pass.
-    The partitioned copy is cached per sf_dir behind a _SUCCESS marker
-    with write-to-temp + atomic rename (the source_xml_roundtrip
-    discipline)."""
-    import hashlib
-    import os
-    import shutil
-
+    The partitioned copy is written once per lineitem version and
+    published by one atomic rename (sources.tables.fixture_copy)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", (F.col("l_orderkey") % 8).alias("bucket")
     )
-    out = "/tmp/gvcf_filemeta_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    if not os.path.isfile(f"{out}/_SUCCESS"):
-        tmp = f"{out}.tmp.{os.getpid()}"
-        li.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        if os.path.isfile(f"{out}/_SUCCESS"):
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            try:
-                os.rename(tmp, out)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
+    by_bucket = li.write.mode("overwrite").partitionBy("bucket")
+    out = fixture_copy(sf_dir, "lineitem", "filemeta", by_bucket.parquet)
     back = spark.read.parquet(out)
     bucket_from_path = (
         F.regexp_extract(F.col("_metadata.file_path"), r"bucket=(\d+)", 1)

@@ -19,6 +19,7 @@ contract here, not a correctness one.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from gvcf_hbase_spark.registry import register
-from gvcf_hbase_spark.sources.tables import load_table, scan_size_bytes
+from gvcf_hbase_spark.sources.tables import load_table, scan_size_bytes, scratch_dir
 
 
 class HBaseTarget:
@@ -162,12 +163,10 @@ def sink_bulk_put(spark: SparkSession, sf_dir: str) -> DataFrame:
     and losslessness are all hash-verified. The physical contract
     (range partitioning + in-partition key order) is asserted in
     tests/test_plans.py."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts_us_long", "value"
     )
-    target = HBaseTarget(tempfile.mkdtemp(prefix="gvcf_bulk_put_"))
+    target = HBaseTarget(scratch_dir("bulk_put"))
     bulk_put(ev, target, "events_by_user_time", ["user_id", "ts_us_long"], num_regions=4)
     return target.read(spark, "events_by_user_time").select(
         "__rowkey", "event_id", "user_id", "ts_us_long", "value"
@@ -192,12 +191,10 @@ def sink_hive_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     write AND the pruned read are hash-verified against the plain
     table. Plan-level proof that the filter lands as PartitionFilters
     (zero I/O on other langs) is in tests/test_plans.py."""
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="gvcf_hive_part_") + "/docs"
+    out = scratch_dir("hive_part")
     write_hive_partitioned(d, out, ["lang"], sort_keys=["doc_id"])
-    back = spark.read.parquet(out).filter(F.col("lang").isin("en", "de"))
+    back = spark.read.schema(d.schema).parquet(out).filter(F.col("lang").isin("en", "de"))
     return back.groupBy("lang").agg(
         F.min("doc_id").alias("min_id"),
         F.max("doc_id").alias("max_id"),
@@ -223,11 +220,9 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the PLAIN join aggregate: bucketing must not change a row,
     which is what the hash-match proves. Zero-Exchange planning of
     the bucketed join is asserted in tests/test_plans.py."""
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    base = tempfile.mkdtemp(prefix="gvcf_bucketed_")
+    base = scratch_dir("bucketed")
     write_bucketed(spark, o, "gq_orders_bucketed", f"{base}/o", ["o_orderkey"], 8)
     write_bucketed(spark, li, "gq_lineitem_bucketed", f"{base}/li", ["l_orderkey"], 8)
     ob = spark.table("gq_orders_bucketed")
@@ -273,19 +268,18 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is the difference between scanning 2/5 and 5/5 of
     a date/type-partitioned fact for a dimension-driven slice."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="gvcf_dpp_")
+    base = scratch_dir("dpp")
     write_hive_partitioned(ev, f"{base}/events_by_type", ["event_type"])
-    fact = spark.read.parquet(f"{base}/events_by_type")
+    fact = spark.read.schema(ev.schema).parquet(f"{base}/events_by_type")
     # the dim must be a REAL scan: a literal createDataFrame would
     # constant-fold its filter into a smaller LocalRelation, and with
     # no Filter node left the DPP rule sees no selective predicate to
     # reuse — exactly the production shape anyway (dims live in
     # storage, not driver literals)
+    dim_schema = "event_type string, category string"
     spark.createDataFrame(
         [
             ("purchase", "conv"),
@@ -294,9 +288,9 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("click", "browse"),
             ("error", "noise"),
         ],
-        "event_type string, category string",
+        dim_schema,
     ).write.mode("overwrite").parquet(f"{base}/dim")
-    dim = spark.read.parquet(f"{base}/dim")
+    dim = spark.read.schema(dim_schema).parquet(f"{base}/dim")
     joined = fact.join(
         F.broadcast(dim.filter(F.col("category") == "conv")), "event_type"
     )
@@ -335,12 +329,10 @@ def sink_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout scan — #partitions rows out. In a real deployment this
     runs incrementally per written partition at commit time; the
     full-table form here is the bootstrap/repair path."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="gvcf_pstats_") + "/events_by_type"
+    out = scratch_dir("pstats")
     write_hive_partitioned(ev, out, ["event_type"], sort_keys=["ts_us_long"])
-    back = spark.read.parquet(out)
+    back = spark.read.schema(ev.schema).parquet(out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_rows"),
         F.min("event_id").alias("min_event_id"),
@@ -384,8 +376,6 @@ def sink_secondary_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting list per key); hot keys are bounded by per-key activity,
     not corpus size. Index maintenance composes with
     stream_foreach_batch_upsert for the incremental path."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
     idx = (
         ev.filter(F.col("event_type") == "purchase")
@@ -395,9 +385,9 @@ def sink_secondary_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sort_array(F.collect_list("event_id")).alias("event_ids"),
         )
     )
-    path = tempfile.mkdtemp(prefix="gvcf_secidx_") + "/purchase_by_user"
+    path = scratch_dir("secidx")
     bulk_write_range_sorted(idx, path, ["user_id"], num_partitions=4)
-    back = spark.read.parquet(path)
+    back = spark.read.schema(idx.schema).parquet(path)
     return back.filter(F.col("n_purchases") >= 3).select(
         "user_id",
         "n_purchases",
@@ -436,17 +426,15 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 128 MB–1 GB file band every layout writer in this module
     aims for; AQE handles the read-side coalescing until compaction
     catches up."""
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="gvcf_compact_")
+    base = scratch_dir("compact")
     d.repartition(64).write.mode("overwrite").parquet(f"{base}/fragmented")
-    frag = spark.read.parquet(f"{base}/fragmented")
+    frag = spark.read.schema(d.schema).parquet(f"{base}/fragmented")
     target_bytes = 128 * 1024 * 1024
     total = scan_size_bytes(frag) or target_bytes
     n_out = max(1, -(-total // target_bytes))  # ceil-div
     frag.repartition(n_out).write.mode("overwrite").parquet(f"{base}/compacted")
-    back = spark.read.parquet(f"{base}/compacted")
+    back = spark.read.schema(d.schema).parquet(f"{base}/compacted")
     return back.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -652,8 +640,6 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the plain table, proving the clustered write lossless and
     the bucket bounds exact — wrong bounds would admit wrong prunes
     downstream."""
-    import tempfile
-
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     z = li.withColumn("zval", _zvalue_col())
     zmax = z.agg(F.max("zval").alias("zmax"))
@@ -665,9 +651,9 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("bucket"),
     )
-    out = tempfile.mkdtemp(prefix="gvcf_zorder_") + "/lineitem_z"
+    out = scratch_dir("zorder")
     write_hive_partitioned(bucketed, out, ["bucket"], sort_keys=["zval"])
-    back = spark.read.parquet(out)
+    back = spark.read.schema(bucketed.schema).parquet(out)
     return back.groupBy(F.col("bucket").cast("bigint").alias("bucket")).agg(
         F.count("*").alias("n_rows"),
         F.min("l_partkey").alias("min_part"),
@@ -710,15 +696,11 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     xor-ish sum of keys); publish is O(1) metadata. Same posture as
     production WAP: data volume touches the cluster, the commit is
     a pointer."""
-    import hashlib
-    import os
-    import tempfile
-
     snap = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 3 != 0
     ).select("o_orderkey", "o_orderpriority", "o_totalprice")
 
-    root = tempfile.mkdtemp(prefix="gvcf_wap_")
+    root = scratch_dir("wap")
     version = "v2"
     staging = f"{root}/{version}"
     snap.write.mode("overwrite").parquet(staging)
@@ -727,7 +709,7 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     expect = snap.agg(
         F.count("*").alias("n"), F.sum("o_orderkey").alias("ksum")
     ).collect()[0]
-    staged = spark.read.parquet(staging)
+    staged = spark.read.schema(snap.schema).parquet(staging)
     got = staged.agg(
         F.count("*").alias("n"), F.sum("o_orderkey").alias("ksum")
     ).collect()[0]
@@ -746,7 +728,7 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # READ path: resolve pointer, then read the published snapshot
     with open(f"{root}/CURRENT", encoding="utf-8") as fh:
         published = fh.read().strip()
-    back = spark.read.parquet(f"{root}/{published}")
+    back = spark.read.schema(snap.schema).parquet(f"{root}/{published}")
     return back.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(

@@ -164,8 +164,9 @@ _PRIORITY = [
 # past the 50-key window; they lead the r11 rotation together with
 # whatever r11 changes). Keys NOT listed above (including the full
 # r09 window, which now carries the freshest verdicts) are appended by
-# load_all() in module registration order after the window. Every key in
-# the inventory has a driver verdict from some round; the rotation keeps
+# load_all() after the window in _MODULES order (registration order within
+# a module), whatever order the process imported the modules in. Every key
+# in the inventory has a driver verdict from some round; the rotation keeps
 # the oldest ones cycling through the 50-key sample.
 
 _loaded = False
@@ -179,7 +180,10 @@ def load_all() -> dict[str, QuerySpec]:
         for mod in _MODULES:
             importlib.import_module(mod)
         ordered = {k: QUERIES[k] for k in _PRIORITY if k in QUERIES}
-        ordered.update({k: v for k, v in QUERIES.items() if k not in ordered})
+        rank = {m: i for i, m in enumerate(_MODULES)}
+        rest = [v for k, v in QUERIES.items() if k not in ordered]
+        rest.sort(key=lambda v: rank.get(v.fn.__module__, len(_MODULES)))
+        ordered.update({v.key: v for v in rest})
         QUERIES.clear()
         QUERIES.update(ordered)
         _loaded = True

@@ -17,13 +17,12 @@ row), so small-file consolidation IS the optimization.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gvcf_hbase_spark.registry import register
-from gvcf_hbase_spark.sources.tables import load_table
+from gvcf_hbase_spark.sources.tables import load_table, scratch_dir
 
 _N_FILES = 200  # bounded fixture: one loose file per low-keyed document
 
@@ -38,7 +37,7 @@ def _materialize_files(spark: SparkSession, sf_dir: str) -> str:
         .select("doc_id", "text")
         .collect()
     )
-    base = tempfile.mkdtemp(prefix="gvcf_binfiles_")
+    base = scratch_dir("binfiles")
     for r in rows:
         with open(os.path.join(base, f"{r.doc_id}.txt"), "wb") as f:
             f.write(r.text.encode("utf-8"))

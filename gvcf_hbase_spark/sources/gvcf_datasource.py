@@ -23,16 +23,15 @@ region predicate lands post-scan via Catalyst instead).
 from __future__ import annotations
 
 import glob
-import hashlib
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from gvcf_hbase_spark.registry import register
 from gvcf_hbase_spark.sources.gvcf_text import _GVCF_ORACLE, _fixture_lines
+from gvcf_hbase_spark.sources.tables import fixture_copy
 
 _SCHEMA = (
     "sample_id string, contig string, start long, end long, ref string, "
@@ -106,24 +105,17 @@ class GvcfLinesDataSource(DataSource):
 
 def _ensure_fixture_files(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the deterministic fixture lines (span=9, the
-    _GVCF_ORACLE shape) as per-sample text files once per sf_dir.
-    Cache validity keys on Spark's _SUCCESS marker with write-to-temp +
-    atomic rename (the source_xml_roundtrip discipline): concurrent or
-    interrupted writers can never expose a half-written directory."""
-    out = "/tmp/gvcf_pyds_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    if not os.path.isfile(f"{out}/_SUCCESS"):
-        tmp = f"{out}.tmp.{os.getpid()}"
+    _GVCF_ORACLE shape) as per-sample text files once per version of
+    their source table, orders (sources.tables.fixture_copy): one atomic
+    rename publishes them, so concurrent or interrupted writers never
+    expose a half-written directory."""
+
+    def write(tmp: str) -> None:
         _fixture_lines(spark, sf_dir, span=9).write.mode("overwrite").partitionBy(
             "sample_id"
         ).text(tmp)
-        if os.path.isfile(f"{out}/_SUCCESS"):
-            shutil.rmtree(tmp, ignore_errors=True)  # another writer won
-        else:
-            try:
-                os.rename(tmp, out)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    return fixture_copy(sf_dir, "orders", "pyds", write)
 
 
 @register(

@@ -16,6 +16,11 @@ writer half of that contract.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -96,7 +101,6 @@ def scan_size_bytes(df: DataFrame) -> int | None:
 def _listed_bytes(files: list[str]) -> int | None:
     """On-disk bytes of an ``inputFiles()`` listing; None when it is empty
     or not stat-able locally."""
-    import os
     from urllib.parse import urlparse
 
     if not files:
@@ -221,8 +225,6 @@ def dataset_fingerprint(sf_dir: str, table: str) -> tuple | None:
     in-process re-probes. Returns None when the path is not a local
     filesystem path (e.g. hdfs:// on a real cluster) — callers must then
     skip memoization rather than risk staleness."""
-    import os
-
     root = os.path.join(sf_dir, f"{table}.parquet")
     try:
         if os.path.isfile(root):
@@ -258,6 +260,49 @@ def content_memo(memo: dict, sf_dir: str, table: str, compute: Callable, *key):
             memo.pop(old, None)
         memo[k] = value
     return value
+
+
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_ROOT: tempfile.TemporaryDirectory | None = None
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh directory for the files one build writes (so no build
+    overwrites files an earlier build's DataFrame reads), under one root
+    the process owns: made on first use, removed at interpreter exit."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.TemporaryDirectory(prefix="gvcf_scratch_")
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_SCRATCH_ROOT.name)
+
+
+def fixture_copy(sf_dir: str, table: str, name: str, write: Callable[[str], None]) -> str:
+    """Directory of a derived copy of fixture table ``table`` (another
+    format, another layout) that ``write(dir)`` fills, written once per
+    table version (:func:`dataset_fingerprint`) and shared by every
+    process. One ``os.rename`` publishes it, so the path exists only when
+    complete; the loser of a race and a ``write`` that raises leave
+    nothing behind. No fingerprint: a fresh :func:`scratch_dir` per call."""
+    fp = dataset_fingerprint(sf_dir, table)
+    if fp is None:
+        write(out := scratch_dir(name))
+        return out
+    root = os.path.join(tempfile.gettempdir(), "gvcf_fixture_copies")
+    key = hashlib.md5(repr((os.path.abspath(sf_dir), table, fp)).encode()).hexdigest()
+    out = f"{root}/{name}_{key[:16]}"
+    if not os.path.isdir(out):
+        os.makedirs(root, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f".{name}_", dir=root)
+        try:
+            write(tmp)
+            os.rename(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):  # else another process published first
+                raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)  # gone once renamed
+    return out
 
 
 # Confs that change what Parquet schema inference returns for the same

@@ -21,11 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gvcf_hbase_spark.operators.analytics import _KLEENE_ORACLE
 from gvcf_hbase_spark.registry import register
-from gvcf_hbase_spark.sources.tables import load_table, table_schema, with_event_time
+from gvcf_hbase_spark.sources.tables import (
+    fixture_copy,
+    load_table,
+    scratch_dir,
+    table_schema,
+    with_event_time,
+)
 from gvcf_hbase_spark.streaming.batch_twins import tumbling_agg
-
-
-_stream_dirs: dict[tuple[str, int], str] = {}
 
 # Observability for the multi-micro-batch soak: number of micro-batches the
 # most recent run_available_now drain executed (from the query's progress
@@ -38,8 +41,9 @@ def _stream_split() -> int:
 
 
 def _events_stream_dir(sf_dir: str) -> str:
-    """FileStreamSource requires a *directory*; expose the single events
-    parquet file through a per-SF temp dir symlink (cached).
+    """FileStreamSource requires a *directory*; expose the events parquet
+    through a directory that symlinks it, a fixture copy
+    (sources.tables.fixture_copy) per events version and split.
 
     Soak mode (r09, the rate-limited multi-micro-batch path): when
     ``SPARK_GRAFT_STREAM_SPLIT=N`` (N > 1) the events table is rewritten
@@ -51,13 +55,10 @@ def _events_stream_dir(sf_dir: str) -> str:
     min ts ≥ chunk k's max ts). Out-of-order/late-file semantics are
     exercised separately (tests/test_streaming.py watermark tests)."""
     split = _stream_split()
-    key = (sf_dir, split)
-    if key not in _stream_dirs:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="gvcf_events_stream_")
+    def write(d: str) -> None:
         if split <= 1:
-            os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
+            os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{d}/events.parquet")
         else:
             import duckdb
 
@@ -84,8 +85,8 @@ def _events_stream_dir(sf_dir: str) -> str:
                     now = os.stat(f"{d}/chunk_{i:03d}.parquet").st_mtime
                 os.utime(f"{d}/chunk_{i:03d}.parquet", (now + i, now + i))
             con.close()
-        _stream_dirs[key] = d
-    return _stream_dirs[key]
+
+    return fixture_copy(sf_dir, "events", f"events_stream_{split}", write)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -567,10 +568,8 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE (the partition-overwrite trick is the format-free equivalent);
     state store holds one running agg per (window, type) key.
     """
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="gvcf_upsert_sink_")
-    ckpt_dir = tempfile.mkdtemp(prefix="gvcf_upsert_ckpt_")
+    out_dir = scratch_dir("upsert_sink")
+    ckpt_dir = scratch_dir("upsert_ckpt")
 
     agg = tumbling_agg(read_events_stream(spark, sf_dir)).withColumn(
         "wpart", F.date_format("window_start", "yyyy-MM-dd-HH")

@@ -39,6 +39,44 @@ def oracle():
     con.close()
 
 
+EVENTS = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+DOCUMENTS = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def write_table(spark, tmp_path, name, rows, schema) -> str:
+    """Write ``rows`` as fixture table ``name`` (one parquet file) under
+    ``tmp_path`` and return ``tmp_path`` as the sf_dir to build keys on."""
+    df = spark.createDataFrame(rows, schema)
+    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/{name}.parquet")
+    return str(tmp_path)
+
+
+def write_events(spark, tmp_path, rows, props="{}") -> str:
+    """The events table from ``(event_id, seconds, user_id, event_type,
+    value[, props])`` tuples, seconds counted from 2024-01-01. A tuple
+    without props gets ``props``: a string, or a function of event_id."""
+    base = datetime.datetime(2024, 1, 1)
+    full = [
+        (eid, base + datetime.timedelta(seconds=s), uid, et, val,
+         own[0] if own else props if isinstance(props, str) else props(eid))
+        for eid, s, uid, et, val, *own in rows
+    ]
+    return write_table(spark, tmp_path, "events", full, EVENTS)
+
+
+def write_documents(spark, tmp_path, rows) -> str:
+    """The documents table from ``(text, lang, source)`` tuples; doc_id is
+    the tuple's position."""
+    full = [(i, text, lang, src, len(text)) for i, (text, lang, src) in enumerate(rows)]
+    return write_table(spark, tmp_path, "documents", full, DOCUMENTS)
+
+
+def write_embeddings(spark, tmp_path, vecs, labels) -> str:
+    """The embeddings table; vec_id is the vector's position."""
+    full = [(i, [float(x) for x in v], int(lab)) for i, (v, lab) in enumerate(zip(vecs, labels))]
+    return write_table(spark, tmp_path, "embeddings", full, "vec_id long, embedding array<float>, label int")
+
+
 def canon_cell(v):
     """Canonical (type-family, string) for one cell. Type families are part
     of the comparison: an int on one side and a float on the other is a

@@ -6,35 +6,19 @@ pruning behavior needs a synthetic skewed corpus).
 
 from __future__ import annotations
 
-import datetime
-
 import pyspark.sql.functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_events
 from gvcf_hbase_spark.registry import load_all
 
 SPECS = load_all()
-
-
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, seconds_offset, user_id, event_type, value)."""
-    base = datetime.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [
-            (eid, base + datetime.timedelta(seconds=s), uid, et, val, "{}")
-            for eid, s, uid, et, val in rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    return str(tmp_path)
 
 
 def test_funnel_ordering_semantics(spark, tmp_path):
     """Steps must match in strict time order from the EARLIEST view: a
     purchase before the first qualifying click must not count, and a
     click at the exact view timestamp must not count (strict >)."""
-    sf = _write_events(
+    sf = write_events(
         spark,
         tmp_path,
         [
@@ -64,7 +48,7 @@ def test_pattern_kleene_semantics(spark, tmp_path):
     """view click+ purchase: maximal click islands, strict contiguity,
     mandatory open/close context, 48 h bound."""
     hours_49 = 49 * 3600
-    sf = _write_events(
+    sf = write_events(
         spark,
         tmp_path,
         [
@@ -145,7 +129,7 @@ def test_heavy_hitters_exact_under_skew(spark, tmp_path, monkeypatch):
         for i in range(n):
             rows.append((eid, eid, uid, "view", 0.0))
             eid += 1
-    sf = _write_events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     monkeypatch.setattr(analytics, "_HH_CAPACITY", 16)
     monkeypatch.setattr(analytics, "_HH_K", 8)
     got = {(r.user_id, r.cnt) for r in SPECS["agg_heavy_hitters"].fn(spark, sf).collect()}

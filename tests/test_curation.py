@@ -10,7 +10,7 @@ from pyspark.sql import Window
 from gvcf_hbase_spark.operators import curation
 from gvcf_hbase_spark.registry import load_all
 from gvcf_hbase_spark.sources.tables import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_documents
 
 SPECS = load_all()
 
@@ -186,10 +186,8 @@ def test_segment_dedup_edges_and_reassembly(spark, tmp_path):
     """Short docs (1 token = 1 partial segment), a doc whose every
     segment is corpus-frequent (drops to empty string), and order-
     preserving reassembly. Segment width 3, max occurrence 2."""
-    from tests.test_round3c_ops import _write_documents
-
     boiler = "cookie banner text"
-    sf = _write_documents(
+    sf = write_documents(
         spark, tmp_path,
         [
             (boiler, "en", "s"),                          # 0: one segment

@@ -22,7 +22,7 @@ from gvcf_hbase_spark.operators.dedup import (
 )
 from gvcf_hbase_spark.registry import load_all
 from gvcf_hbase_spark.sources.tables import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, DOCUMENTS, write_events, write_table
 
 SPECS = load_all()
 
@@ -139,26 +139,17 @@ def test_topk_group_ranks_contiguous(spark):
 
 
 def _rand_events(spark, tmp_path, rng, n=400, users=7, types=4, span_s=5 * 3600):
-    import datetime as _dt
-
-    base = _dt.datetime(2024, 1, 1)
     rows = [
         (
             i,
-            base + _dt.timedelta(seconds=int(rng.integers(0, span_s))),
+            int(rng.integers(0, span_s)),
             int(rng.integers(1, users + 1)),
             f"t{int(rng.integers(0, types))}",
             float(np.round(rng.normal(10, 3), 3)),
-            "{}",
         )
         for i in range(n)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    return str(tmp_path)
+    return write_events(spark, tmp_path, rows)
 
 
 def test_running_distinct_matches_pandas_reference(spark, tmp_path):
@@ -191,7 +182,10 @@ def test_interval_merge_matches_python_reference(spark, tmp_path):
         )
         for _ in range(300)
     ]
-    df = spark.createDataFrame(
+    write_table(
+        spark,
+        tmp_path,
+        "lineitem",
         [
             (1, 1, sk, 1, float(q), 1.0, 0.0, 0.0, "N", "O",
              _dt.datetime.fromisoformat(d))
@@ -201,7 +195,6 @@ def test_interval_merge_matches_python_reference(spark, tmp_path):
         "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
         "l_returnflag string, l_linestatus string, l_shipdate timestamp",
     )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
     got = {
         r.l_suppkey: (r.n_merged, r.covered_days)
         for r in SPECS["win_interval_merge"].fn(spark, str(tmp_path)).collect()
@@ -279,11 +272,9 @@ def test_chunking_reconstructs_token_stream(spark, tmp_path):
         (i, " ".join(f"w{int(x)}" for x in rng.integers(0, 50, size=int(ln))))
         for i, ln in enumerate(rng.integers(1, 200, size=20))
     ]
-    df = spark.createDataFrame(
-        [(i, t, "en", "unit", len(t)) for i, t in texts],
-        "doc_id long, text string, lang string, source string, n_chars long",
+    write_table(
+        spark, tmp_path, "documents", [(i, t, "en", "unit", len(t)) for i, t in texts], DOCUMENTS
     )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     out = SPECS["text_chunk_sliding"].fn(spark, str(tmp_path)).toPandas()
     W, S = 64, 48
     for i, t in texts:

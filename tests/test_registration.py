@@ -4,12 +4,15 @@ module outside ``registry.py`` writes into ``QUERIES``, and every import of
 the package sits at module top, so a module's dependencies are read from
 its head.
 
-AST only, no Spark."""
+AST and imports only, no Spark."""
 
 from __future__ import annotations
 
 import ast
+import json
 import os
+import subprocess
+import sys
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "gvcf_hbase_spark")
 MUTATORS = {"update", "pop", "popitem", "setdefault", "clear", "__setitem__", "__delitem__"}
@@ -92,3 +95,22 @@ def test_package_imports_sit_at_module_top():
             if any(m.split(".")[0] == "gvcf_hbase_spark" for m in mods):
                 found.append(f"{rel}:{node.lineno}")
     assert not found, "function-local package imports:\n" + "\n".join(found)
+
+
+def _inventory_order(preimport: str) -> list[str]:
+    code = (
+        f"import json, sys; sys.path.insert(0, {os.path.dirname(PKG)!r}); {preimport}"
+        "from gvcf_hbase_spark.registry import load_all; print(json.dumps(list(load_all())))"
+    )
+    run = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, timeout=300)
+    assert run.returncode == 0, run.stderr[-4000:]
+    return json.loads(run.stdout.strip().splitlines()[-1])
+
+
+def test_inventory_order_does_not_depend_on_import_order():
+    """Keys past the priority window follow _MODULES order, so a process
+    that imported an operator module before load_all() enumerates the
+    inventory exactly as a fresh one does."""
+    fresh = _inventory_order("")
+    assert len(fresh) == len(set(fresh))
+    assert _inventory_order("import gvcf_hbase_spark.operators.curation; ") == fresh

@@ -12,28 +12,14 @@ import datetime
 import numpy as np
 import pyspark.sql.functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, DOCUMENTS, write_events, write_table
 from gvcf_hbase_spark.registry import load_all
 
 SPECS = load_all()
 
 
-def _write_events(spark, tmp_path, rows, props="{}"):
-    base = datetime.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [
-            (eid, base + datetime.timedelta(seconds=s), uid, et, val,
-             props if isinstance(props, str) else props(eid))
-            for eid, s, uid, et, val in rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    return str(tmp_path)
-
-
 def test_variant_extracts_typed_and_missing(spark, tmp_path):
-    sf = _write_events(
+    sf = write_events(
         spark, tmp_path, [(1, 0, 1, "a", 0.0)], props='{"k": 42}'
     )
     row = SPECS["fn_variant_json"].fn(spark, sf).collect()[0]
@@ -42,7 +28,7 @@ def test_variant_extracts_typed_and_missing(spark, tmp_path):
 
 
 def test_bool_logic_closed_form(spark, tmp_path):
-    sf = _write_events(
+    sf = write_events(
         spark,
         tmp_path,
         [
@@ -80,11 +66,9 @@ def test_phash_banding_recall_is_exact(spark, tmp_path):
     small hamming distances) and compare pair sets."""
     base = " ".join(f"w{i % 17}" for i in range(300))
     texts = [(i, base[:i] + ("#" * (i % 3)) + base[i:]) for i in range(0, 40, 2)]
-    df = spark.createDataFrame(
-        [(i, t, "en", "unit", len(t)) for i, t in texts],
-        "doc_id long, text string, lang string, source string, n_chars long",
+    write_table(
+        spark, tmp_path, "documents", [(i, t, "en", "unit", len(t)) for i, t in texts], DOCUMENTS
     )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         (r.id_a, r.id_b): r.hamming
         for r in SPECS["multimodal_phash_neardup"].fn(spark, str(tmp_path)).collect()
@@ -118,7 +102,7 @@ def test_asof_nearest_prefers_backward_on_tie(spark, tmp_path):
     """purchase at t=100 with clicks at 90 and 110 (equidistant) → the
     backward click wins; a purchase before any click matches forward; a
     user with no clicks keeps NULL."""
-    sf = _write_events(
+    sf = write_events(
         spark,
         tmp_path,
         [
@@ -144,7 +128,7 @@ def test_asof_nearest_prefers_backward_on_tie(spark, tmp_path):
 
 def test_mode_tie_breaks_to_smallest_value(spark, tmp_path):
     """Buckets 3 and 7 both occur twice → mode must be 3 (n desc, v asc)."""
-    sf = _write_events(
+    sf = write_events(
         spark,
         tmp_path,
         [

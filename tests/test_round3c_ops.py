@@ -7,53 +7,21 @@ the closed-form behaviors a hash match alone wouldn't localize.
 
 from __future__ import annotations
 
-import datetime
 import math
 
 import numpy as np
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_documents, write_embeddings, write_events, write_table
 from gvcf_hbase_spark.registry import load_all
 
 SPECS = load_all()
-
-
-def _write_events(spark, tmp_path, rows):
-    base = datetime.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [
-            (eid, base + datetime.timedelta(seconds=s), uid, et, val, "{}")
-            for eid, s, uid, et, val in rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    return str(tmp_path)
-
-
-def _write_documents(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        [(i, text, lang, src, len(text)) for i, (text, lang, src) in enumerate(rows)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    return str(tmp_path)
-
-
-def _write_embeddings(spark, tmp_path, vecs, labels):
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v], int(l)) for i, (v, l) in enumerate(zip(vecs, labels))],
-        "vec_id long, embedding array<float>, label int",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    return str(tmp_path)
 
 
 def test_ewma_closed_form(spark, tmp_path):
     """Three values 1, 2, 4 one second apart: adjust=True EWMA with
     α=0.5 gives 1, (2·1+1·1)/1.5? — no: weights (0.5)^(n-1-i):
     t3 = (1·0.25 + 2·0.5 + 4·1)/(0.25+0.5+1) = 5.25/1.75 = 3.0."""
-    sf = _write_events(spark, tmp_path, [(1, 0, 7, "a", 1.0), (2, 1, 7, "a", 2.0), (3, 2, 7, "a", 4.0)])
+    sf = write_events(spark, tmp_path, [(1, 0, 7, "a", 1.0), (2, 1, 7, "a", 2.0), (3, 2, 7, "a", 4.0)])
     out = {r.event_id: r.ewma_1e4 for r in SPECS["ts_ewma"].fn(spark, sf).collect()}
     assert out[1] == 10000
     assert out[2] == int((1 * 0.5 + 2 * 1) / 1.5 * 10000 + 0.5)
@@ -64,13 +32,13 @@ def test_ewma_window_truncates_at_10(spark, tmp_path):
     """Row 12's EWMA must ignore rows 1–2 entirely: make them huge and
     check the result equals the EWMA of rows 3–12 alone."""
     rows = [(i, i, 7, "a", 1e6 if i <= 2 else 1.0) for i in range(1, 13)]
-    sf = _write_events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = {r.event_id: r.ewma_1e4 for r in SPECS["ts_ewma"].fn(spark, sf).collect()}
     assert out[12] == 10000  # all-ones window, poison rows aged out
 
 
 def test_lag_features_frame_edges(spark, tmp_path):
-    sf = _write_events(
+    sf = write_events(
         spark, tmp_path,
         [(1, 0, 7, "a", 1.0), (2, 10, 7, "a", 2.0), (3, 30, 7, "a", 6.0), (4, 0, 8, "a", 9.0)],
     )
@@ -89,7 +57,7 @@ def test_entropy_uniform_and_degenerate(spark, tmp_path):
     language → 0 bits and norm NULL-free 0/log2(1) guarded by engine
     (log2(1)=0 → norm is NULL? no: count(*)=1 ⇒ log2=0 ⇒ div by 0 →
     NULL in both engines — assert that identically)."""
-    sf = _write_documents(
+    sf = write_documents(
         spark, tmp_path,
         [("a", "en", "s1"), ("b", "en", "s1"), ("c", "en", "s2"), ("d", "en", "s2"),
          ("e", "de", "s9")],
@@ -102,7 +70,7 @@ def test_entropy_uniform_and_degenerate(spark, tmp_path):
 
 def test_quantize_range_and_reconstruction(spark, tmp_path):
     vecs = [[0.5, -1.0, 0.25, 0.0], [2.0, 2.0, -2.0, 1.0]]
-    sf = _write_embeddings(spark, tmp_path, vecs, [0, 1])
+    sf = write_embeddings(spark, tmp_path, vecs, [0, 1])
     rows = {r.vec_id: r for r in SPECS["sim_embed_quantize"].fn(spark, sf).collect()}
     for vid, v in enumerate(vecs):
         # q is comma-joined (driver hashable-output rule); parse it back
@@ -122,7 +90,7 @@ def test_centroid_matches_numpy(spark, tmp_path):
     rng = np.random.default_rng(7)
     vecs = rng.normal(size=(20, 8)).astype("float32")
     labels = [i % 3 for i in range(20)]
-    sf = _write_embeddings(spark, tmp_path, vecs, labels)
+    sf = write_embeddings(spark, tmp_path, vecs, labels)
     rows = SPECS["sim_centroid_label"].fn(spark, sf).collect()
     got = {(r.label, r.pos): r for r in rows}
     for lab in range(3):
@@ -135,7 +103,7 @@ def test_centroid_matches_numpy(spark, tmp_path):
 
 
 def test_normalize_contract(spark, tmp_path):
-    sf = _write_documents(spark, tmp_path, [("  Héllo,   WORLD!! x9 ", "en", "s")])
+    sf = write_documents(spark, tmp_path, [("  Héllo,   WORLD!! x9 ", "en", "s")])
     r = SPECS["text_normalize"].fn(spark, sf).collect()[0]
     # é is non-[a-z0-9] → space; runs collapse; ends trimmed
     assert r.norm == "h llo world x9"
@@ -143,7 +111,7 @@ def test_normalize_contract(spark, tmp_path):
 
 
 def test_regexp_extract_all_matches(spark, tmp_path):
-    sf = _write_documents(
+    sf = write_documents(
         spark, tmp_path,
         [("seventy short lengthy ok worthwhile", "en", "s"), ("tiny", "en", "s")],
     )
@@ -176,13 +144,14 @@ def test_merge_upsert_semantics(spark, tmp_path):
     keeps the base balance (updated=0); no row appears twice."""
     import pyspark.sql.functions as F
 
-    sf = _write_events(
+    sf = write_events(
         spark, tmp_path,
         [(1, 0, 1, "purchase", 10.0), (2, 1, 1, "purchase", 2.5), (3, 0, 2, "view", 9.9)],
     )
-    spark.createDataFrame(
-        [(1, 100.0), (2, 55.0), (3, 7.0)], "c_custkey long, c_acctbal double"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/customer.parquet")
+    write_table(
+        spark, tmp_path, "customer", [(1, 100.0), (2, 55.0), (3, 7.0)],
+        "c_custkey long, c_acctbal double",
+    )
     out = SPECS["sink_merge_upsert"].fn(spark, str(tmp_path))
     rows = {r.user_id: r for r in out.collect()}
     assert out.count() == 3 and len(rows) == 3
@@ -207,7 +176,7 @@ def test_rolling_corr_perfect_and_constant(spark, tmp_path):
     and must yield NULL, not a 0/0 artifact."""
     rows = [(i, i, 1, "a", float(i)) for i in range(1, 12)]
     rows += [(100 + i, i, 2, "a", 5.0) for i in range(1, 12)]
-    sf = _write_events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = {r.event_id: r.corr_1e6 for r in SPECS["win_rolling_corr"].fn(spark, sf).collect()}
     assert out[11] == 1_000_000  # linear ⇒ corr = 1
     assert out[6] == 1_000_000  # exactly 5 pairs: first defined frame
@@ -222,8 +191,7 @@ def test_bipartite_projection_closed_form(spark, tmp_path):
     rows = []
     for p, s in [(10, 1), (10, 2), (10, 3), (11, 1), (11, 2)]:
         rows.append((1, p, s))
-    df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long, l_suppkey long")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
+    write_table(spark, tmp_path, "lineitem", rows, "l_orderkey long, l_partkey long, l_suppkey long")
     out = [(r.s1, r.s2, r.weight) for r in
            SPECS["graph_bipartite_projection"].fn(spark, str(tmp_path)).collect()]
     assert out == [(1, 2, 2)]

@@ -14,9 +14,8 @@ import math
 
 import numpy as np
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_documents, write_embeddings, write_events, write_table
 from gvcf_hbase_spark.registry import load_all
-from tests.test_round3c_ops import _write_documents, _write_events, _write_embeddings
 
 SPECS = load_all()
 
@@ -43,7 +42,7 @@ def test_bloom_no_false_negatives(spark):
 
 
 def test_toxicity_ratio_and_flag(spark, tmp_path):
-    sf = _write_documents(
+    sf = write_documents(
         spark, tmp_path,
         [
             ("slow slow fast", "en", "s"),       # 2/3 hits -> flagged
@@ -61,7 +60,7 @@ def test_toxicity_ratio_and_flag(spark, tmp_path):
 def test_readability_closed_form(spark, tmp_path):
     """'go on up': 3 words, 3 vowel groups, no terminator -> 1 sentence.
     flesch = 206.835 - 1.015*3 - 84.6*1."""
-    sf = _write_documents(spark, tmp_path, [("go on up", "en", "s")])
+    sf = write_documents(spark, tmp_path, [("go on up", "en", "s")])
     r = SPECS["text_readability"].fn(spark, sf).collect()[0]
     assert (r.n_words, r.n_sentences, r.n_syllables) == (3, 1, 3)
     assert r.flesch == round(206.835 - 1.015 * 3 - 84.6 * 1, 4)
@@ -69,7 +68,7 @@ def test_readability_closed_form(spark, tmp_path):
 
 def test_autocorr_alternating_series(spark, tmp_path):
     """x = +1,-1,... (n=8): mean 0, acf_k = ±(n-k)/n exactly."""
-    sf = _write_events(
+    sf = write_events(
         spark, tmp_path, [(i, i, 1, "a", 1.0 if i % 2 == 0 else -1.0) for i in range(8)]
     )
     r = SPECS["ts_autocorr"].fn(spark, sf).collect()[0]
@@ -115,7 +114,7 @@ def test_quality_score_lr_boundary(spark, tmp_path):
     """keep ⇔ margin z ≥ 0, recomputed independently in Python; an
     all-stopword doc scores below a diverse one."""
     docs = [("the the the the", "en", "s"), ("join hash scan merge filter", "en", "s")]
-    sf = _write_documents(spark, tmp_path, docs)
+    sf = write_documents(spark, tmp_path, docs)
     out = {r.doc_id: r for r in SPECS["curate_quality_score_lr"].fn(spark, sf).collect()}
     for i, (text, _, _) in enumerate(docs):
         toks = [t for t in text.lower().split(" ") if t]
@@ -129,21 +128,14 @@ def test_quality_score_lr_boundary(spark, tmp_path):
     assert out[1].score > out[0].score
 
 
-def _write_orders(spark, tmp_path, dates):
-    df = spark.createDataFrame(
-        [(i, datetime.datetime.combine(d, datetime.time())) for i, d in enumerate(dates)],
-        "o_orderkey long, o_orderdate timestamp_ntz",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    return str(tmp_path)
-
-
 def test_datetime_extra_clamping_and_iso(spark, tmp_path):
     """Jan 31 + 2 months clamps to Mar 31; Dec 31 + 2m = Feb 28 (1995
     non-leap); ISO dow is 1=Monday; week truncates to Monday."""
-    sf = _write_orders(
-        spark, tmp_path,
-        [datetime.date(1995, 1, 31), datetime.date(1994, 12, 31), datetime.date(1995, 1, 30)],
+    dates = [datetime.date(1995, 1, 31), datetime.date(1994, 12, 31), datetime.date(1995, 1, 30)]
+    sf = write_table(
+        spark, tmp_path, "orders",
+        [(i, datetime.datetime.combine(d, datetime.time())) for i, d in enumerate(dates)],
+        "o_orderkey long, o_orderdate timestamp_ntz",
     )
     out = {r.o_orderkey: r for r in SPECS["fn_datetime_extra"].fn(spark, sf).collect()}
     assert out[0].plus_2m == datetime.datetime(1995, 3, 31)
@@ -155,7 +147,7 @@ def test_datetime_extra_clamping_and_iso(spark, tmp_path):
 
 
 def test_attribution_last_touch_semantics(spark, tmp_path):
-    sf = _write_events(
+    sf = write_events(
         spark, tmp_path,
         [
             # u1: view@0 click@10 error@15 purchase@20 -> credited to click
@@ -198,7 +190,7 @@ def test_semantic_dedup_drops_within_cluster_only(spark, tmp_path):
     mix[2] = 0.4
     mix[40] = 1.0  # dominated by an off-centroid axis: cos(c2)=0.371 < tau
     vecs.append(mix)  # vec 10 -> cluster 2, survives
-    sf = _write_embeddings(spark, tmp_path, [list(v) for v in vecs], [0] * len(vecs))
+    sf = write_embeddings(spark, tmp_path, [list(v) for v in vecs], [0] * len(vecs))
     out = {r.vec_id: r.cluster for r in SPECS["dedup_semantic_centroid"].fn(spark, sf).collect()}
     assert set(out) == {0, 1, 2, 3, 4, 5, 6, 7, 10}
     assert out[10] == 2
@@ -214,7 +206,7 @@ def test_mips_ranks_by_magnitude_not_angle(spark, tmp_path):
     aligned_small = np.zeros(dim); aligned_small[0] = 0.5          # dot 0.5, cos 1.0
     off_big = np.zeros(dim); off_big[0] = 1.8; off_big[1] = 0.9    # dot 1.8, cos ~0.89
     far = np.zeros(dim); far[2] = 1.0                              # dot 0
-    sf = _write_embeddings(
+    sf = write_embeddings(
         spark, tmp_path, [list(q), list(aligned_small), list(off_big), list(far)], [0] * 4
     )
     rows = [r for r in SPECS["sim_mips_topk"].fn(spark, sf).collect() if r.vec_id == 0]
@@ -225,7 +217,7 @@ def test_mips_ranks_by_magnitude_not_angle(spark, tmp_path):
 
 def test_bpe_regex_closed_form(spark, tmp_path):
     """GPT-2 split of \"it's 123 ab-c\": it | 's | ' 123' | ' ab' | '-' | 'c'."""
-    sf = _write_documents(spark, tmp_path, [("it's 123 ab-c", "en", "s")])
+    sf = write_documents(spark, tmp_path, [("it's 123 ab-c", "en", "s")])
     r = SPECS["text_bpe_regex_tokens"].fn(spark, sf).collect()[0]
     assert r.n_bpe == 6
     assert r.n_ws == 3
@@ -235,7 +227,7 @@ def test_bpe_regex_closed_form(spark, tmp_path):
 def test_scene_cut_on_byte_jump(spark, tmp_path):
     """32 'A's then 32 'z's: frame sums 2080 vs 3904 -> |delta| 1824 > 300
     is a cut; a uniform payload has deltas 0 -> no cuts."""
-    sf = _write_documents(
+    sf = write_documents(
         spark, tmp_path, [("A" * 32 + "z" * 32, "en", "s"), ("b" * 96, "en", "s")]
     )
     rows = SPECS["multimodal_scene_cuts"].fn(spark, sf).collect()
@@ -285,7 +277,7 @@ def test_moving_slope_linear_series(spark, tmp_path):
     slopes 0."""
     rows = [(i, i, 1, "a", i / 100.0) for i in range(1, 11)]
     rows += [(100 + i, i, 2, "a", 7.0) for i in range(1, 8)]
-    sf = _write_events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = {r.event_id: r.slope_1e6 for r in SPECS["win_moving_slope"].fn(spark, sf).collect()}
     assert all(out[i] == 1_000_000 for i in range(5, 11))
     assert all(out[100 + i] == 0 for i in range(5, 8))
@@ -440,7 +432,7 @@ def test_snapshot_diff_classification(spark, tmp_path):
     """Midpoint cutoff T1 = 50s here. u1 appears after T1 -> I; u2
     changes value -> U; u3 deleted after T1 -> D; u4 unchanged and u5
     deleted-before-T1 are absent; u6 pins the min/max axis and is U."""
-    sf = _write_events(
+    sf = write_events(
         spark, tmp_path,
         [
             (10, 80, 1, "view", 1.0),
@@ -464,7 +456,7 @@ def test_association_lift_independence_identity(spark, tmp_path):
     n_ab=2, support=2/4, confidence(B|A... pair is unordered, anchored
     on type_a='a')=2/4, lift = 2*4/(4*2) = 1.0 exactly (B only occurs
     with A, A is universal -> independent-looking)."""
-    sf = _write_events(
+    sf = write_events(
         spark, tmp_path,
         [(1, 0, 1, "a", 0.0), (2, 1, 1, "b", 0.0),
          (3, 0, 2, "a", 0.0), (4, 1, 2, "b", 0.0),
@@ -492,7 +484,7 @@ def test_cross_correlation_peak_at_true_lag(spark, tmp_path):
     for h in range(1, 11):
         eid += 1
         rows.append((eid, 3600 * h, 2, "purchase", vals[h - 1]))
-    sf = _write_events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = {r.lag: r for r in SPECS["ts_cross_correlation"].fn(spark, sf).collect()}
     assert out[-1].xcorr_1e6 == 1_000_000
     for lag, r in out.items():
@@ -522,7 +514,7 @@ def test_weighted_sample_matches_python_reference(spark):
 
 
 def test_ks_disjoint_supports_give_d_one(spark, tmp_path):
-    sf = _write_events(
+    sf = write_events(
         spark, tmp_path,
         [(1, 0, 1, "view", 0.01), (2, 1, 1, "view", 0.02), (3, 2, 1, "view", 0.03),
          (4, 3, 2, "purchase", 0.10), (5, 4, 2, "purchase", 0.11), (6, 5, 2, "purchase", 0.12)],
@@ -536,7 +528,7 @@ def test_ks_disjoint_supports_give_d_one(spark, tmp_path):
 def test_ks_identical_samples_give_d_zero(spark, tmp_path):
     rows = [(i, i, 1, "view", float(i % 4)) for i in range(8)]
     rows += [(100 + i, i, 2, "purchase", float(i % 4)) for i in range(8)]
-    sf = _write_events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     r = SPECS["agg_ks_test"].fn(spark, sf).collect()[0]
     assert r.ks_d_1e6 == 0
 

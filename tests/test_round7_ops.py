@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from gvcf_hbase_spark.registry import load_all
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_events
 
 SPECS = load_all()
 
@@ -36,25 +36,16 @@ def test_ohlc_pick_invariants(spark):
     assert n_ticks == n_events
 
 
-def test_ohlc_open_close_are_time_ordered_picks(spark):
+def test_ohlc_open_close_are_time_ordered_picks(spark, tmp_path):
     """On a single-series crafted frame, open/close must be the first/last
     values in (ts, event_id) order — including under a duplicate
     timestamp, where event_id breaks the tie."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "event_id": [1, 2, 3, 4],
-            "ts": pd.to_datetime([10, 10, 20, 30], unit="s"),
-            "user_id": [1, 1, 1, 1],
-            "event_type": ["x", "x", "x", "x"],
-            "value": [5.0, 7.0, 1.0, 3.0],
-            "props": ["{}"] * 4,
-        }
+    sf = write_events(
+        spark,
+        tmp_path,
+        [(1, 10, 1, "x", 5.0), (2, 10, 1, "x", 7.0), (3, 20, 1, "x", 1.0), (4, 30, 1, "x", 3.0)],
     )
-    tmp = "/tmp/r7_ohlc_fixture"
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
-    row = SPECS["ts_ohlc_bars"].fn(spark, tmp).collect()[0]
+    row = SPECS["ts_ohlc_bars"].fn(spark, sf).collect()[0]
     # all four points land in one hour bucket: open = value at the
     # duplicate-ts row with the SMALLER event_id (500 cents), close = 300
     assert row.open_cents == 500 and row.close_cents == 300

@@ -6,29 +6,12 @@ runs them."""
 
 from __future__ import annotations
 
-import datetime
-
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_events
 from gvcf_hbase_spark.registry import load_all
 
 SPECS = load_all()
 
 _DAY = 86_400  # seconds
-
-
-def _write_events_props(spark, tmp_path, rows):
-    """rows: (event_id, t_seconds, user_id, event_type, value, props)."""
-    base = datetime.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [
-            (eid, base + datetime.timedelta(seconds=s), uid, et, val, props)
-            for eid, s, uid, et, val, props in rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    return str(tmp_path)
 
 
 def test_chi_square_balanced_table_is_zero(spark, tmp_path):
@@ -41,7 +24,7 @@ def test_chi_square_balanced_table_is_zero(spark, tmp_path):
             for _ in range(5):
                 rows.append((i, i, i, et, 1.0, f'{{"k": {k}}}'))
                 i += 1
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     r = SPECS["analytics_chi_square"].fn(spark, sf).collect()[0]
     assert (r.n, r.n_types, r.n_grps, r.dof) == (20, 2, 2, 1)
     assert r.chi2_1e6 == 0
@@ -52,7 +35,7 @@ def test_chi_square_perfect_association_equals_n(spark, tmp_path):
     phi == 1, so chi2 == n (the zero cells contribute their full E)."""
     rows = [(i, i, i, "a", 1.0, '{"k": 0}') for i in range(10)]
     rows += [(10 + i, 10 + i, 10 + i, "b", 1.0, '{"k": 1}') for i in range(10)]
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     r = SPECS["analytics_chi_square"].fn(spark, sf).collect()[0]
     assert r.dof == 1
     assert r.chi2_1e6 == 20_000_000  # chi2 == n == 20
@@ -67,7 +50,7 @@ def test_mann_whitney_identical_samples(spark, tmp_path):
         for v in (1.0, 2.0, 3.0):
             rows.append((i, i, i, et, v, "{}"))
             i += 1
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     r = SPECS["analytics_mann_whitney"].fn(spark, sf).collect()[0]
     assert (r.n1, r.n2) == (3, 3)
     assert r.u_doubled == 9  # == n1 * n2
@@ -79,7 +62,7 @@ def test_mann_whitney_total_separation(spark, tmp_path):
     2*n1*n2), no ties, z > 0."""
     rows = [(i, i, i, "view", float(i), "{}") for i in range(4)]
     rows += [(4 + i, 4 + i, 4 + i, "click", 100.0 + i, "{}") for i in range(4)]
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     r = SPECS["analytics_mann_whitney"].fn(spark, sf).collect()[0]
     assert r.u_doubled == 2 * 4 * 4
     assert r.tie_term == 0
@@ -91,7 +74,7 @@ def test_anova_known_f_and_degenerate_guard(spark, tmp_path):
     SSB = 40000 cents^2, SSW = 40000, F = (40000/1)/(40000/2) = 2."""
     rows = [(0, 0, 0, "a", 0.0, "{}"), (1, 1, 1, "a", 2.0, "{}"),
             (2, 2, 2, "b", 2.0, "{}"), (3, 3, 3, "b", 4.0, "{}")]
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     r = SPECS["analytics_anova"].fn(spark, sf).collect()[0]
     assert (r.n_groups, r.n) == (2, 4)
     assert r.ss_between_1e3 == 40_000_000
@@ -101,7 +84,7 @@ def test_anova_known_f_and_degenerate_guard(spark, tmp_path):
     # all-constant input: zero within-variance must yield NULL F, not a
     # divide-by-zero abort (the anomaly_mad ANSI lesson)
     rows = [(i, i, i, "a" if i < 2 else "b", 5.0, "{}") for i in range(4)]
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     r = SPECS["analytics_anova"].fn(spark, sf).collect()[0]
     assert r.ss_within_1e3 == 0
     assert r.f_stat_1e4 is None
@@ -117,7 +100,7 @@ def test_kaplan_meier_textbook_curve(spark, tmp_path):
         (4, 0, 3, "view", 1.0, "{}"), (5, 2 * _DAY, 3, "purchase", 1.0, "{}"),
         (6, 0, 4, "view", 1.0, "{}"), (7, 3 * _DAY, 4, "view", 1.0, "{}"),
     ]
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = {r.duration_days: r for r in SPECS["analytics_survival_km"].fn(spark, sf).collect()}
     assert set(out) == {1, 2}
     assert (out[1].n_risk, out[1].n_events, out[1].n_censored) == (4, 1, 1)
@@ -137,7 +120,7 @@ def test_funnel_window_expires_stale_steps(spark, tmp_path):
         (5, 0, 3, "view", 1.0, "{}"), (6, _DAY, 3, "click", 1.0, "{}"),
         (7, 2 * _DAY, 3, "purchase", 1.0, "{}"),
     ]
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     stages = {r.user_id: r.funnel_stage
               for r in SPECS["funnel_time_window"].fn(spark, sf).collect()}
     assert stages == {1: 2, 2: 1, 3: 3}
@@ -162,7 +145,7 @@ def test_cohort_ltv_accumulates_per_capita(spark, tmp_path):
         (1, 3600, 2, "view", 2.0, "{}"),
         (2, 7 * _DAY, 1, "view", 3.0, "{}"),
     ]
-    sf = _write_events_props(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = sorted(SPECS["analytics_cohort_ltv"].fn(spark, sf).collect(),
                  key=lambda r: r.age_weeks)
     assert [r.age_weeks for r in out] == [0, 1]

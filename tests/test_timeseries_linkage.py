@@ -13,36 +13,12 @@ import hashlib
 
 import pyspark.sql.functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, DOCUMENTS, write_events, write_table
 from gvcf_hbase_spark.registry import load_all
 
 SPECS = load_all()
 
 _US_PER_HOUR = 3_600_000_000
-
-
-def _write_events(spark, tmp_path, rows):
-    """rows: (event_id, seconds_offset, user_id, event_type, value)."""
-    base = datetime.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [
-            (eid, base + datetime.timedelta(seconds=s), uid, et, val, "{}")
-            for eid, s, uid, et, val in rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    return str(tmp_path)
-
-
-def _write_documents(spark, tmp_path, rows):
-    """rows: (doc_id, text)."""
-    df = spark.createDataFrame(
-        [(i, t, "en", "unit", len(t)) for i, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    return str(tmp_path)
 
 
 # ---------------------------------------------------------------- timeseries
@@ -52,7 +28,7 @@ def test_resample_linear_interpolation_exact(spark, tmp_path):
     """Observed hour-buckets 0→1.0 and 3→4.0 must interpolate hours 1,2
     to exactly 2.0, 3.0; a leading/trailing gap carries the one-sided
     neighbor; observed buckets average their events and flag 0."""
-    sf = _write_events(
+    sf = write_events(
         spark,
         tmp_path,
         [
@@ -80,7 +56,7 @@ def test_zscore_flags_constructed_outlier(spark, tmp_path):
     """19 values at ~10 plus one at 100: only the spike exceeds 2.5σ."""
     rows = [(i, i, 1, "a", 10.0 + (i % 3) * 0.1) for i in range(19)]
     rows.append((99, 99, 1, "a", 100.0))
-    sf = _write_events(spark, tmp_path, rows)
+    sf = write_events(spark, tmp_path, rows)
     out = SPECS["anomaly_zscore"].fn(spark, sf).collect()
     assert [r.event_id for r in out] == [99]
     assert out[0].z > 2.5
@@ -89,7 +65,7 @@ def test_zscore_flags_constructed_outlier(spark, tmp_path):
 def test_running_distinct_orders_by_event_time(spark, tmp_path):
     """Types a,b,a,c in time order → running distinct 1,2,2,3; second
     user independent."""
-    sf = _write_events(
+    sf = write_events(
         spark,
         tmp_path,
         [
@@ -160,10 +136,9 @@ def test_chunk_boundaries_and_payload_hash(spark, tmp_path):
     tokens → one chunk; 65 → two (second holds 17). Chunk md5 must equal
     the hash of the exact token slice."""
     toks = [f"t{i}" for i in range(100)]
-    sf = _write_documents(
-        spark,
-        tmp_path,
-        [(1, " ".join(toks)), (2, " ".join(toks[:64])), (3, " ".join(toks[:65]))],
+    docs = [(1, " ".join(toks)), (2, " ".join(toks[:64])), (3, " ".join(toks[:65]))]
+    sf = write_table(
+        spark, tmp_path, "documents", [(i, t, "en", "unit", len(t)) for i, t in docs], DOCUMENTS
     )
     out = {
         (r.doc_id, r.chunk_idx): r
@@ -182,7 +157,10 @@ def test_chunk_boundaries_and_payload_hash(spark, tmp_path):
 def test_bigram_counts_known_corpus(spark, tmp_path):
     """'a b a b' + 'b c' → bigrams: 'a b'×2, 'b a'×1, 'b c'×1; a
     1-token doc contributes nothing."""
-    sf = _write_documents(spark, tmp_path, [(1, "a b a b"), (2, "b c"), (3, "x")])
+    docs = [(1, "a b a b"), (2, "b c"), (3, "x")]
+    sf = write_table(
+        spark, tmp_path, "documents", [(i, t, "en", "unit", len(t)) for i, t in docs], DOCUMENTS
+    )
     out = {r.bigram: r.n for r in SPECS["text_ngram_counts"].fn(spark, sf).collect()}
     assert out == {"a b": 2, "b a": 1, "b c": 1}
 
@@ -214,38 +192,31 @@ def test_corr_matrix_bounds(spark):
 # ------------------------------------------------- interval merge / source
 
 
-def _write_lineitem(spark, tmp_path, rows):
-    """rows: (suppkey, shipdate_str, quantity). The other lineitem
-    columns are filled with constants (win_interval_merge reads only
-    these three)."""
-    df = spark.createDataFrame(
-        [
-            (1, 1, sk, 1, float(q), 1.0, 0.0, 0.0, "N", "O", datetime.datetime.fromisoformat(d))
-            for sk, d, q in rows
-        ],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber long, "
-        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
-        "l_returnflag string, l_linestatus string, l_shipdate timestamp",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
-    return str(tmp_path)
-
-
 def test_interval_merge_handles_nested_intervals(spark, tmp_path):
     """The running-max formulation must merge a short interval nested
     inside an earlier long one (plain lag(e) would split it): intervals
     [Jan1,Jan11], [Jan3,Jan4] (nested), [Jan5,Jan13] chain into one
     island; [Feb1,Feb6] stands alone. Covered = 12 + 5."""
-    sf = _write_lineitem(
+    # (suppkey, shipdate, quantity); win_interval_merge reads only these
+    # three, the other lineitem columns are constants
+    ships = [
+        (1, "2024-01-01", 10),
+        (1, "2024-01-03", 1),
+        (1, "2024-01-05", 8),
+        (1, "2024-02-01", 5),
+        (2, "2024-01-01", 1),
+    ]
+    sf = write_table(
         spark,
         tmp_path,
+        "lineitem",
         [
-            (1, "2024-01-01", 10),
-            (1, "2024-01-03", 1),
-            (1, "2024-01-05", 8),
-            (1, "2024-02-01", 5),
-            (2, "2024-01-01", 1),
+            (1, 1, sk, 1, float(q), 1.0, 0.0, 0.0, "N", "O", datetime.datetime.fromisoformat(d))
+            for sk, d, q in ships
         ],
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber long, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string, l_shipdate timestamp",
     )
     out = {r.l_suppkey: r for r in SPECS["win_interval_merge"].fn(spark, sf).collect()}
     assert out[1].n_merged == 2 and out[1].covered_days == 17
@@ -255,7 +226,7 @@ def test_interval_merge_handles_nested_intervals(spark, tmp_path):
 def test_event_transitions_probabilities(spark, tmp_path):
     """a→b, b→a, a→b for one user: P(b|a)=1, P(a|b)=1; counts exact;
     first event contributes no transition."""
-    sf = _write_events(
+    sf = write_events(
         spark,
         tmp_path,
         [
